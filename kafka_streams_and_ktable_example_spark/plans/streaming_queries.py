@@ -320,8 +320,9 @@ FROM latest GROUP BY o_custkey
     doc="TRUE incremental view maintenance (the adder/subtractor of "
     "kafka_streams.clj:72-79 for sum/count aggregates): per micro-batch, "
     "each changed key's old contribution is subtracted and its new one "
-    "added — O(changed keys) per batch, the view snapshot is never "
-    "rescanned, zero-count groups vanish (nil-deletes-row). Final state "
+    "added — the view is never recomputed (each batch still rewrites "
+    "the state tables in full), zero-count groups vanish "
+    "(nil-deletes-row). Final state "
     "equals the batch recompute, proving snapshot-recompute ≡ "
     "incremental maintenance (SURVEY §4.3) in the other direction.",
     tags=("streaming", "ktable", "stateful", "parity"),
@@ -652,7 +653,8 @@ FROM hist WHERE NOT tombstone
     "(aggregate: streaming_orders_rollup_ivm, join: "
     "streaming_join_view_ivm, now dimension history). At warehouse "
     "scale this is the CDC-merge that maintains every SCD2 dimension: "
-    "per batch O(|batch| + |open rows of changed keys|).",
+    "per batch only the batch and the open rows of changed keys are "
+    "windowed (the parquet table is still rewritten in full).",
     tags=("streaming", "ktable", "stateful", "scd2", "parity"),
 )
 def streaming_scd2_incremental(spark, sf_dir):
@@ -741,8 +743,9 @@ GROUP BY client
     doc="The reference's set-valued view maintained INCREMENTALLY as "
     "sorted arrays (streaming/pipeline.py::SetIvmJob): per micro-batch "
     "each changed key's old visible position is array_except'ed out and "
-    "its new one array_union'ed in — O(changed keys) per batch, no "
-    "collect_set recompute of the snapshot, empty array deletes the row. "
+    "its new one array_union'ed in — no collect_set recompute of the "
+    "snapshot (each batch still rewrites the state tables in full), "
+    "empty array deletes the row. "
     "This is SURVEY §7.4 hard-part #4's '100 TB representation' "
     "(sorted arrays + set algebra instead of per-group re-collection) "
     "actually wired: final state must equal the batch-recomputed "

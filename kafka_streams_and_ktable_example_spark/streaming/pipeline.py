@@ -20,10 +20,15 @@ trace (micro-batching legitimately conflates intra-batch updates; the
 reference's cache=0 per-record emission is not promised).
 
 Scale/production shape: the compaction merge is one hash aggregation keyed
-by `key` per micro-batch; state lives in a parquet snapshot directory
-(stand-in for Delta MERGE on a cluster). Restart safety: checkpointed source
-offsets + idempotent whole-snapshot rewrite (the merge is a pure function of
-old-state ∪ batch, so replaying a batch converges to the same state).
+by `key` per micro-batch; state lives in parquet tables (stand-ins for Delta
+MERGE on a cluster), and every batch rewrites each state table in full.
+Restart safety: every job commits through ``IvmJob``. An epoch's tables land
+in fresh ``<work_dir>/<table>/<version>/`` directories, one manifest naming
+that version is published last with ``os.replace``, and only then are older
+versions deleted — a crash at any point leaves a manifest naming complete
+tables. The checkpointed file source replays an unfinished batch id with the
+same files, so a batch whose (query id, epoch) the manifest already holds is
+skipped, and any other batch is applied.
 
 Kafka wiring: swap the parquet file source for
 ``spark.readStream.format("kafka").option("subscribe", topic)`` and
@@ -35,15 +40,18 @@ option("startingOffsets", "earliest")). Not exercised in this container
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.ktable import grouped_reduce_view
+from ..session import scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
 
 
@@ -70,57 +78,148 @@ _SMALL_SHUFFLE_KEYS = (
 )
 
 
-def _pin_small_shuffle(spark: SparkSession, n: str = "8") -> dict:
-    """Pin per-batch shuffle fan-out (and AQE's initial fan-out) to ``n``
-    for an IVM replay; returns the previous values for _restore_shuffle."""
-    prev = {}
+@contextlib.contextmanager
+def small_shuffle(spark: SparkSession):
+    """Pin per-batch shuffle fan-out (and AQE's initial fan-out) to 8 for a
+    replay; the previous values come back on exit."""
+    prev = {k: spark.conf.get(k, None) for k in _SMALL_SHUFFLE_KEYS}
     for k in _SMALL_SHUFFLE_KEYS:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, n)
-    return prev
+        spark.conf.set(k, "8")
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def _restore_shuffle(spark: SparkSession, prev: dict) -> None:
-    for k, v in prev.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
+class IvmJob:
+    """Base of the foreachBatch jobs: parquet state tables under
+    ``work_dir``, committed once per (query id, epoch).
 
-
-class ChangelogStreamJob:
-    """foreachBatch maintainer of a compacted snapshot + materialized view.
-
-    State: parquet dir holding the compacted changelog (key, value, offset).
-    Each micro-batch: state ← compact(state ∪ batch), atomically swapped.
+    A subclass implements ``update(batch_df) -> {table: DataFrame}`` over
+    the tables it ``read``s. ``process_batch`` commits the result: each
+    table goes to a fresh ``<work_dir>/<table>/<version>/`` directory,
+    then ``_manifest.json`` (version, commit key, each table's schema) is
+    published with ``os.replace``, then older versions are deleted. A crash
+    at any step leaves a manifest naming complete tables. A batch whose
+    commit key the manifest already holds is skipped: Spark replays an
+    unfinished batch id with the same files. The key's query id is the
+    stream's (stable across restarts on one checkpoint) and None for a
+    direct call, so a fresh stream's epoch 0 still applies after a direct
+    epoch-0 call.
     """
 
-    def __init__(self, spark: SparkSession, state_dir: str):
+    def __init__(self, spark: SparkSession, work_dir: str):
         self.spark = spark
-        self.state_dir = state_dir
-        self._has_state = os.path.exists(os.path.join(state_dir, "_SUCCESS"))
+        self.work_dir = work_dir
+        self._manifest_path = os.path.join(work_dir, "_manifest.json")
+        self._cached: list[DataFrame] = []
+        try:
+            with open(self._manifest_path) as f:
+                self.manifest = json.load(f)
+        except FileNotFoundError:
+            self.manifest = {"version": 0, "commit": None, "schemas": {}}
 
-    def read_state(self) -> DataFrame:
-        if not self._has_state:
-            return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
-        return self.spark.read.parquet(self.state_dir)
+    def _dir(self, table: str, version: int) -> str:
+        return os.path.join(self.work_dir, table, str(version))
+
+    def read(self, table: str, schema) -> DataFrame:
+        """The committed ``table``, read with the schema recorded at commit
+        (no schema-inference job); an empty ``schema`` frame before then."""
+        recorded = self.manifest["schemas"].get(table)
+        if recorded is None:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(StructType.fromJson(recorded)).parquet(
+            self._dir(table, self.manifest["version"])
+        )
+
+    def _persist(self, df: DataFrame) -> DataFrame:
+        """Cache ``df`` for this batch; released once the batch commits."""
+        self._cached.append(df.persist())
+        return df
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        merged = compact(self.read_state().unionByName(batch_df))
-        tmp = self.state_dir + f".tmp-{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.state_dir):
-            shutil.rmtree(self.state_dir)
-        os.rename(tmp, self.state_dir)
-        self._has_state = True
+        commit = [
+            self.spark.sparkContext.getLocalProperty("sql.streaming.queryId"),
+            epoch_id,
+        ]
+        if commit == self.manifest["commit"]:
+            return
+        version = self.manifest["version"] + 1
+        try:
+            tables = self.update(batch_df)
+            for name, df in tables.items():
+                df.write.mode("overwrite").parquet(self._dir(name, version))
+            manifest = {
+                "version": version,
+                "commit": commit,
+                "schemas": {n: df.schema.jsonValue() for n, df in tables.items()},
+            }
+            with open(self._manifest_path + ".tmp", "w") as f:
+                json.dump(manifest, f)
+            os.replace(self._manifest_path + ".tmp", self._manifest_path)
+            self.manifest = manifest
+        finally:
+            while self._cached:
+                self._cached.pop().unpersist()
+        for name in tables:
+            for old in os.listdir(os.path.join(self.work_dir, name)):
+                if old != str(version):
+                    shutil.rmtree(self._dir(name, old), ignore_errors=True)
+
+
+def replay(
+    spark: SparkSession,
+    chunk_dir: str,
+    schema,
+    process,
+    work_dir: str,
+    max_files_per_trigger: int = 1,
+) -> None:
+    """readStream → foreachBatch(process) → availableNow over a directory
+    of chunk files, ``max_files_per_trigger`` files per micro-batch, at the
+    small per-batch shuffle width; the checkpoint lives in ``work_dir``."""
+    with small_shuffle(spark):
+        (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(chunk_dir)
+            .writeStream.foreachBatch(process)
+            .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+
+def replay_changelog(
+    spark: SparkSession, job_cls, changelog: DataFrame, n_chunks: int, name: str
+) -> IvmJob:
+    """Replay ``changelog`` through a new ``job_cls`` as ``n_chunks``
+    offset-ordered micro-batches, chunk and state dirs from
+    ``session.scratch_dir``; returns the job holding the final state."""
+    chunk_dir = scratch_dir(f"{name}_chunks_")
+    write_changelog_chunks(changelog, chunk_dir, n_chunks=n_chunks)
+    job = job_cls(spark, scratch_dir(f"{name}_state_"))
+    replay(spark, chunk_dir, changelog.schema, job.process_batch, job.work_dir)
+    return job
+
+
+class ChangelogStreamJob(IvmJob):
+    """foreachBatch maintainer of a compacted snapshot + materialized view:
+    each micro-batch, state ← compact(state ∪ batch)."""
+
+    def update(self, batch_df: DataFrame) -> dict:
+        state = self.read("state", CHANGELOG_SCHEMA)
+        return {"state": compact(state.unionByName(batch_df))}
 
     def snapshot(self) -> DataFrame:
         """Live rows of the maintained state (tombstones dropped), value
         fields flattened — the O1 table."""
-        st = self.read_state().where(F.col("value").isNotNull())
+        st = self.read("state", CHANGELOG_SCHEMA).where(F.col("value").isNotNull())
         return st.select("key", "offset", "value.*")
 
 
@@ -137,24 +236,15 @@ def run_shareholders_stream(
     Mirrors create-kafka-stream-topology + start (kafka_streams.clj:60-96):
     build is lazy, .start() executes, the view is queryable afterwards.
     """
-    work_dir = work_dir or tempfile.mkdtemp(prefix="ktable_stream_")
-    state_dir = os.path.join(work_dir, "state")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-    job = ChangelogStreamJob(spark, state_dir)
-
-    stream = (
-        spark.readStream.schema(CHANGELOG_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changelog_dir)
+    job = ChangelogStreamJob(spark, work_dir or scratch_dir("ktable_stream_"))
+    replay(
+        spark,
+        changelog_dir,
+        CHANGELOG_SCHEMA,
+        job.process_batch,
+        job.work_dir,
+        max_files_per_trigger,
     )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
     return grouped_reduce_view(
         job.snapshot(),
         predicate=F.col("exchange") == "NASDAQ",
@@ -210,7 +300,9 @@ def write_changelog_chunks(
 ) -> str:
     """Split a changelog into offset-ordered chunk files so the file stream
     replays it as n_chunks micro-batches (earlier offsets first, like a
-    Kafka topic replay)."""
+    Kafka topic replay). The file source replays in (mtime, path) order and
+    the parallel write tasks finish in any order, so each file's mtime is
+    pinned in chunk order."""
     os.makedirs(out_dir, exist_ok=True)
     bounds = changelog.agg(
         F.min("offset").alias("lo"), F.max("offset").alias("hi")
@@ -232,15 +324,17 @@ def write_changelog_chunks(
         .partitionBy("chunk")
         .parquet(staging)
     )
+    n_files = 0
     for i in range(n_chunks):
         d = os.path.join(staging, f"chunk={i}")
         if not os.path.isdir(d):
             continue
         for j, f in enumerate(sorted(os.listdir(d))):
             if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(d, f), os.path.join(out_dir, f"{i:03d}-{j}.parquet")
-                )
+                dst = os.path.join(out_dir, f"{i:03d}-{j}.parquet")
+                os.rename(os.path.join(d, f), dst)
+                os.utime(dst, (1_600_000_000 + n_files,) * 2)
+                n_files += 1
     shutil.rmtree(staging)
     return out_dir
 
@@ -262,7 +356,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
         # below would bury the part files one level deep, where the file
         # stream's directory listing never finds them (zero batches).
         return norm(spark.readStream.schema(schema).parquet(path))
-    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
+    stream_dir = scratch_dir("events_stream_")
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):
         os.symlink(path, link)
@@ -359,6 +453,7 @@ def run_events_session_stream(
     # already handles staleness; the app id keeps concurrent sessions
     # apart, leaving at most one dir per (session, args) ever on disk.
     import hashlib
+    import tempfile
 
     arg_key = hashlib.md5(
         f"{sf_dir}|{gap}|{watermark}".encode()
@@ -504,51 +599,33 @@ def run_stream_stream_left_outer(
     return spark.table(name)
 
 
-class AggIvmJob:
+class AggIvmJob(IvmJob):
     """TRUE incremental view maintenance of a grouped aggregate — the
     literal adder/subtractor of `kafka_streams.clj:72-79`, applied to
     sum/count aggregates instead of sets, with NO per-batch recompute of
     the view.
 
-    Two state tables (parquet dirs, stand-ins for Delta at cluster scale):
+    Two state tables:
 
-    - compacted changelog: latest record per key (tombstones retained) —
+    - ``compact_state``: latest record per key (tombstones retained) —
       consulted only to learn each changed key's PREVIOUS contribution;
-    - aggregate state: (group, n_rows, total) — updated by folding in
+    - ``agg_state``: (group, n_rows, total) — updated by folding in
       per-batch deltas: ``-old_contribution`` (subtractor) and
       ``+new_contribution`` (adder) per changed key. A group whose count
       reaches zero is dropped — the subtractor's nil-deletes-row rule.
 
-    Work per batch is O(|changed keys|) + one groupBy on the (small)
-    delta set, NOT O(|snapshot|): at 100 TB the view never gets rescanned,
-    which is the whole point of incremental maintenance. Re-keying (a
-    key's group column changing) is handled naturally: the subtract lands
-    on the old group, the add on the new one.
+    The deltas come from the changed keys alone, but every batch still
+    rewrites both tables in full (parquet has no keyed in-place update; a
+    keyed Delta MERGE on a cluster would rewrite only the touched files).
+    Re-keying (a key's group column changing) is handled naturally: the
+    subtract lands on the old group, the add on the new one.
     """
 
-    def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.state_dir = os.path.join(work_dir, "compact_state")
-        self.agg_dir = os.path.join(work_dir, "agg_state")
-        self._schema = None
+    AGG_SCHEMA = "o_custkey long, n_orders long, total_price double"
 
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._schema = batch_df.schema
-        agg_schema = "o_custkey long, n_orders long, total_price double"
-        state = self._read(self.state_dir, self._schema)
-        agg = self._read(self.agg_dir, agg_schema)
+    def update(self, batch_df: DataFrame) -> dict:
+        state = self.read("compact_state", batch_df.schema)
+        agg = self.read("agg_state", self.AGG_SCHEMA)
 
         batch_keys = batch_df.select("key").distinct()
         # subtractor: the previous live contribution of every changed key
@@ -583,14 +660,10 @@ class AggIvmJob:
             )
             .where(F.col("n_orders") > 0)  # nil-deletes-row
         )
-        # materialize agg BEFORE swapping the compact state it was built
-        # from (both reads are lazy over the old parquet)
-        self._write(new_agg, self.agg_dir, epoch_id)
-        self._write(merged, self.state_dir, epoch_id)
+        return {"agg_state": new_agg, "compact_state": merged}
 
     def view(self) -> DataFrame:
-        agg_schema = "o_custkey long, n_orders long, total_price double"
-        return self._read(self.agg_dir, agg_schema)
+        return self.read("agg_state", self.AGG_SCHEMA)
 
 
 def run_orders_rollup_ivm(
@@ -604,29 +677,7 @@ def run_orders_rollup_ivm(
     from ..sources.changelog import orders_changelog
 
     cl = orders_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="orders_ivm_chunks_")
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="orders_ivm_state_")
-    job = AggIvmJob(spark, work_dir)
-
-    # per-batch deltas are tiny; clamp the shuffle fan-out for the replay
-    # (same rationale as run_join_view_ivm), restored after the run
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = replay_changelog(spark, AggIvmJob, cl, n_chunks, "orders_ivm")
     return job.view().select(
         "o_custkey",
         "n_orders",
@@ -634,7 +685,7 @@ def run_orders_rollup_ivm(
     )
 
 
-class JoinIvmJob:
+class JoinIvmJob(IvmJob):
     """TRUE incremental maintenance of a two-table JOIN view (delta-join)
     over a multiplexed CDC stream — the KTable-KTable join maintained the
     way Kafka Streams maintains it (per-record state lookups on the other
@@ -643,15 +694,13 @@ class JoinIvmJob:
         Δ(A ⋈ B) = ΔA ⋈ B_new  ∪  (A_new ∖ ΔA-keys) ⋈ ΔB
 
     Per batch, the stored view loses every row touching a changed key on
-    either side and gains the two delta-join terms. Work is
-    O(|ΔA| ⋈ B) + O(A ⋈_semi ΔB) — at no point is A ⋈ B recomputed.
-
-    Three parquet state tables (Delta stand-ins): compacted A (orders),
-    compacted B (customer), and the materialized join view. On a cluster,
-    A-state is partitioned by the join key (o_custkey) so the
-    (A ∖ ΔA) ⋈ ΔB probe is a co-partitioned lookup, and the view is
-    partitioned by the same key so the retract step prunes partitions —
-    the parquet swap here stands in for a keyed Delta MERGE.
+    either side and gains the two delta-join terms, so A ⋈ B is never
+    recomputed; each of the three state tables (compacted A = orders,
+    compacted B = customer, the join view) is still rewritten in full.
+    On a cluster, A-state is partitioned by the join key (o_custkey) so
+    the (A ∖ ΔA) ⋈ ΔB probe is a co-partitioned lookup, and the view is
+    partitioned by the same key so a keyed Delta MERGE of the retract
+    step prunes partitions.
     """
 
     A_SCHEMA = "key long, o_custkey long, o_totalprice double, tombstone boolean, offset long"
@@ -659,24 +708,6 @@ class JoinIvmJob:
     VIEW_SCHEMA = (
         "o_orderkey long, o_custkey long, o_totalprice double, c_mktsegment string"
     )
-
-    def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.a_dir = os.path.join(work_dir, "a_state")
-        self.b_dir = os.path.join(work_dir, "b_state")
-        self.view_dir = os.path.join(work_dir, "view_state")
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
 
     @staticmethod
     def _compact_flat(df: DataFrame, payload_cols: list) -> DataFrame:
@@ -688,16 +719,16 @@ class JoinIvmJob:
             .select("key", "p.*", "offset")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def update(self, batch_df: DataFrame) -> dict:
         # sever the streaming lineage: a streaming-sourced plan disables AQE
         # for every derived job, so the tiny per-batch deltas would shuffle
         # at the full static partition count. localCheckpoint materializes
         # the delta as a batch RDD — everything downstream gets AQE's
         # partition coalescing (observed 10x on the 8-batch replay).
         batch_df = batch_df.localCheckpoint(eager=True)
-        a_state = self._read(self.a_dir, self.A_SCHEMA)
-        b_state = self._read(self.b_dir, self.B_SCHEMA)
-        view = self._read(self.view_dir, self.VIEW_SCHEMA)
+        a_state = self.read("a_state", self.A_SCHEMA)
+        b_state = self.read("b_state", self.B_SCHEMA)
+        view = self.read("view_state", self.VIEW_SCHEMA)
 
         da = batch_df.where(F.col("src") == "o").select(
             "key", "o_custkey", "o_totalprice", "tombstone", "offset"
@@ -708,10 +739,12 @@ class JoinIvmJob:
         # persist the compacted states: each feeds its own state write AND
         # the delta-join terms AND the view write — without the cache the
         # triple write re-runs the compaction lineage three times per batch
-        a_new = self._compact_flat(
-            a_state.unionByName(da), ["o_custkey", "o_totalprice"]
-        ).persist()
-        b_new = self._compact_flat(b_state.unionByName(db), ["c_mktsegment"]).persist()
+        a_new = self._persist(
+            self._compact_flat(a_state.unionByName(da), ["o_custkey", "o_totalprice"])
+        )
+        b_new = self._persist(
+            self._compact_flat(b_state.unionByName(db), ["c_mktsegment"])
+        )
 
         a_keys = da.select("key").distinct()
         b_keys = db.select("key").distinct()
@@ -758,16 +791,10 @@ class JoinIvmJob:
             .unionByName(add_b)
             .coalesce(8)
         )
-
-        # materialize the view BEFORE swapping the states it reads from
-        self._write(new_view, self.view_dir, epoch_id)
-        self._write(a_new, self.a_dir, epoch_id)
-        self._write(b_new, self.b_dir, epoch_id)
-        a_new.unpersist()
-        b_new.unpersist()
+        return {"view_state": new_view, "a_state": a_new, "b_state": b_new}
 
     def view_df(self) -> DataFrame:
-        return self._read(self.view_dir, self.VIEW_SCHEMA)
+        return self.read("view_state", self.VIEW_SCHEMA)
 
 
 def run_join_view_ivm(
@@ -781,30 +808,7 @@ def run_join_view_ivm(
     from ..sources.changelog import multiplexed_join_changelog
 
     cl = multiplexed_join_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="join_ivm_chunks_")
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    # per-batch deltas are tiny relative to the session default; a low
-    # shuffle fan-out keeps the 8-batch replay's task count (and thus
-    # scheduler overhead) proportional to the data. Restored after the run.
-    prev_parts = _pin_small_shuffle(spark)
-    work_dir = tempfile.mkdtemp(prefix="join_ivm_state_")
-    job = JoinIvmJob(spark, work_dir)
-
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = replay_changelog(spark, JoinIvmJob, cl, n_chunks, "join_ivm")
     return job.view_df().select(
         "o_orderkey",
         "o_custkey",
@@ -813,7 +817,7 @@ def run_join_view_ivm(
     )
 
 
-class StreamingLshDedupJob:
+class StreamingLshDedupJob(IvmJob):
     """Incremental corpus dedup: each arriving micro-batch of documents is
     checked against the accumulated LSH band index and only novel docs
     survive — the streaming shape of MinHash-LSH dedup, where a 100 TB
@@ -834,8 +838,8 @@ class StreamingLshDedupJob:
     deletes apply against prior state first, then the batch's upserts
     are processed — two anti-joins on doc_id, no extra shuffle shape.
 
-    State: band index (doc_id, band_idx, band_hash) and the kept-doc set —
-    both parquet (Delta stand-ins). Per batch the work is
+    State: band index (doc_id, band_idx, band_hash) and the kept-doc set,
+    both rewritten in full per batch. The probe is
     |batch bands| ⋈ index on (band_idx, band_hash) — an equi-join on the
     blocking key, never a doc-pair product; at scale the index is
     partitioned by band_hash so the probe is co-located.
@@ -844,29 +848,12 @@ class StreamingLshDedupJob:
     IDX_SCHEMA = "doc_id long, band_idx int, band_hash string"
     KEPT_SCHEMA = "doc_id long, lang string"
 
-    def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.idx_dir = os.path.join(work_dir, "band_index")
-        self.kept_dir = os.path.join(work_dir, "kept")
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def update(self, batch_df: DataFrame) -> dict:
         from ..operators.dedup import lsh_bands, minhash_signatures
 
         batch_df = batch_df.localCheckpoint(eager=True)
-        idx = self._read(self.idx_dir, self.IDX_SCHEMA)
-        kept = self._read(self.kept_dir, self.KEPT_SCHEMA)
+        idx = self.read("band_index", self.IDX_SCHEMA)
+        kept = self.read("kept", self.KEPT_SCHEMA)
 
         # tombstones first: retract deleted docs' bands + kept rows so they
         # stop matching future candidates and a re-add starts fresh
@@ -875,7 +862,7 @@ class StreamingLshDedupJob:
         kept = kept.join(dels, "doc_id", "left_anti")
         batch_df = batch_df.where(F.col("text").isNotNull())
 
-        bands_new = lsh_bands(minhash_signatures(batch_df)).persist()
+        bands_new = self._persist(lsh_bands(minhash_signatures(batch_df)))
         dup_vs_index = (
             bands_new.join(idx, ["band_idx", "band_hash"], "left_semi")
             .select("doc_id")
@@ -899,12 +886,10 @@ class StreamingLshDedupJob:
         new_idx = idx.unionByName(
             bands_new.select("doc_id", "band_idx", "band_hash")
         ).coalesce(4)
-        self._write(new_kept, self.kept_dir, epoch_id)
-        self._write(new_idx, self.idx_dir, epoch_id)
-        bands_new.unpersist()
+        return {"kept": new_kept, "band_index": new_idx}
 
     def kept_df(self) -> DataFrame:
-        return self._read(self.kept_dir, self.KEPT_SCHEMA)
+        return self.read("kept", self.KEPT_SCHEMA)
 
 
 def run_streaming_lsh_dedup(
@@ -919,28 +904,9 @@ def run_streaming_lsh_dedup(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", F.col("doc_id").alias("offset")
     )
-    chunk_dir = tempfile.mkdtemp(prefix="lshdedup_chunks_")
-    write_changelog_chunks(docs, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="lshdedup_state_")
-    job = StreamingLshDedupJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
-    return job.kept_df()
+    return replay_changelog(
+        spark, StreamingLshDedupJob, docs, n_chunks, "lshdedup"
+    ).kept_df()
 
 
 def run_stream_stream_full_outer(
@@ -1087,7 +1053,7 @@ def run_watermark_late_drop(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    replay_dir = tempfile.mkdtemp(prefix="events_late_replay_")
+    replay_dir = scratch_dir("events_late_replay_")
     staging = os.path.join(replay_dir, "_staging")
     # Three batches, not two: Spark's stateful operators use TWO watermarks
     # (SPARK-40925) — late-input filtering uses the PREVIOUS batch's
@@ -1143,12 +1109,12 @@ def run_watermark_late_drop(
     )
 
 
-class Scd2IvmJob:
+class Scd2IvmJob(IvmJob):
     """Incremental SCD2 (slowly-changing-dimension type 2) maintenance
     over a changelog replay — the temporal face of the KTable: where
     `ktable_version_history_scd2` rebuilds the full validity history in
-    one batch window pass, this job maintains it per micro-batch with
-    work O(|batch| + |open rows of changed keys|):
+    one batch window pass, this job maintains it per micro-batch, windowing
+    only the batch and the open rows of changed keys:
 
     - each batch's records append NEW version rows;
     - a changed key's currently-OPEN row (valid_to null) is closed by the
@@ -1156,9 +1122,10 @@ class Scd2IvmJob:
       the same per-key lead() window as the batch records;
     - tombstones close intervals without opening one (the subtractor's
       nil at kafka_streams.clj:77-79, viewed temporally);
-    - closed history rows are never read or rewritten (at cluster scale
-      the history partition is append-only; only the open-rows partition
-      churns — the standard warehouse CDC-merge layout).
+    - closed history rows pass through untouched, though the parquet
+      table is rewritten in full each batch (at cluster scale the history
+      partition is append-only and only the open-rows partition churns —
+      the standard warehouse CDC-merge layout).
 
     Final state must equal the batch recompute, proving
     incremental ≡ recompute for the temporal view as well (SURVEY §4.3).
@@ -1169,26 +1136,10 @@ class Scd2IvmJob:
         "o_totalprice double, valid_from long, valid_to long"
     )
 
-    def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.scd_dir = os.path.join(work_dir, "scd2_state")
-
-    def _read(self):
-        if not os.path.exists(os.path.join(self.scd_dir, "_SUCCESS")):
-            return self.spark.createDataFrame([], self.SCD_SCHEMA)
-        return self.spark.read.parquet(self.scd_dir)
-
-    def _write(self, df: DataFrame, epoch_id: int) -> None:
-        tmp = self.scd_dir + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.scd_dir):
-            shutil.rmtree(self.scd_dir)
-        os.rename(tmp, self.scd_dir)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def update(self, batch_df: DataFrame) -> dict:
         from pyspark.sql import Window as W
 
-        scd = self._read()
+        scd = self.view()
         keys = batch_df.select("key").distinct()
         is_open = F.col("valid_to").isNull()
         # rows the batch cannot touch: all closed history + open rows of
@@ -1234,10 +1185,10 @@ class Scd2IvmJob:
                 "valid_to",
             )
         )
-        self._write(untouched.unionByName(versioned), epoch_id)
+        return {"scd2_state": untouched.unionByName(versioned)}
 
     def view(self) -> DataFrame:
-        return self._read()
+        return self.read("scd2_state", self.SCD_SCHEMA)
 
 
 def run_scd2_incremental(
@@ -1245,34 +1196,10 @@ def run_scd2_incremental(
 ) -> DataFrame:
     """SCD2 history maintained incrementally over an offset-ordered
     changelog replay; returns the final validity-interval table."""
-    import atexit
-
     from ..sources.changelog import orders_changelog
 
     cl = orders_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="scd2_ivm_chunks_")
-    atexit.register(shutil.rmtree, chunk_dir, True)
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="scd2_ivm_state_")
-    atexit.register(shutil.rmtree, work_dir, True)
-    job = Scd2IvmJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = replay_changelog(spark, Scd2IvmJob, cl, n_chunks, "scd2_ivm")
     return job.view().select(
         "key",
         "o_custkey",
@@ -1284,44 +1211,28 @@ def run_scd2_incremental(
     )
 
 
-class SetIvmJob:
+class SetIvmJob(IvmJob):
     """TRUE incremental maintenance of the reference's SET-valued view —
     SURVEY §7.4 hard-part #4's scale representation made real: the
     per-client position set is stored as a SORTED ARRAY and maintained by
-    array_except (subtractor) + array_union (adder) per micro-batch, with
-    work O(|changed keys|) — the snapshot-sized collect_set recompute
-    never runs.
+    array_except (subtractor) + array_union (adder) per micro-batch — the
+    snapshot-sized collect_set recompute never runs. The deltas come from
+    the changed keys alone, but every batch rewrites both state tables in
+    full.
 
     Per batch, for every changed key: its PREVIOUS visible contribution
     (latest compacted value that was non-tombstone and NASDAQ) is removed
     from its client's array, its NEW winning contribution added; a client
     whose array empties vanishes (the subtractor's nil-deletes-row,
-    kafka_streams.clj:77-79). Two parquet state tables (compacted
-    changelog + the array view); at cluster scale both partition by their
-    key and the array update is a keyed MERGE. This is the third IVM
-    face — aggregate (AggIvmJob), join (JoinIvmJob), dimension history
-    (Scd2IvmJob), and now the reference's own set semantics.
+    kafka_streams.clj:77-79). Two state tables (``compact_state``, the
+    compacted changelog, and ``set_view``, the array view); at cluster
+    scale both partition by their key and the array update is a keyed
+    MERGE. This is the third IVM face — aggregate (AggIvmJob), join
+    (JoinIvmJob), dimension history (Scd2IvmJob), and now the
+    reference's own set semantics.
     """
 
     VIEW_SCHEMA = "client string, positions array<string>"
-
-    def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.state_dir = os.path.join(work_dir, "compact_state")
-        self.view_dir = os.path.join(work_dir, "set_view")
-        self._schema = None
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
 
     @staticmethod
     def _visible(df: DataFrame) -> DataFrame:
@@ -1333,10 +1244,9 @@ class SetIvmJob:
             F.col("value.id").alias("id"),
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._schema = batch_df.schema
-        state = self._read(self.state_dir, self._schema)
-        view = self._read(self.view_dir, self.VIEW_SCHEMA)
+    def update(self, batch_df: DataFrame) -> dict:
+        state = self.read("compact_state", batch_df.schema)
+        view = self.view()
         keys = batch_df.select("key").distinct()
 
         # subtractor: previous visible contribution of each changed key
@@ -1374,13 +1284,10 @@ class SetIvmJob:
             .where(F.size("positions") > 0)
         )
         untouched = view.join(delta, "client", "left_anti")
-        self._write(
-            untouched.unionByName(updated), self.view_dir, epoch_id
-        )
-        self._write(merged, self.state_dir, epoch_id)
+        return {"set_view": untouched.unionByName(updated), "compact_state": merged}
 
     def view(self) -> DataFrame:
-        return self._read(self.view_dir, self.VIEW_SCHEMA)
+        return self.read("set_view", self.VIEW_SCHEMA)
 
 
 def run_shareholders_set_ivm(
@@ -1388,45 +1295,21 @@ def run_shareholders_set_ivm(
 ) -> DataFrame:
     """The shareholders set view maintained by array add/subtract over an
     offset-ordered changelog replay; returns the final view."""
-    import atexit
-
     from ..sources.changelog import shareholders_changelog
 
     cl = shareholders_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="set_ivm_chunks_")
-    atexit.register(shutil.rmtree, chunk_dir, True)
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="set_ivm_state_")
-    atexit.register(shutil.rmtree, work_dir, True)
-    job = SetIvmJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = replay_changelog(spark, SetIvmJob, cl, n_chunks, "set_ivm")
     return job.view().select(
         "client", F.concat_ws(",", "positions").alias("positions")
     )
 
 
-class CogroupIvmJob:
+class CogroupIvmJob(IvmJob):
     """Incremental maintenance of a COGROUP view (KStreams 2.5
     ``KGroupedStream.cogroup``): two differently-keyed changelog entities
     (orders, share positions) merge into ONE per-client aggregate table,
-    updated per micro-batch with work bounded by the *changed clients'*
-    state rows — the full per-client recompute never runs.
+    updated per micro-batch by recomputing only the *changed clients'*
+    rows — the full per-client recompute never runs.
 
     KStreams executes cogroup as one state store receiving every
     stream's adder; the micro-batch analog here is group-scoped
@@ -1438,34 +1321,16 @@ class CogroupIvmJob:
     (the nil-deletes-row rule, kafka_streams.clj:77-79, lifted to the
     merged table).
 
-    State tables (parquet stand-ins for keyed Delta MERGE at cluster
-    scale): the compacted flat changelog (partition by key) and the
-    cogrouped view (partition by client — the retract/insert swap then
-    prunes to changed-client partitions).
+    State tables, both rewritten in full per batch (a keyed Delta MERGE
+    at cluster scale): the compacted flat changelog (partition by key) and
+    the cogrouped view (partition by client — the retract/insert swap
+    then prunes to changed-client partitions).
     """
 
     VIEW_SCHEMA = (
         "client string, n_orders long, total_price double,"
         " n_positions long, n_nasdaq long"
     )
-
-    def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.state_dir = os.path.join(work_dir, "compact_state")
-        self.view_dir = os.path.join(work_dir, "cogroup_view")
-        self._schema = None
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
 
     @staticmethod
     def _compact_flat(df: DataFrame) -> DataFrame:
@@ -1485,15 +1350,14 @@ class CogroupIvmJob:
             F.col("src") == "o", F.col("o_custkey").cast("string")
         ).otherwise(F.col("client"))
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def update(self, batch_df: DataFrame) -> dict:
         # sever streaming lineage so AQE coalesces the tiny per-batch plans
         batch_df = batch_df.localCheckpoint(eager=True)
-        self._schema = batch_df.schema
-        state = self._read(self.state_dir, self._schema)
-        view = self._read(self.view_dir, self.VIEW_SCHEMA)
+        state = self.read("compact_state", batch_df.schema)
+        view = self.view()
 
         keys = batch_df.select("key").distinct()
-        merged = self._compact_flat(state.unionByName(batch_df)).persist()
+        merged = self._persist(self._compact_flat(state.unionByName(batch_df)))
 
         # clients the batch touches: previous owners of changed keys (the
         # only place a tombstoned key's client survives) + new values
@@ -1546,14 +1410,13 @@ class CogroupIvmJob:
             )
         )
         untouched = view.join(clients, "client", "left_anti")
-        self._write(
-            untouched.unionByName(updated).coalesce(8), self.view_dir, epoch_id
-        )
-        self._write(merged, self.state_dir, epoch_id)
-        merged.unpersist()
+        return {
+            "cogroup_view": untouched.unionByName(updated).coalesce(8),
+            "compact_state": merged,
+        }
 
     def view(self) -> DataFrame:
-        return self._read(self.view_dir, self.VIEW_SCHEMA)
+        return self.read("cogroup_view", self.VIEW_SCHEMA)
 
 
 def run_cogroup_ivm(
@@ -1562,35 +1425,10 @@ def run_cogroup_ivm(
     """Replay the multiplexed orders+positions changelog in n_chunks
     micro-batches through CogroupIvmJob; returns the final cogrouped view
     (must equal the batch cogroup of the two latest snapshots)."""
-    import atexit
-
     from ..sources.changelog import cogroup_multiplexed_changelog
 
     cl = cogroup_multiplexed_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="cogroup_ivm_chunks_")
-    atexit.register(shutil.rmtree, chunk_dir, True)
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="cogroup_ivm_state_")
-    atexit.register(shutil.rmtree, work_dir, True)
-    job = CogroupIvmJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
-    return job.view()
+    return replay_changelog(spark, CogroupIvmJob, cl, n_chunks, "cogroup_ivm").view()
 
 
 def run_tvd_drift_monitor(
@@ -1610,15 +1448,11 @@ def run_tvd_drift_monitor(
     formula as the replay writer), so append output is exactly
     predictable from batch data.
     """
-    import atexit as _atexit
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from ..sources.fixture_cache import ensure_layout, fixture_dir
     from ..sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
+        F.col("event_id").alias("offset"),
         F.expr(
             "least(greatest(coalesce("
             "CAST(round(value * 100) AS BIGINT), 0), 0) div 2000, 9)"
@@ -1630,44 +1464,10 @@ def run_tvd_drift_monitor(
     )
 
     def _write(path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-        bounds = ev.agg(
-            F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-        ).collect()[0]
-        lo, hi = bounds.lo, bounds.hi
-        width = max(1, (hi - lo + n_chunks) // n_chunks)
-        staging = os.path.join(path, "_staging")
-        chunk = F.least(
-            F.expr(f"(event_id - {lo}) div {width}"),
-            F.lit(n_chunks - 1),
-        ).cast("int")
-        (
-            ev.withColumn("chunk", chunk)
-            .repartition("chunk")
-            .write.mode("overwrite")
-            .partitionBy("chunk")
-            .parquet(staging)
-        )
-        for i in range(n_chunks):
-            d = os.path.join(staging, f"chunk={i}")
-            if not os.path.isdir(d):
-                continue
-            for j, f in enumerate(sorted(os.listdir(d))):
-                if f.endswith(".parquet"):
-                    dst = os.path.join(path, f"{i:03d}-{j}.parquet")
-                    os.rename(os.path.join(d, f), dst)
-                    os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        _shutil.rmtree(staging)
-        with open(os.path.join(path, "_SUCCESS"), "w"):
-            pass
+        write_changelog_chunks(ev, path, n_chunks=n_chunks)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
 
     ensure_layout(replay_dir, _write)
-
-    stream = (
-        spark.readStream.schema("event_id long, bucket long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
 
     results: list[tuple[int, int, int]] = []
     ref: dict = {}
@@ -1691,15 +1491,7 @@ def run_tvd_drift_monitor(
         )
         results.append((int(epoch_id), n, tvd))
 
-    ckpt = _tempfile.mkdtemp(prefix="tvd_drift_ckpt_")
-    _atexit.register(_shutil.rmtree, ckpt, True)
-    query = (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    replay(spark, replay_dir, "bucket long", _score, scratch_dir("tvd_drift_"))
     return spark.createDataFrame(
         sorted(results), "batch_id long, n_events long, tvd_e6 long"
     )

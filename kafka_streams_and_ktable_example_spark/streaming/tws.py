@@ -28,7 +28,6 @@ installed it runs as-is (same semantics, same oracle, as
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from typing import Any, Iterator
 
@@ -41,6 +40,7 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
+from ..session import scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
 
 _OUTPUT_SCHEMA = "client string, positions string, seq long"
@@ -110,7 +110,7 @@ def run_shareholders_tws(
 ) -> DataFrame:
     """Replay changelog chunks through transformWithStateInPandas; return
     the final view (client, positions-csv), empty-set groups dropped."""
-    work_dir = work_dir or tempfile.mkdtemp(prefix="ktable_tws_")
+    work_dir = work_dir or scratch_dir("ktable_tws_")
     checkpoint = os.path.join(work_dir, "checkpoint")
 
     prev_provider = spark.conf.get(

@@ -4,9 +4,11 @@ stream-equals-batch equivalence on real data."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_and_ktable_example_spark.operators.ktable import scan_view, shareholders_view
@@ -42,21 +44,260 @@ def test_golden_scenario_incremental(spark, tmp_path):
         assert scan_view(view) == expected, f"after batch {epoch}"
 
 
+_ORDERS_SCHEMA = (
+    "key long, "
+    "value struct<o_custkey:long, o_orderstatus:string, o_totalprice:double>, "
+    "offset long"
+)
+_JOIN_SCHEMA = (
+    "key long, src string, o_custkey long, o_totalprice double, "
+    "c_mktsegment string, tombstone boolean, offset long"
+)
+_COGROUP_SCHEMA = (
+    "key string, src string, o_custkey long, o_totalprice double,"
+    " client string, exchange string, tombstone boolean, offset long"
+)
+_DOC_A = "the quick brown fox jumps over the lazy dog"
+_DOC_B = "a completely different document about spark engines"
+_SHAREHOLDER_BATCHES = [
+    [
+        ("a:::T1", pos("a", "T1", "NASDAQ", 1), 0),
+        ("a:::T2", pos("a", "T2", "NASDAQ", 2), 1),
+        ("b:::T3", pos("b", "T3", "LON", 3), 2),
+    ],
+    [
+        ("a:::T1", None, 3),
+        ("b:::T3", pos("b", "T3", "NASDAQ", 3), 4),
+        ("a:::T2", pos("a", "T2", "LON", 2), 5),
+    ],
+    [
+        ("c:::T4", pos("c", "T4", "NASDAQ", 4), 6),
+        ("a:::T1", pos("a", "T1", "NASDAQ", 1), 7),
+    ],
+]
+_ORDER_BATCHES = [
+    [(1, (100, "O", 10.0), 0), (2, (100, "O", 5.0), 1)],
+    [(1, (200, "F", 20.0), 2), (2, None, 3)],
+    [(3, (200, "O", 1.0), 4), (1, (100, "O", 7.0), 5)],
+]
+# job class name -> (batch schema, three batches, view accessor, #tables)
+IVM_SCENARIOS = {
+    "ChangelogStreamJob": (None, _SHAREHOLDER_BATCHES, "snapshot", 1),
+    "AggIvmJob": (_ORDERS_SCHEMA, _ORDER_BATCHES, "view", 2),
+    "JoinIvmJob": (
+        _JOIN_SCHEMA,
+        [
+            [
+                (1, "c", None, None, "BUILDING", False, 1),
+                (10, "o", 1, 100.0, None, False, 2),
+                (11, "o", 2, 50.0, None, False, 3),
+            ],
+            [
+                (10, "o", 1, 120.0, None, False, 4),
+                (2, "c", None, None, "MACHINERY", False, 5),
+            ],
+            [
+                (1, "c", None, None, None, True, 6),
+                (12, "o", 2, 70.0, None, False, 7),
+            ],
+        ],
+        "view_df",
+        3,
+    ),
+    "StreamingLshDedupJob": (
+        "doc_id long, text string, lang string",
+        [
+            [(1, _DOC_A, "en"), (2, "tiny", "en")],
+            [(3, _DOC_A, "en"), (4, _DOC_B, "en"), (1, None, "en")],
+            [(5, _DOC_B, "en"), (6, _DOC_A + " again", "de")],
+        ],
+        "kept_df",
+        2,
+    ),
+    "Scd2IvmJob": (_ORDERS_SCHEMA, _ORDER_BATCHES, "view", 1),
+    "SetIvmJob": (None, _SHAREHOLDER_BATCHES, "view", 2),
+    "CogroupIvmJob": (
+        _COGROUP_SCHEMA,
+        [
+            [
+                ("o:1", "o", 7, 100.0, None, None, False, 0),
+                ("s:7:::T1", "s", None, None, "7", "NASDAQ", False, 1),
+            ],
+            [
+                ("o:2", "o", 8, 50.0, None, None, False, 2),
+                ("o:1", "o", None, None, None, None, True, 3),
+            ],
+            [
+                ("s:7:::T1", "s", None, None, None, None, True, 4),
+                ("s:8:::T2", "s", None, None, "8", "LON", False, 5),
+            ],
+        ],
+        "view",
+        2,
+    ),
+}
+
+
+def _ivm_case(spark, name):
+    """(job class, the scenario's three batch DataFrames, view reader)."""
+    from kafka_streams_and_ktable_example_spark.streaming import pipeline
+
+    schema, batches, accessor, _ = IVM_SCENARIOS[name]
+    frames = [
+        changelog_from_rows(spark, rows)
+        if schema is None
+        else spark.createDataFrame(rows, schema)
+        for rows in batches
+    ]
+
+    def view(job):
+        return sorted(repr(r) for r in getattr(job, accessor)().collect())
+
+    return getattr(pipeline, name), frames, view
+
+
 def test_batch_replay_is_idempotent(spark, tmp_path):
     """Re-processing the same batch (restart-after-crash) must converge to
-    the same state — the merge is a pure function of state ∪ batch."""
-    job = ChangelogStreamJob(spark, str(tmp_path / "state"))
-    rows = [
-        ("a:::T1", pos("a", "T1", "NASDAQ", 1), 0),
-        ("a:::T1", None, 1),
-        ("b:::T2", pos("b", "T2", "NASDAQ", 2), 2),
-    ]
-    batch = changelog_from_rows(spark, rows)
-    job.process_batch(batch, 0)
-    first = sorted(tuple(r) for r in job.read_state().collect())
-    job.process_batch(batch, 0)  # replay
-    second = sorted(tuple(r) for r in job.read_state().collect())
-    assert first == second
+    the same state, for every foreachBatch job: replaying epoch 1 in the
+    same job and again in a restarted one leaves the view unchanged."""
+    for name in IVM_SCENARIOS:
+        cls, (b0, b1, _), view = _ivm_case(spark, name)
+        work = str(tmp_path / name)
+        job = cls(spark, work)
+        job.process_batch(b0, 0)
+        job.process_batch(b1, 1)
+        first = view(job)
+        job.process_batch(b1, 1)  # replay in the same process
+        job = cls(spark, work)
+        job.process_batch(b1, 1)  # replay after a restart
+        assert view(job) == first, name
+
+
+class _Crash(Exception):
+    pass
+
+
+def _inject_crash(m, after_write: int) -> None:
+    """Make the next commit die right after its ``after_write``-th parquet
+    write, or right after publishing the manifest when no such write
+    comes."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    writes = []
+    real_parquet, real_replace = DataFrameWriter.parquet, os.replace
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        writes.append(path)
+        if len(writes) == after_write:
+            raise _Crash(path)
+
+    def replace(src, dst, *args, **kwargs):
+        real_replace(src, dst, *args, **kwargs)
+        if dst.endswith("_manifest.json"):
+            raise _Crash(dst)
+
+    m.setattr(DataFrameWriter, "parquet", parquet)
+    m.setattr(os, "replace", replace)
+
+
+@pytest.mark.parametrize("name", sorted(IVM_SCENARIOS))
+def test_crash_mid_commit_replays_to_same_view(spark, tmp_path, monkeypatch, name):
+    """Crash injection at every commit boundary: epoch 1 dies after each
+    table write and after the manifest write; a restarted job replays the
+    same (query id, epoch) and then epoch 2. The view must equal an
+    uninterrupted run — no lost state, no delta applied twice."""
+    import shutil
+
+    cls, (b0, b1, b2), view = _ivm_case(spark, name)
+    base = str(tmp_path / "base")
+    cls(spark, base).process_batch(b0, 0)
+    shutil.copytree(base, str(tmp_path / "ref"))
+    ref = cls(spark, str(tmp_path / "ref"))
+    ref.process_batch(b1, 1)
+    ref.process_batch(b2, 2)
+    want = view(ref)
+    n_tables = IVM_SCENARIOS[name][3]
+    for point in range(1, n_tables + 2):
+        work = str(tmp_path / f"crash{point}")
+        shutil.copytree(base, work)
+        with monkeypatch.context() as m:
+            _inject_crash(m, point)
+            with contextlib.suppress(_Crash):
+                cls(spark, work).process_batch(b1, 1)
+        job = cls(spark, work)  # the restarted process
+        job.process_batch(b1, 1)
+        job.process_batch(b2, 2)
+        assert view(job) == want, f"{name}: crash after step {point}"
+
+
+def test_direct_epoch_then_fresh_stream_epoch_zero_both_apply(spark, tmp_path):
+    """A direct process_batch(batch, 0) followed by a fresh-checkpoint
+    stream, whose first batch is also epoch 0, must apply both: the commit
+    key carries the stream's query id, and a direct call has none."""
+    from kafka_streams_and_ktable_example_spark.sources.changelog import CHANGELOG_SCHEMA
+    from kafka_streams_and_ktable_example_spark.streaming.pipeline import SetIvmJob
+
+    job = SetIvmJob(spark, str(tmp_path / "work"))
+    job.process_batch(
+        changelog_from_rows(spark, [("a:::T1", pos("a", "T1", "NASDAQ", 1), 0)]), 0
+    )
+    src = str(tmp_path / "src")
+    changelog_from_rows(
+        spark, [("b:::T2", pos("b", "T2", "NASDAQ", 2), 1)]
+    ).write.parquet(src)
+    (
+        spark.readStream.schema(CHANGELOG_SCHEMA)
+        .parquet(src)
+        .writeStream.foreachBatch(job.process_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    got = sorted((r.client, list(r.positions)) for r in job.view().collect())
+    assert got == [("a", ["a:::T1"]), ("b", ["b:::T2"])]
+
+
+def test_chunk_replay_follows_offset_order(spark, sf_dir, tmp_path):
+    """write_changelog_chunks promises earlier offsets first: a stream over
+    its output, one file per micro-batch, sees strictly rising batch
+    minimum offsets. The chunks are written by 16 parallel tasks, as at
+    sf0.1 (at this scale AQE would otherwise coalesce the write into one
+    task that writes the chunks in order)."""
+    chunk_dir = str(tmp_path / "chunks")
+    confs = {
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        write_changelog_chunks(
+            shareholders_changelog(spark, sf_dir), chunk_dir, n_chunks=8
+        )
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    mins = []
+    (
+        spark.readStream.schema("key string, offset long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(chunk_dir)
+        .writeStream.foreachBatch(
+            lambda df, _: mins.append(df.agg(F.min("offset")).first()[0])
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert len(mins) == 8
+    assert all(a < b for a, b in zip(mins, mins[1:])), mins
 
 
 def test_out_of_order_across_batches(spark, tmp_path):
@@ -268,7 +509,9 @@ def test_checkpoint_resume_across_runs(spark, sf_dir, tmp_path):
 def test_shuffled_chunk_replay(spark, sf_dir, tmp_path):
     """Out-of-order micro-batch delivery: replaying chunks in scrambled
     order must converge to the same view — compaction state keeps max
-    offset per key, including tombstones (log-compaction semantics)."""
+    offset per key, including tombstones (log-compaction semantics).
+    The file source replays in (mtime, path) order, so both are
+    scrambled."""
     import random
 
     cl = shareholders_changelog(spark, sf_dir)
@@ -279,7 +522,9 @@ def test_shuffled_chunk_replay(spark, sf_dir, tmp_path):
     order = list(range(len(files)))
     random.Random(7).shuffle(order)
     for f, i in zip(files, order):
-        os.rename(os.path.join(chunks, f), os.path.join(chunks, f"z{i:03d}.parquet.tmp"))
+        scrambled = os.path.join(chunks, f"z{i:03d}.parquet.tmp")
+        os.rename(os.path.join(chunks, f), scrambled)
+        os.utime(scrambled, (1_600_000_000 + i,) * 2)
     for f in os.listdir(chunks):
         os.rename(os.path.join(chunks, f), os.path.join(chunks, f.replace(".tmp", "")))
     streamed = run_shareholders_stream(spark, chunks)
@@ -555,8 +800,7 @@ def test_streaming_lsh_dedup_retraction_add_delete_readd(spark, tmp_path):
     kept = {r.doc_id for r in job.kept_df().collect()}
     assert kept == {9}, kept  # re-add survives; deleted doc gone
     idx_docs = {
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "state" / "band_index")).collect()
+        r.doc_id for r in job.read("band_index", job.IDX_SCHEMA).collect()
     }
     assert idx_docs == {9}, idx_docs  # doc 1's bands fully retracted
 
