@@ -20,15 +20,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_streams_and_ktable_example_spark import plans
-from kafka_streams_and_ktable_example_spark.session import get_spark, tune_for_input
-
-
-def force(df) -> int:
-    try:
-        df.write.mode("overwrite").format("noop").save()
-        return -1
-    except Exception:
-        return len(df.collect())
+from kafka_streams_and_ktable_example_spark.session import (
+    force,
+    get_spark,
+    tune_for_input,
+)
 
 
 def main() -> None:

@@ -77,6 +77,40 @@ def _coarse_bucket(col: str, cuts: list[float], ascending: bool) -> Column:
     return out
 
 
+def _bucketed(
+    df: DataFrame,
+    col: str,
+    ascending: bool,
+    num_coarse: int,
+    cuts: Optional[list[float]] = None,
+) -> DataFrame:
+    """``df`` plus its ``_coarse`` range bucket on ``col``; ``cuts`` default
+    to the approx cut points of ``col``."""
+    if cuts is None:
+        cuts = approx_cut_points(df, col, num_coarse)
+    return df.withColumn("_coarse", _coarse_bucket(col, cuts, ascending))
+
+
+def _bucket_prefix(
+    stats: DataFrame, *aggs: Column, keep: Sequence[str] = ()
+) -> DataFrame:
+    """For each bucket of the per-bucket ``stats`` relation, aggregate every
+    EARLIER bucket: ``aggs`` read the earlier buckets as ``b.<col>``, and
+    ``keep`` carries the bucket's own columns through. A tiny theta
+    self-join over <= ``num_coarse`` rows, NOT a window, so the plan stays
+    free of unpartitioned WindowExec nodes; the first bucket sees no rows
+    (aggregates over an empty left-join side are NULL)."""
+    a, b = stats.alias("a"), stats.alias("b")
+    return (
+        a.join(b, F.col("b._coarse") < F.col("a._coarse"), "left")
+        .groupBy(
+            F.col("a._coarse").alias("_coarse"),
+            *[F.col(f"a.{c}").alias(c) for c in keep],
+        )
+        .agg(*aggs)
+    )
+
+
 def with_exact_global_order(
     df: DataFrame,
     order_by: OrderSpec,
@@ -104,9 +138,6 @@ def with_exact_global_order(
     with identical ``order_by``/``cuts`` paid the whole ranking
     machinery twice for values that are identical by construction.
     """
-    lead_col, lead_asc = order_by[0]
-    if cuts is None:
-        cuts = approx_cut_points(df, lead_col, num_coarse)
     if cumsum_of is None:
         sums: list[tuple[str, str]] = []
     elif isinstance(cumsum_of, str):
@@ -124,7 +155,7 @@ def with_exact_global_order(
             )
         sums = list(zip(cumsum_of, cumsum_name))
 
-    bucketed = df.withColumn("_coarse", _coarse_bucket(lead_col, cuts, lead_asc))
+    bucketed = _bucketed(df, *order_by[0], num_coarse, cuts)
     win = Window.partitionBy("_coarse").orderBy(*_order_cols(order_by))
     bucketed = bucketed.withColumn("_local_rank", F.row_number().over(win))
     aggs = [F.count("*").alias("_cnt")]
@@ -136,20 +167,12 @@ def with_exact_global_order(
         aggs.append(F.sum(src).alias(f"_bsum_{i}"))
 
     stats = bucketed.groupBy("_coarse").agg(*aggs)
-    # prefix offsets over the num_coarse-row bucket relation: a tiny theta
-    # self-join, NOT a window — keeps the whole plan free of unpartitioned
-    # WindowExec nodes
-    a, b = stats.alias("a"), stats.alias("b")
     off_aggs = [F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_rank_off")]
     for i in range(len(sums)):
         off_aggs.append(
             F.coalesce(F.sum(f"b._bsum_{i}"), F.lit(0)).alias(f"_sum_off_{i}")
         )
-    offsets = (
-        a.join(b, F.col("b._coarse") < F.col("a._coarse"), "left")
-        .groupBy(F.col("a._coarse").alias("_coarse"))
-        .agg(*off_aggs)
-    )
+    offsets = _bucket_prefix(stats, *off_aggs)
 
     out = bucketed.join(F.broadcast(offsets), "_coarse").withColumn(
         rank_name, (F.col("_rank_off") + F.col("_local_rank")).cast("long")
@@ -174,13 +197,36 @@ def exact_kth_value(
 ) -> DataFrame:
     """One-row DataFrame holding the EXACT k-th smallest value of ``col``
     (1-based, counting duplicates) plus the total row count ``_n`` — the
-    order-statistic SELECTION for callers that consume a global ranking
-    only at a single rank (median, MAD, any fixed quantile).
+    single-rank form of :func:`exact_kth_values` (median, MAD, any fixed
+    quantile). A rank outside [1, n], or an empty input, yields an EMPTY
+    frame: ``col`` is non-null, so a NULL selection means out of range.
+    """
+    value_name = value_name or col
+    return exact_kth_values(
+        df, col, [(value_name, k)], num_coarse=num_coarse, cuts=cuts
+    ).where(F.col(value_name).isNotNull())
 
-    Such callers previously paid :func:`with_exact_global_order` — a full
-    bucket + partitioned-window + offsets pass that ranks EVERY row — to
-    read one of the ranks (r10 "Not yet optimized" #1; guide §2.1/§2.4).
-    This operator never ranks the full input:
+
+def exact_kth_values(
+    df: DataFrame,
+    col: str,
+    ks: Sequence[tuple[str, str]],
+    *,
+    num_coarse: int = 64,
+    cuts: Optional[list[float]] = None,
+) -> DataFrame:
+    """EXACT k-th smallest values of ``col`` (1-based, counting duplicates)
+    at SEVERAL ranks (``ks`` = [(output_name, k_sql_expr_over__n), ...]),
+    e.g. both trim caps of a winsorized mean. Returns ONE row with a
+    column per rank plus the total row count ``_n``; a rank outside
+    [1, n] yields NULL in its column.
+
+    This is the order-statistic SELECTION for callers that consume a
+    global ranking only at a few ranks. Such callers previously paid
+    :func:`with_exact_global_order` — a full bucket + partitioned-window
+    + offsets pass that ranks EVERY row — to read one of the ranks (r10
+    "Not yet optimized" #1; guide §2.1/§2.4). This operator never ranks
+    the full input:
 
     1. **Bucket histogram** — coarse range buckets on ``col`` (same cut
        machinery as the full ranking), aggregated to per-bucket counts.
@@ -192,18 +238,20 @@ def exact_kth_value(
        materialization instead — measured 1.2x SLOWER at the 100x
        replica (r11; the same lesson as stats_forecast_backtest's
        rejected month persist).
-    2. **Locate the k-th bucket** — prefix sums over the histogram (theta
-       self-join over ≤ ``num_coarse`` rows) find the bucket holding rank
-       ``k`` and the within-bucket rank ``j = k - prefix``. ``k`` is a
-       SQL expression over ``_n`` (the total count), so data-dependent
-       ranks like the lower median need no separate count pass.
-    3. **Sort one bucket** — the big side is FILTERED to that single
-       bucket by a broadcast join (never shuffled), and a window
-       partitioned by the bucket id takes its j-th smallest value.
-       Bucket size is ~n/num_coarse by construction of the cuts.
+    2. **Locate the k-th buckets** — prefix sums over the histogram find
+       the bucket holding each rank ``k`` and the within-bucket rank
+       ``k - prefix``. ``k`` is a SQL expression over ``_n`` (the total
+       count), so data-dependent ranks like the lower median need no
+       separate count pass.
+    3. **Sort those buckets** — the big side is FILTERED to the selected
+       buckets (<= len(ks)) by a broadcast join (never shuffled), each
+       bucket pays one ~n/num_coarse-row local sort, and a row matches
+       rank k_i iff it sits in k_i's bucket at local position
+       k_i - prefix — folded as min(CASE WHEN ...) so the whole
+       selection is one aggregate.
 
     The selected VALUE is invariant to tie order — the k-th order
-    statistic of a multiset needs no tie-break column — so this equals
+    statistic of a multiset needs no tie-break column — so each equals
     ``col`` at ``rk = k`` under ANY total order extending (col ASC).
     Cut quality affects only bucket balance, never the value: exactness
     comes from exact counts + exact within-bucket rank, so callers may
@@ -211,68 +259,12 @@ def exact_kth_value(
     |x − m̂| images of another column's cuts). ``col`` must be non-null
     and is ranked ascending.
     """
-    value_name = value_name or col
-    if cuts is None:
-        cuts = approx_cut_points(df, col, num_coarse)
-    bucketed = df.select(col).withColumn(
-        "_coarse", _coarse_bucket(col, cuts, True)
-    )
+    bucketed = _bucketed(df.select(col), col, True, num_coarse, cuts)
     hist = bucketed.groupBy("_coarse").agg(F.count("*").alias("_cnt"))
-    a, b = hist.alias("a"), hist.alias("b")
-    located = (
-        a.join(b, F.col("b._coarse") < F.col("a._coarse"), "left")
-        .groupBy(F.col("a._coarse").alias("_coarse"), F.col("a._cnt").alias("_cnt"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_before"))
-    )
-    total = hist.agg(F.sum("_cnt").alias("_n"))
-    target = (
-        located.crossJoin(F.broadcast(total))
-        .withColumn("_k", F.expr(k).cast("long"))
-        .where("_before < _k AND _k <= _before + _cnt")
-        .select("_coarse", F.expr("_k - _before").alias("_j"), "_n")
-    )
-    win = Window.partitionBy("_coarse").orderBy(F.col(col).asc())
-    return (
-        bucketed.join(F.broadcast(target), "_coarse")
-        .withColumn("_lr", F.row_number().over(win))
-        .where(F.col("_lr") == F.col("_j"))
-        .select(F.col(col).alias(value_name), "_n")
-    )
-
-
-def exact_kth_values(
-    df: DataFrame,
-    col: str,
-    ks: Sequence[tuple[str, str]],
-    *,
-    num_coarse: int = 64,
-    cuts: Optional[list[float]] = None,
-) -> DataFrame:
-    """Multi-rank form of :func:`exact_kth_value`: ONE histogram + locate
-    + bucket-sort pass answering SEVERAL ranks over the same column
-    (``ks`` = [(output_name, k_sql_expr_over__n), ...]) — e.g. both trim
-    caps of a winsorized mean. Returns ONE row with a column per rank
-    plus ``_n``; a rank outside [1, n] yields NULL in its column (the
-    single-k operator returns an empty frame instead — callers that need
-    several ranks invariably consume them as scalars of one row).
-
-    Shape: the selected buckets (<= len(ks)) are broadcast-joined onto
-    the bucketed input, each bucket pays one ~n/num_coarse-row local
-    sort, and a row matches rank k_i iff it sits in k_i's bucket at
-    local position k_i - prefix — folded as min(CASE WHEN ...) so the
-    whole selection is one aggregate.
-    """
-    if cuts is None:
-        cuts = approx_cut_points(df, col, num_coarse)
-    bucketed = df.select(col).withColumn(
-        "_coarse", _coarse_bucket(col, cuts, True)
-    )
-    hist = bucketed.groupBy("_coarse").agg(F.count("*").alias("_cnt"))
-    a, b = hist.alias("a"), hist.alias("b")
-    located = (
-        a.join(b, F.col("b._coarse") < F.col("a._coarse"), "left")
-        .groupBy(F.col("a._coarse").alias("_coarse"), F.col("a._cnt").alias("_cnt"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_before"))
+    located = _bucket_prefix(
+        hist,
+        F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_before"),
+        keep=("_cnt",),
     )
     total = hist.agg(F.sum("_cnt").alias("_n"))
     in_bucket = [
@@ -336,9 +328,7 @@ def with_exact_prior_max(
 
     First row of the total order gets NULL (no prior rows).
     """
-    lead_col, lead_asc = order_by[0]
-    cuts = approx_cut_points(df, lead_col, num_coarse)
-    bucketed = df.withColumn("_coarse", _coarse_bucket(lead_col, cuts, lead_asc))
+    bucketed = _bucketed(df, *order_by[0], num_coarse)
     win = (
         Window.partitionBy("_coarse")
         .orderBy(*_order_cols(order_by))
@@ -346,12 +336,7 @@ def with_exact_prior_max(
     )
     bucketed = bucketed.withColumn("_local_prior", F.max(of).over(win))
     stats = bucketed.groupBy("_coarse").agg(F.max(of).alias("_bmax"))
-    a, b = stats.alias("a"), stats.alias("b")
-    offsets = (
-        a.join(b, F.col("b._coarse") < F.col("a._coarse"), "left")
-        .groupBy(F.col("a._coarse").alias("_coarse"))
-        .agg(F.max("b._bmax").alias("_max_off"))
-    )
+    offsets = _bucket_prefix(stats, F.max("b._bmax").alias("_max_off"))
     out = bucketed.join(F.broadcast(offsets), "_coarse").withColumn(
         # Spark greatest SKIPS nulls: null local + null offset -> NULL,
         # exactly the "no prior row" contract

@@ -3911,8 +3911,9 @@ def stats_forecast_backtest(spark, sf_dir):
     # below repeat this subtree textually, but runtime exchange reuse
     # already dedups the identical month-aggregation exchanges — a
     # persist() serializes the first materialization instead and read
-    # 0.84x at the 10x replica / 0.52x at 100x (tools/exp_kth_value.py,
-    # old_forecast arm), so the duplicated-looking plan is the fast form
+    # 0.84x at the 10x replica / 0.52x at 100x (OPTIMIZATION_r11.md §2,
+    # measured with the §1 Evidence A/B), so the duplicated-looking plan
+    # is the fast form
     r = with_exact_global_order(
         m.withColumn("_mo_us", F.unix_micros("mo")),
         [("_mo_us", True)],

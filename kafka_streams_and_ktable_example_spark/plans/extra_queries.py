@@ -3272,8 +3272,9 @@ FROM m
     "engine. Transpose requires the frame to be small (column count = "
     "row count of the input); here it runs on the |status| x 2 "
     "aggregate, never on facts — the only sane place for a transpose "
-    "at 100 TB. Values surface as strings (transpose unifies column "
-    "types), which the oracle mirrors.",
+    "at 100 TB. The status columns are cast to strings, matching the "
+    "oracle's VARCHAR columns (both metrics are BIGINT, so transpose "
+    "itself keeps BIGINT).",
     tags=("surface", "agg"),
 )
 def df_transpose_metrics(spark, sf_dir):
@@ -3286,10 +3287,13 @@ def df_transpose_metrics(spark, sf_dir):
     )
     # transpose keys must be deterministic: fix the column order by
     # sorting on the index column first
-    return (
+    t = (
         m.orderBy("o_orderstatus")
         .transpose("o_orderstatus")
         .withColumnRenamed("key", "metric")
+    )
+    return t.select(
+        "metric", *[F.col(c).cast("string") for c in t.columns if c != "metric"]
     )
 
 

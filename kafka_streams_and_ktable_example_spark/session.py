@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -140,6 +141,21 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> int:
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(n)
     )
     return n
+
+
+def force(df: DataFrame) -> None:
+    """Execute ``df`` in full through the noop sink, collecting nothing.
+
+    Falls back to ``collect()`` ONLY for frames the noop sink cannot plan
+    (an ``AnalysisException`` at planning time). A runtime job failure
+    propagates: retrying it through ``collect()`` would run the whole
+    query a second time (the r8 triangle 100x disk-fill ran twice
+    back-to-back because a bare ``except`` swallowed the first failure).
+    """
+    try:
+        df.write.mode("overwrite").format("noop").save()
+    except AnalysisException:
+        df.collect()
 
 
 def get_spark(app_name: str = "kafka_streams_and_ktable_example_spark") -> SparkSession:

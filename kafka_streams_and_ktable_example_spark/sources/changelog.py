@@ -95,7 +95,7 @@ def orders_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT a filter() lambda on the array: the higher-order function is
     # evaluated interpreted per row, and at the 100x replica (15M orders)
     # that one lambda cost 7.7 s vs 2.6 s for the codegen'd WHERE form
-    # (measured r6, tools/ab_changelog_scan.py).
+    # (measured r6, SCALING.md "Single-scan changelog A/B at scale").
     # Expression-string construction (r10): the Column form of this fanout
     # cost ~35 py4j round trips (~6 ms each) per consumer build; the
     # strings assemble the identical record array in one selectExpr call.

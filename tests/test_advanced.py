@@ -1896,6 +1896,25 @@ def test_tuned_initial_partitions_tracks_input(tmp_path):
     assert tuned_initial_partitions(str(tmp_path), 32) == 512
 
 
+def test_force_runtime_failure_raises_after_one_job(spark):
+    """A job that fails at RUNTIME must propagate from force() without a
+    collect() retry: the retry would run the whole query a second time."""
+    from kafka_streams_and_ktable_example_spark.session import force
+
+    df = spark.range(4).select(
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("boom"))).alias("x")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("force_runtime_failure", "force() retry probe")
+    try:
+        with pytest.raises(Exception, match="boom"):
+            force(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("force_runtime_failure")
+    assert len(jobs) == 1, jobs
+
+
 def test_decode_media_real_dispatches_all_codecs(spark):
     """decode_media(fake=False) genuinely decodes PNG, WAV, ADPCM and FRV1
     payloads by container magic, and raises for unknown formats."""

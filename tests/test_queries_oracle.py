@@ -64,6 +64,16 @@ def test_weak_query_runs(spark, sf_dir, name):
     assert sdf.count() >= 0
 
 
+def test_df_transpose_metrics_status_columns_are_strings(spark, sf_dir):
+    """The oracle's F/O/P columns are VARCHAR. BIGINT columns with the same
+    digits still fail the driver's value hash, and canon_cell above renders
+    123 and '123' alike, so the match test cannot see the difference."""
+    from pyspark.sql.types import StringType
+
+    schema = plans.REGISTRY["df_transpose_metrics"].spark(spark, sf_dir).schema
+    assert [schema[c].dataType for c in ("F", "O", "P")] == [StringType()] * 3
+
+
 def test_no_pandas_coercion_hazard_types_in_oracles():
     """No oracle may surface HUGEINT/DECIMAL/UINT result columns: a harness
     that fetches DuckDB results through pandas/Arrow coerces those to

@@ -5,6 +5,7 @@ order (the shape stats_ks_two_sample / ml_decision_tree_split used
 before the rewrite), including against a plain unpartitioned-window
 reference."""
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -76,8 +77,6 @@ def test_multi_cumsum_name_length_mismatch_raises(spark):
     """Explicit TypeError, not assert: under `python -O` a stripped
     assert would zip a default str cumsum_name against its CHARACTERS
     and silently emit wrong column names."""
-    import pytest
-
     from kafka_streams_and_ktable_example_spark.operators.ranking import (
         with_exact_global_order,
     )
@@ -96,3 +95,62 @@ def test_multi_cumsum_name_length_mismatch_raises(spark):
             [("key", True)],
             cumsum_of=["v1", "v2"],  # default str cumsum_name
         )
+
+
+_SPREAD = [(i * 37) % 101 - 50 for i in range(400)]
+_TIES = [i % 3 for i in range(400)]
+
+
+@pytest.mark.parametrize(
+    "vals, lead_asc, cuts",
+    [
+        pytest.param(_SPREAD, True, None, id="asc"),
+        pytest.param(_SPREAD, False, None, id="desc"),
+        pytest.param(_TIES, True, None, id="heavy_ties_asc"),
+        pytest.param(_TIES, False, None, id="heavy_ties_desc"),
+        # approx cuts collapse to the one value, which no row is strictly
+        # past: every row lands in bucket 0
+        pytest.param([7] * 400, True, None, id="all_equal"),
+        # no cuts at all: the constant-bucket path
+        pytest.param(_SPREAD, True, [], id="no_cuts"),
+    ],
+)
+def test_global_order_matches_window(spark, vals, lead_asc, cuts):
+    """Rank and running sum from the bucketed two-phase form must equal
+    a plain unpartitioned row_number() / running-sum window over the same
+    total order: leading key either direction, ties broken by ``id``."""
+    from kafka_streams_and_ktable_example_spark.operators.ranking import (
+        with_exact_global_order,
+    )
+
+    df = spark.createDataFrame(
+        [(i, v, (i * 53) % 7 - 2) for i, v in enumerate(vals)],
+        "id long, v long, w long",
+    )
+    order = [("v", lead_asc), ("id", True)]
+    got = {
+        r["id"]: (r["rk"], r["cs"])
+        for r in with_exact_global_order(
+            df,
+            order,
+            rank_name="rk",
+            cumsum_of="w",
+            cumsum_name="cs",
+            num_coarse=8,
+            cuts=cuts,
+        ).collect()
+    }
+    lead = F.col("v").asc() if lead_asc else F.col("v").desc()
+    w = Window.orderBy(lead, F.col("id").asc())
+    want = {
+        r["id"]: (r["rk"], r["cs"])
+        for r in df.select(
+            "id",
+            F.row_number().over(w).alias("rk"),
+            F.sum("w")
+            .over(w.rowsBetween(Window.unboundedPreceding, 0))
+            .alias("cs"),
+        ).collect()
+    }
+    assert len(got) == len(vals)
+    assert got == want

@@ -210,7 +210,7 @@ ANNOTATIONS = {
 _OUTLIER_EXCHANGES = 20
 _OUTLIER_BNLJ = 2
 
-#: JVM<->Python boundary operators (same list as tools/registry_sweep.py).
+#: JVM<->Python boundary operators (tools/registry_sweep.py imports this).
 #: The committed AUDIT.md row records how many each plan carries; check
 #: mode FAILS when a query grows one (VERDICT r10 directive #8 — a change
 #: that silently adds a BatchEvalPython to any of the 506 plans should

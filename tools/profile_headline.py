@@ -17,16 +17,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kafka_streams_and_ktable_example_spark import plans  # noqa: E402
 from kafka_streams_and_ktable_example_spark.session import (  # noqa: E402
+    force,
     get_spark,
     tune_for_input,
 )
-
-
-def force(df):
-    try:
-        df.write.mode("overwrite").format("noop").save()
-    except Exception:
-        df.collect()
 
 
 def main() -> None:

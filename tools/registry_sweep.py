@@ -32,26 +32,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-# same exclusions as tools/plan_audit.py: streaming replays execute a
-# stateful job (no single plan/action), the listed maintenance queries
-# drive a write/replay job internally
-_SKIP_PREFIXES = ("streaming_",)
-_SKIP = {
-    "maintenance_cow_merge",
-    "maintenance_versioned_publish",
-    "maintenance_cascade_delete_audit",
-}
-
-_PY_NODES = (
-    "BatchEvalPython",
-    "ArrowEvalPython",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "PythonMapInArrow",
-    "MapInArrow",
-    "AggregateInPandas",
-    "FlatMapCoGroupsInPandas",
-)
+# same exclusions and Python-boundary node list as the plan audit
+from plan_audit import _PY_NODES, _SKIP, _SKIP_PREFIXES  # noqa: E402
 
 
 def main() -> int:
@@ -76,6 +58,7 @@ def main() -> int:
 
     from kafka_streams_and_ktable_example_spark import plans
     from kafka_streams_and_ktable_example_spark.session import (
+        force,
         get_spark,
         tune_for_input,
     )
@@ -87,9 +70,7 @@ def main() -> int:
     # query (observed: agg_aqp_sample_estimate read 6.6 s build / 4.2 s
     # exec cold vs 0.24 / 0.57 warm)
     try:
-        plans.REGISTRY["q1_pricing_summary"].spark(spark, sf_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
+        force(plans.REGISTRY["q1_pricing_summary"].spark(spark, sf_dir))
     except Exception:
         pass
     rows = []
@@ -114,7 +95,7 @@ def main() -> int:
             best = None
             for _ in range(draws):
                 t1 = time.time()
-                df.write.mode("overwrite").format("noop").save()
+                force(df)
                 d = time.time() - t1
                 best = d if best is None else min(best, d)
             rec["exec_s"] = round(best, 3)

@@ -49,25 +49,7 @@ os.environ.setdefault("SPARK_LOCAL_DIRS", _SCRATCH)
 atexit.register(shutil.rmtree, _SCRATCH, ignore_errors=True)
 
 from kafka_streams_and_ktable_example_spark import plans  # noqa: E402
-from kafka_streams_and_ktable_example_spark.session import get_spark  # noqa: E402
-
-
-def force(df):
-    try:
-        df.write.mode("overwrite").format("noop").save()
-    except Exception as exc:
-        # fall back to collect ONLY for frames the noop sink cannot plan
-        # (already-materialized local relations -> AnalysisException at
-        # planning time). A RUNTIME job failure must propagate: retrying
-        # via collect() re-executes the whole query — the r8 triangle
-        # disk-fill ran twice back-to-back (3071 s recorded) because the
-        # bare except here swallowed the first failure and re-ran it.
-        from pyspark.errors import AnalysisException
-
-        if isinstance(exc, AnalysisException):
-            df.collect()
-        else:
-            raise
+from kafka_streams_and_ktable_example_spark.session import force, get_spark  # noqa: E402
 
 
 def main() -> None:

@@ -23,13 +23,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 from kafka_streams_and_ktable_example_spark import plans  # noqa: E402
-from kafka_streams_and_ktable_example_spark.session import get_spark  # noqa: E402
+from kafka_streams_and_ktable_example_spark.session import force, get_spark  # noqa: E402
 
 SFS = ["0.001", "0.01", "0.1"]
-
-
-def force(df):
-    df.write.mode("overwrite").format("noop").save()
 
 
 def main() -> None:
