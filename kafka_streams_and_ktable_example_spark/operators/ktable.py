@@ -13,28 +13,50 @@ to the reference's incremental adder/subtractor reduce
 (`kafka_streams.clj:72-79`), because the aggregate is a pure function of
 the current snapshot.
 
-Scale notes (100 TB): ``latest_snapshot`` uses ``max_by`` aggregation
-rather than a window + row_number. Both shuffle once by key, but the
-aggregate form gets map-side partial aggregation (each input partition
-pre-reduces to at most one row per key before the exchange) and avoids the
-full sort a window requires — at 100 TB of changelog the shuffle volume is
-bounded by |distinct keys|, not |records|.
+Scale notes (100 TB): ``compact`` (and so ``latest_snapshot``) uses a
+``max_by`` aggregation rather than a window + row_number. Both shuffle once
+by key, but the aggregate form gets map-side partial aggregation (each
+input partition pre-reduces to at most one row per key before the
+exchange) and avoids the full sort a window requires — at 100 TB of
+changelog the shuffle volume is bounded by |distinct keys|, not |records|.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def latest_snapshot(
-    changelog: DataFrame,
-    key_col: str = "key",
-    value_col: str = "value",
-    order_col: str = "offset",
-) -> DataFrame:
+def compact(changelog: DataFrame) -> DataFrame:
+    """Latest record per key, tombstones RETAINED (unlike latest_snapshot).
+
+    This is Kafka log compaction as an aggregation: keeping the tombstone
+    marker lets a later batch's stale record (offset below the tombstone's)
+    lose the max_by race, so out-of-order delivery across batches stays
+    correct.
+    """
+    # expr-string aggregates: same tree, ~8 fewer py4j round trips (~6 ms
+    # each) per consumer build than the Column form
+    return changelog.groupBy("key").agg(
+        F.expr("max_by(`value`, `offset`) AS `value`"),
+        F.expr("max(`offset`) AS `offset`"),
+    )
+
+
+def compact_flat(df: DataFrame, payload_cols: list) -> DataFrame:
+    """``compact`` over flat columns: the latest ``payload_cols`` and
+    ``tombstone`` per key (tombstones retained), plus the max offset."""
+    packed = F.max_by(F.struct(*payload_cols, "tombstone"), "offset")
+    return (
+        df.groupBy("key")
+        .agg(packed.alias("p"), F.max("offset").alias("offset"))
+        .select("key", "p.*", "offset")
+    )
+
+
+def latest_snapshot(changelog: DataFrame) -> DataFrame:
     """O1 — changelog → table: latest value per key, tombstones dropped.
 
     Mirrors `KStreamBuilder.table` (`kafka_streams.clj:64`): the compacted
@@ -42,14 +64,8 @@ def latest_snapshot(
     (`kafka_streams.clj:21-26`). Returns one row per live key with the
     value struct's fields flattened alongside the key.
     """
-    # expr-string aggregates: same tree, ~8 fewer py4j round trips per
-    # consumer build (~6 ms each on this box — r10)
-    latest = changelog.groupBy(key_col).agg(
-        F.expr(f"max_by(`{value_col}`, `{order_col}`) AS `{value_col}`"),
-        F.expr(f"max(`{order_col}`) AS `{order_col}`"),
-    )
-    live = latest.where(f"`{value_col}` IS NOT NULL")
-    return live.select(key_col, order_col, f"{value_col}.*")
+    live = compact(changelog).where("`value` IS NOT NULL")
+    return live.select("key", "offset", "value.*")
 
 
 def grouped_reduce_view(

@@ -789,9 +789,7 @@ LIMIT 10
     tags=("streaming", "events", "topk"),
 )
 def streaming_topk_complete(spark, sf_dir):
-    import uuid as _uuid
-
-    from ..streaming.pipeline import _events_stream
+    from ..streaming.pipeline import _events_stream, drain
 
     stream = _events_stream(spark, sf_dir)
     agg = (
@@ -803,16 +801,7 @@ def streaming_topk_complete(spark, sf_dir):
         .orderBy(F.col("total_cents").desc(), "user_id")
         .limit(10)
     )
-    name = f"topk_users_{_uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @register(
@@ -1040,26 +1029,15 @@ FROM events GROUP BY event_type
     tags=("streaming", "state", "ops"),
 )
 def streaming_state_store_read(spark, sf_dir):
-    import uuid as _uuid
-
     from ..session import scratch_dir
-    from ..streaming.pipeline import _events_stream
+    from ..streaming.pipeline import _events_stream, drain
 
     # the returned DataFrame reads the checkpoint lazily, so the dir can
     # only be reclaimed after the driver is done with it — at exit
     ckpt = scratch_dir("statestore_ckpt_")
     stream = _events_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n_events"))
-    name = f"ss_read_{_uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(agg, "complete", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -2180,8 +2158,7 @@ def join_bucketed_colocated(spark, sf_dir):
     oracle=_SHAREHOLDERS_CTE_PD,
     doc="The connector's STREAMING face (Spark 4 DataSourceStreamReader in "
     "sources/pydatasource.py — partition-parallel executor reads yielding "
-    "Arrow RecordBatches; the SimpleDataSourceStreamReader remains as the "
-    "documented fallback): the same wire-format JSONL changelog is "
+    "Arrow RecordBatches): the same wire-format JSONL changelog is "
     "replayed as bounded micro-batches with durable (file, byte-pos) "
     "offsets — initialOffset/latestOffset/partitions/read, the "
     "Kafka-consumer recovery contract — then fed to the identical "
@@ -2229,11 +2206,12 @@ def sources_python_datasource_stream(spark, sf_dir):
         .load()
     )
     # PythonMicroBatchStream does not implement Trigger.AvailableNow (it
-    # silently degrades to ONE batch), so drive the default trigger and
-    # stop once every record has been served. Progress metadata (driver-
-    # side numInputRows) is the completion signal — polling the memory
-    # sink with count() rescanned the accumulated rows every 0.3 s, which
-    # alone cost seconds at the 10x replay.
+    # silently degrades to ONE batch), so this query cannot use drain():
+    # it drives the default trigger and stops once every record has been
+    # served. Progress metadata (driver-side numInputRows) is the
+    # completion signal — polling the memory sink with count() rescanned
+    # the accumulated rows every 0.3 s, which alone cost seconds at the
+    # 10x replay.
     q = (
         stream.writeStream.outputMode("append")
         .format("memory")
@@ -3794,25 +3772,23 @@ def sources_python_datasource_stream_sink(spark, sf_dir):
     import os as _os
 
     from ..operators.ktable import grouped_reduce_view, latest_snapshot
+    from ..session import scratch_dir
     from ..sources.changelog import POSITION_SCHEMA, shareholders_changelog
     from ..sources.fixture_cache import ensure_layout, fixture_dir
     from ..sources.pydatasource import register_changelog_jsonl
-    from ..streaming.pipeline import write_changelog_chunks
+    from ..streaming.pipeline import chunk_stream, write_changelog_chunks
 
     register_changelog_jsonl(spark)
 
     def _build(p: str) -> None:
         import shutil as _shutil
-        import tempfile as _tempfile
 
         _os.makedirs(p, exist_ok=True)
         cl = shareholders_changelog(spark, sf_dir)
-        chunk_dir = _tempfile.mkdtemp(prefix="stream_sink_chunks_")
+        chunk_dir = scratch_dir("stream_sink_chunks_")
         try:
             write_changelog_chunks(cl, chunk_dir, n_chunks=4)
-            wire = spark.readStream.schema(cl.schema).option(
-                "maxFilesPerTrigger", 1
-            ).parquet(chunk_dir).select(
+            wire = chunk_stream(spark, chunk_dir, cl.schema).select(
                 "key",
                 F.to_json("value").alias("value_json"),
                 "offset",

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from ..session import scratch_dir
 from ..sources.changelog import shareholders_changelog
 from ..streaming.pipeline import (
+    chunk_stream,
+    drain,
     run_events_windowed_stream,
     run_shareholders_stream,
     write_changelog_chunks,
@@ -202,8 +204,6 @@ FROM events
     tags=("streaming", "dedup", "stateful"),
 )
 def streaming_dedup_by_key(spark, sf_dir):
-    import uuid
-
     from ..streaming.pipeline import _events_stream
 
     events = _events_stream(spark, sf_dir)
@@ -212,16 +212,7 @@ def streaming_dedup_by_key(spark, sf_dir):
         .dropDuplicates(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(deduped, "append")
 
 
 @register(
@@ -241,8 +232,6 @@ FROM events
     tags=("streaming", "dedup", "stateful"),
 )
 def streaming_dedup_within_watermark(spark, sf_dir):
-    import uuid
-
     from ..streaming.pipeline import _events_stream
 
     events = _events_stream(spark, sf_dir)
@@ -251,16 +240,7 @@ def streaming_dedup_within_watermark(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    name = f"stream_dedup_ww_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(deduped, "append")
 
 
 @register(
@@ -697,6 +677,8 @@ def streaming_observe_metrics(spark, sf_dir):
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
         F.count_if(F.col("value").isNull()).alias("nulls"),
     )
+    # its own start, not drain(): the metrics live on the query handle's
+    # recentProgress, which drain does not return
     name = f"observe_{_uuid.uuid4().hex[:8]}"
     query = (
         obs.select("event_id")
@@ -790,10 +772,7 @@ FROM e GROUP BY event_type
     tags=("streaming", "agg", "parity"),
 )
 def streaming_update_mode_emissions(spark, sf_dir):
-    import uuid as _uuid
-
     from ..sources.tables import load_table
-    from ..streaming.pipeline import write_changelog_chunks
 
     ev = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("offset"), "event_type"
@@ -801,23 +780,9 @@ def streaming_update_mode_emissions(spark, sf_dir):
     chunk_dir = scratch_dir("update_mode_chunks_")
     write_changelog_chunks(ev, chunk_dir, n_chunks=4)
 
-    stream = (
-        spark.readStream.schema("offset long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
+    stream = chunk_stream(spark, chunk_dir, "offset long, event_type string")
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    name = f"upd_{_uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    sink = spark.table(name)
-    return sink.groupBy("event_type").agg(
+    return drain(agg, "update").groupBy("event_type").agg(
         F.max("n").cast("long").alias("n_events"),
         F.count("*").cast("long").alias("n_emissions"),
     )
@@ -852,7 +817,6 @@ FROM tens GROUP BY 1, 2
 def streaming_rewindowed_hourly(spark, sf_dir):
     import os
     import shutil
-    import uuid as _uuid
 
     from ..sources.tables import load_table
 
@@ -892,12 +856,9 @@ def streaming_rewindowed_hourly(spark, sf_dir):
         )
         shutil.rmtree(stage_k, ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-        .withWatermark("ts", "0 seconds")
-    )
+    stream = chunk_stream(
+        spark, chunk_dir, "ts timestamp, event_type string"
+    ).withWatermark("ts", "0 seconds")
     tens = stream.groupBy(
         F.window("ts", "10 minutes").alias("w10"), "event_type"
     ).agg(F.count("*").alias("n"))
@@ -907,17 +868,8 @@ def streaming_rewindowed_hourly(spark, sf_dir):
         F.sum("n").alias("n_events"),
         F.count("*").alias("n_subwindows"),
     )
-    name = f"rewin_{_uuid.uuid4().hex[:8]}"
-    query = (
-        hourly.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     return (
-        spark.table(name)
+        drain(hourly, "append")
         .where(F.col("event_type") != "__wm__")
         .select(
             F.col("wh.start").alias("hour_start"),
@@ -950,8 +902,6 @@ WHERE c.event_type = 'click'
     tags=("streaming", "join", "events"),
 )
 def streaming_stream_stream_left_semi(spark, sf_dir):
-    import uuid as _uuid
-
     from ..streaming.pipeline import _events_stream
 
     left = (
@@ -981,16 +931,7 @@ def streaming_stream_stream_left_semi(spark, sf_dir):
         ),
         "left_semi",
     )
-    name = f"semi_{_uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select("left_id", "user_id", "left_ts")
+    return drain(joined, "append").select("left_id", "user_id", "left_ts")
 
 
 @register(
@@ -1016,8 +957,6 @@ GROUP BY 1
     tags=("streaming", "events", "agg"),
 )
 def streaming_union_two_sources(spark, sf_dir):
-    import uuid as _uuid
-
     from ..streaming.pipeline import _events_stream
 
     clicks = _events_stream(spark, sf_dir).where(
@@ -1037,16 +976,7 @@ def streaming_union_two_sources(spark, sf_dir):
             "n_purchases"
         ),
     )
-    name = f"union2_{_uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         "hour_start",
         F.col("n_clicks").cast("long").alias("n_clicks"),
         F.col("n_purchases").cast("long").alias("n_purchases"),

@@ -25,7 +25,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -125,14 +124,8 @@ class ChangelogJsonlDataSource(DataSource):
         return ChangelogJsonlReader(self.options)
 
     def streamReader(self, schema) -> "ChangelogJsonlPartitionedStreamReader":
-        # preferred by Spark over simpleStreamReader(): partition-parallel
-        # executor reads with Arrow batches, vs driver-side tuple batches
+        # partition-parallel executor reads with Arrow batches
         return ChangelogJsonlPartitionedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> "ChangelogJsonlStreamReader":
-        # retained fallback (Spark only calls it when streamReader() is
-        # absent); its offset/replay contract is unit-tested directly
-        return ChangelogJsonlStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> "ChangelogJsonlWriter":
         return ChangelogJsonlWriter(self.options, overwrite)
@@ -261,88 +254,13 @@ def register_changelog_jsonl(spark) -> None:
     spark._changelog_jsonl_registered = True
 
 
-class ChangelogJsonlStreamReader(SimpleDataSourceStreamReader):
-    """Streaming replay of a JSONL changelog (file or directory of part
-    files) in bounded micro-batches — the Kafka-consumer shape on files:
-    durable offsets are ``{"file": idx, "pos": byte}`` into the sorted
-    file list, each ``read`` advances at most ``linesPerBatch`` records,
-    and ``readBetweenOffsets`` re-serves any committed range exactly
-    (replay/recovery contract). The simple-reader API serves batches from
-    the driver process; a partition-parallel streaming source would ship
-    ranges to executors like the batch reader — fine here because batches
-    are bounded and the payload is line-framed."""
-
-    def __init__(self, options):
-        self.path = options["path"]
-        self.per_batch = int(options.get("linesPerBatch", "500"))
-
-    def _files(self):
-        if os.path.isdir(self.path):
-            return sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if not f.startswith(("_", "."))
-            )
-        return [self.path]
-
-    @staticmethod
-    def _parse(line: bytes):
-        rec = json.loads(line)
-        value = rec.get("value")
-        return (
-            rec["key"],
-            None if value is None else json.dumps(value),
-            rec["offset"],
-        )
-
-    def initialOffset(self) -> dict:
-        return {"file": 0, "pos": 0}
-
-    def _read_from(self, start: dict, stop: dict | None, limit: int | None):
-        files = self._files()
-        i, pos = int(start["file"]), int(start["pos"])
-        out = []
-        while i < len(files):
-            if stop is not None and (i, pos) >= (int(stop["file"]), int(stop["pos"])):
-                break
-            with open(files[i], "rb") as f:
-                f.seek(pos)
-                while True:
-                    if limit is not None and len(out) >= limit:
-                        return out, {"file": i, "pos": pos}
-                    if stop is not None and (i, pos) >= (
-                        int(stop["file"]),
-                        int(stop["pos"]),
-                    ):
-                        return out, {"file": i, "pos": pos}
-                    line = f.readline()
-                    if not line:
-                        break
-                    pos = f.tell()
-                    if line.strip():
-                        out.append(self._parse(line))
-            i, pos = i + 1, 0
-        return out, {"file": i, "pos": 0}
-
-    def read(self, start: dict):
-        rows, end = self._read_from(start, None, self.per_batch)
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rows, _ = self._read_from(start, end, None)
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass  # file replay has nothing to acknowledge upstream
-
-
 class ChangelogJsonlPartitionedStreamReader(DataSourceStreamReader):
     """Partition-parallel streaming replay of a JSONL changelog — the
     full ``DataSourceStreamReader`` contract, so micro-batch ranges are
     read ON EXECUTORS as Arrow RecordBatches instead of driver-side
-    tuples (the SimpleDataSourceStreamReader path): ``latestOffset``
-    advances a durable ``{"file": idx, "pos": byte}`` cursor by at most
-    ``linesPerBatch`` records (driver-side newline count, no JSON parse),
+    tuples: ``latestOffset`` advances a durable ``{"file": idx, "pos":
+    byte}`` cursor by at most ``linesPerBatch`` records (driver-side
+    newline count, no JSON parse),
     ``partitions`` splits the offset range into per-file byte segments
     (sub-split to ``numPartitions`` under the owns-its-first-byte rule —
     every offset the planner emits is an exact line boundary, where the
@@ -357,10 +275,9 @@ class ChangelogJsonlPartitionedStreamReader(DataSourceStreamReader):
     FULLY committed gives a fresh reader no offset before its first
     ``latestOffset`` (the MicroBatchStream API passes none), so that
     first planned batch regresses to the log head — restart-heavy
-    pipelines on append sinks should use the Simple reader (Spark passes
-    it the start offset on every read) or an idempotent/keyed sink. The
-    file list is snapshotted at first use and re-listed at every
-    ``latestOffset``: names sorting after the whole snapshot extend it
+    pipelines should write to an idempotent or keyed sink, where the
+    re-served records overwrite themselves. The file list is snapshotted
+    at first use and re-listed at every ``latestOffset``: names sorting after the whole snapshot extend it
     (pure appends keep cursor indices stable, so a writer-concurrent
     stream picks up new part files), while any mutation of the
     snapshotted prefix raises loudly instead of serving wrong ranges."""

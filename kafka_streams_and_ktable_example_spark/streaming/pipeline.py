@@ -30,6 +30,12 @@ tables. The checkpointed file source replays an unfinished batch id with the
 same files, so a batch whose (query id, epoch) the manifest already holds is
 skipped, and any other batch is applied.
 
+Two helpers start and finish the streaming runs: ``replay`` drives a
+foreachBatch function over ``chunk_stream`` — a file stream reading one
+chunk file per micro-batch, the reader half of ``write_changelog_chunks``
+— and ``drain`` runs a streaming frame into a memory sink and returns the
+sink's table.
+
 Kafka wiring: swap the parquet file source for
 ``spark.readStream.format("kafka").option("subscribe", topic)`` and
 ``from_json(value)`` — the rest of the pipeline is source-agnostic
@@ -50,23 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.ktable import grouped_reduce_view
-from ..session import scratch_dir
+from ..operators.ktable import compact, compact_flat, grouped_reduce_view
+from ..session import register_scratch_dir, scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
-
-
-def compact(changelog: DataFrame) -> DataFrame:
-    """Latest record per key, tombstones RETAINED (unlike latest_snapshot).
-
-    This is Kafka log compaction as an aggregation: keeping the tombstone
-    marker lets a later batch's stale record (offset below the tombstone's)
-    lose the max_by race, so out-of-order delivery across batches stays
-    correct.
-    """
-    return changelog.groupBy("key").agg(
-        F.max_by("value", "offset").alias("value"),
-        F.max("offset").alias("offset"),
-    )
 
 
 _SMALL_SHUFFLE_KEYS = (
@@ -171,22 +163,37 @@ class IvmJob:
                     shutil.rmtree(self._dir(name, old), ignore_errors=True)
 
 
+def chunk_stream(spark: SparkSession, chunk_dir: str, schema) -> DataFrame:
+    """File stream over ``chunk_dir`` reading one chunk file per
+    micro-batch. The file source takes files in (mtime, path) order, which
+    ``write_changelog_chunks`` pins to chunk order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(chunk_dir)
+    )
+
+
+def drain(df: DataFrame, mode: str, checkpoint: str | None = None) -> DataFrame:
+    """Run the streaming ``df`` to completion into a memory sink — output
+    mode ``mode``, availableNow trigger, checkpoint in ``checkpoint`` (a
+    temporary one when None) — and return the sink's table."""
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return df.sparkSession.table(name)
+
+
 def replay(
-    spark: SparkSession,
-    chunk_dir: str,
-    schema,
-    process,
-    work_dir: str,
-    max_files_per_trigger: int = 1,
+    spark: SparkSession, chunk_dir: str, schema, process, work_dir: str
 ) -> None:
-    """readStream → foreachBatch(process) → availableNow over a directory
-    of chunk files, ``max_files_per_trigger`` files per micro-batch, at the
-    small per-batch shuffle width; the checkpoint lives in ``work_dir``."""
+    """chunk_stream → foreachBatch(process) → availableNow at the small
+    per-batch shuffle width; the checkpoint lives in ``work_dir``."""
     with small_shuffle(spark):
         (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(chunk_dir)
+            chunk_stream(spark, chunk_dir, schema)
             .writeStream.foreachBatch(process)
             .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
             .trigger(availableNow=True)
@@ -224,10 +231,7 @@ class ChangelogStreamJob(IvmJob):
 
 
 def run_shareholders_stream(
-    spark: SparkSession,
-    changelog_dir: str,
-    work_dir: str | None = None,
-    max_files_per_trigger: int = 1,
+    spark: SparkSession, changelog_dir: str, work_dir: str | None = None
 ) -> DataFrame:
     """Run the reference's full topology incrementally over a directory of
     changelog parquet chunk files (each file ≈ a Kafka micro-batch), then
@@ -237,14 +241,7 @@ def run_shareholders_stream(
     build is lazy, .start() executes, the view is queryable afterwards.
     """
     job = ChangelogStreamJob(spark, work_dir or scratch_dir("ktable_stream_"))
-    replay(
-        spark,
-        changelog_dir,
-        CHANGELOG_SCHEMA,
-        job.process_batch,
-        job.work_dir,
-        max_files_per_trigger,
-    )
+    replay(spark, changelog_dir, CHANGELOG_SCHEMA, job.process_batch, job.work_dir)
     return grouped_reduce_view(
         job.snapshot(),
         predicate=F.col("exchange") == "NASDAQ",
@@ -278,16 +275,7 @@ def run_events_windowed_stream(
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    name = f"events_windowed_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.col("window.start").alias("window_start"),
         "event_type",
         "n_events",
@@ -407,16 +395,7 @@ def run_stream_stream_join(
             f"AND right_ts <= left_ts + {within}"
         ),
     ).select("left_id", "right_id", "user_id", "left_ts", "right_ts")
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 def run_events_session_stream(
@@ -451,16 +430,19 @@ def run_events_session_stream(
     # scale sweeps (millions of session rows per complete-mode rewrite).
     # Same args within a session → same dir, and mode("overwrite") below
     # already handles staleness; the app id keeps concurrent sessions
-    # apart, leaving at most one dir per (session, args) ever on disk.
+    # apart, leaving at most one dir per (session, args) on disk, and the
+    # scratch registration removes it at cleanup or process exit.
     import hashlib
     import tempfile
 
     arg_key = hashlib.md5(
         f"{sf_dir}|{gap}|{watermark}".encode()
     ).hexdigest()[:12]
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"events_sessions_{spark.sparkContext.applicationId}_{arg_key}",
+    out_dir = register_scratch_dir(
+        os.path.join(
+            tempfile.gettempdir(),
+            f"events_sessions_{spark.sparkContext.applicationId}_{arg_key}",
+        )
     )
     os.makedirs(out_dir, exist_ok=True)
 
@@ -513,16 +495,7 @@ def run_stream_static_enrich(
     enriched = events.join(
         cust, F.col("user_id") == F.col("c_custkey")
     ).select("event_id", "user_id", "c_name", "c_mktsegment", "value")
-    name = f"stream_static_{uuid.uuid4().hex[:8]}"
-    query = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return drain(enriched, "append")
 
 
 def run_stream_stream_left_outer(
@@ -587,16 +560,7 @@ def run_stream_stream_left_outer(
         .where(F.col("left_ts") < F.lit(closed_before).cast("timestamp"))
         .select("left_id", "user_id", "right_id")
     )
-    name = f"stream_outer_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 class AggIvmJob(IvmJob):
@@ -709,16 +673,6 @@ class JoinIvmJob(IvmJob):
         "o_orderkey long, o_custkey long, o_totalprice double, c_mktsegment string"
     )
 
-    @staticmethod
-    def _compact_flat(df: DataFrame, payload_cols: list) -> DataFrame:
-        """Latest record per key over flat columns, tombstones retained."""
-        packed = F.max_by(F.struct(*payload_cols, "tombstone"), "offset")
-        return (
-            df.groupBy("key")
-            .agg(packed.alias("p"), F.max("offset").alias("offset"))
-            .select("key", "p.*", "offset")
-        )
-
     def update(self, batch_df: DataFrame) -> dict:
         # sever the streaming lineage: a streaming-sourced plan disables AQE
         # for every derived job, so the tiny per-batch deltas would shuffle
@@ -740,10 +694,10 @@ class JoinIvmJob(IvmJob):
         # the delta-join terms AND the view write — without the cache the
         # triple write re-runs the compaction lineage three times per batch
         a_new = self._persist(
-            self._compact_flat(a_state.unionByName(da), ["o_custkey", "o_totalprice"])
+            compact_flat(a_state.unionByName(da), ["o_custkey", "o_totalprice"])
         )
         b_new = self._persist(
-            self._compact_flat(b_state.unionByName(db), ["c_mktsegment"])
+            compact_flat(b_state.unionByName(db), ["c_mktsegment"])
         )
 
         a_keys = da.select("key").distinct()
@@ -977,16 +931,7 @@ def run_stream_stream_full_outer(
             "right_id",
         )
     )
-    name = f"stream_fouter_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 def run_events_distinct_users_chained(
@@ -1013,16 +958,7 @@ def run_events_distinct_users_chained(
     agg = dd.groupBy(F.window("ts", "1 hour")).agg(
         F.count("*").alias("distinct_users")
     )
-    name = f"events_distinct_users_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "append").select(
         F.col("window.start").alias("window_start"), "distinct_users"
     )
 
@@ -1085,26 +1021,13 @@ def run_watermark_late_drop(
         os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
     shutil.rmtree(staging)
 
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
     agg = (
-        stream.withWatermark("ts", watermark)
+        chunk_stream(spark, replay_dir, events.schema)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count("*").alias("n_events"))
     )
-    name = f"events_late_drop_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "append").select(
         F.col("window.start").alias("window_start"), "n_events"
     )
 
@@ -1332,15 +1255,7 @@ class CogroupIvmJob(IvmJob):
         " n_positions long, n_nasdaq long"
     )
 
-    @staticmethod
-    def _compact_flat(df: DataFrame) -> DataFrame:
-        payload = ["src", "o_custkey", "o_totalprice", "client", "exchange"]
-        packed = F.max_by(F.struct(*payload, "tombstone"), "offset")
-        return (
-            df.groupBy("key")
-            .agg(packed.alias("p"), F.max("offset").alias("offset"))
-            .select("key", "p.*", "offset")
-        )
+    PAYLOAD = ["src", "o_custkey", "o_totalprice", "client", "exchange"]
 
     @staticmethod
     def _client_of(df: DataFrame):
@@ -1357,7 +1272,9 @@ class CogroupIvmJob(IvmJob):
         view = self.view()
 
         keys = batch_df.select("key").distinct()
-        merged = self._persist(self._compact_flat(state.unionByName(batch_df)))
+        merged = self._persist(
+            compact_flat(state.unionByName(batch_df), self.PAYLOAD)
+        )
 
         # clients the batch touches: previous owners of changed keys (the
         # only place a tombstoned key's client survives) + new values
@@ -1435,7 +1352,7 @@ def run_tvd_drift_monitor(
     spark: SparkSession, sf_dir: str, n_chunks: int = 6
 ) -> DataFrame:
     """Streaming data-drift monitor: the events table replays as
-    ``n_chunks`` event_id-ordered micro-batches (maxFilesPerTrigger=1 over
+    ``n_chunks`` event_id-ordered micro-batches (``replay`` over
     mtime-pinned chunk files), and every batch's 10-bucket value histogram
     is scored against the FIRST batch's reference histogram with total
     variation distance — the drift metric that needs no logarithms, so the

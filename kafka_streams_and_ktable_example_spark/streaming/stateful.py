@@ -27,18 +27,17 @@ foreachBatch variant's full-snapshot rewrite.
 from __future__ import annotations
 
 import json
-import os
-import uuid
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
+from .pipeline import chunk_stream, drain, small_shuffle
 
 _OUTPUT_SCHEMA = "client string, positions string, seq long"
 _STATE_SCHEMA = "state_json string, seq long"
@@ -84,12 +83,34 @@ def _update_client(
     )
 
 
-def run_shareholders_stateful(
-    spark: SparkSession,
-    changelog_dir: str,
-    work_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
+def position_deltas(stream: DataFrame) -> DataFrame:
+    """The changelog as per-client position deltas: (client, key, id,
+    exchange, offset, tomb) — the input of the per-client state operators
+    here and in ``tws.py``."""
+    return stream.select(
+        F.split(F.col("key"), ":::").getItem(0).alias("client"),
+        "key",
+        F.col("value.id").alias("id"),
+        F.col("value.exchange").alias("exchange"),
+        "offset",
+        F.col("value").isNull().alias("tomb"),
+    )
+
+
+def last_emission_per_client(updates: DataFrame) -> DataFrame:
+    """The final view from an update-mode sink holding one row per
+    (client, batch): each client's highest-``seq`` emission, empty sets
+    dropped."""
+    w = Window.partitionBy("client").orderBy(F.desc("seq"))
+    return (
+        updates.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .where(F.col("positions") != "")
+        .select("client", "positions")
+    )
+
+
+def run_shareholders_stateful(spark: SparkSession, changelog_dir: str) -> DataFrame:
     """Replay a directory of changelog chunk files through the stateful
     operator; return the final view (client, positions-csv), groups with
     empty sets dropped.
@@ -99,51 +120,17 @@ def run_shareholders_stateful(
     interactive query would observe after the replay
     (`kafka_streams.clj:83-89`).
     """
-    work_dir = work_dir or scratch_dir("ktable_stateful_")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-
-    stream = (
-        spark.readStream.schema(CHANGELOG_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changelog_dir)
-    )
-    deltas = stream.select(
-        F.split(F.col("key"), ":::").getItem(0).alias("client"),
-        "key",
-        F.col("value.id").alias("id"),
-        F.col("value.exchange").alias("exchange"),
-        "offset",
-        F.col("value").isNull().alias("tomb"),
-    )
-    updates = deltas.groupBy("client").applyInPandasWithState(
+    stream = chunk_stream(spark, changelog_dir, CHANGELOG_SCHEMA)
+    updates = position_deltas(stream).groupBy("client").applyInPandasWithState(
         _update_client,
         outputStructType=_OUTPUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"shareholders_stateful_{uuid.uuid4().hex[:8]}"
-    query = (
-        updates.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return last_emission_per_client(
+        drain(updates, "update", scratch_dir("ktable_stateful_"))
     )
-    query.awaitTermination()
-
-    from pyspark.sql import Window as W
-
-    all_updates = spark.table(name)
-    w = W.partitionBy("client").orderBy(F.desc("seq"))
-    final = (
-        all_updates.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .where(F.col("positions") != "")
-        .select("client", "positions")
-    )
-    return final
 
 
 # -- custom sessionization with EVENT-TIME TIMEOUT ---------------------------
@@ -207,10 +194,7 @@ def _session_fold(key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
 
 
 def run_sessionize_with_timeout(
-    spark: SparkSession,
-    chunk_dir: str,
-    schema: str,
-    work_dir: str | None = None,
+    spark: SparkSession, chunk_dir: str, schema: str
 ) -> DataFrame:
     """Replay event chunks through the timeout-driven sessionizer.
 
@@ -219,20 +203,11 @@ def run_sessionize_with_timeout(
     watermark (SPARK-40925 two-watermark model), so sentinel #1 advances
     the watermark and sentinel #2's processing fires the timeouts that
     flush every still-open real session."""
-    work_dir = work_dir or scratch_dir("session_timeout_")
-    # stateful streaming disables AQE; 32 shuffle partitions × 8 batches is
-    # pure scheduling overhead at replay scale — pin a small count (state
-    # store count is fixed per checkpoint anyway)
-    from .pipeline import small_shuffle
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
+    events = (
+        chunk_stream(spark, chunk_dir, schema)
+        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+        .withWatermark("ts", "1 second")
     )
-    events = stream.withColumn(
-        "ts", F.timestamp_micros(F.col("ts_us"))
-    ).withWatermark("ts", "1 second")
     sessions = events.groupBy("user_id").applyInPandasWithState(
         _session_fold,
         outputStructType=_SESSION_OUTPUT,
@@ -240,15 +215,8 @@ def run_sessionize_with_timeout(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"sessions_timeout_{uuid.uuid4().hex[:8]}"
+    # stateful streaming disables AQE; 32 shuffle partitions × 8 batches is
+    # pure scheduling overhead at replay scale — pin a small count (state
+    # store count is fixed per checkpoint anyway)
     with small_shuffle(spark):
-        (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(name)
+        return drain(sessions, "append", scratch_dir("session_timeout_"))

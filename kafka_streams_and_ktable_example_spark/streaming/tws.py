@@ -27,14 +27,11 @@ installed it runs as-is (same semantics, same oracle, as
 
 from __future__ import annotations
 
-import os
-import uuid
 from typing import Any, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
@@ -42,6 +39,8 @@ from pyspark.sql.streaming.stateful_processor import (
 
 from ..session import scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
+from .pipeline import chunk_stream, drain
+from .stateful import last_emission_per_client, position_deltas
 
 _OUTPUT_SCHEMA = "client string, positions string, seq long"
 _ROCKSDB_PROVIDER = (
@@ -102,17 +101,9 @@ class ShareholdersProcessor(StatefulProcessor):
         pass
 
 
-def run_shareholders_tws(
-    spark: SparkSession,
-    changelog_dir: str,
-    work_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
+def run_shareholders_tws(spark: SparkSession, changelog_dir: str) -> DataFrame:
     """Replay changelog chunks through transformWithStateInPandas; return
     the final view (client, positions-csv), empty-set groups dropped."""
-    work_dir = work_dir or scratch_dir("ktable_tws_")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-
     prev_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
@@ -120,35 +111,15 @@ def run_shareholders_tws(
         "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
     )
     try:
-        stream = (
-            spark.readStream.schema(CHANGELOG_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(changelog_dir)
-        )
-        deltas = stream.select(
-            F.split(F.col("key"), ":::").getItem(0).alias("client"),
-            "key",
-            F.col("value.id").alias("id"),
-            F.col("value.exchange").alias("exchange"),
-            "offset",
-            F.col("value").isNull().alias("tomb"),
-        )
+        stream = chunk_stream(spark, changelog_dir, CHANGELOG_SCHEMA)
+        deltas = position_deltas(stream)
         updates = deltas.groupBy("client").transformWithStateInPandas(
             statefulProcessor=ShareholdersProcessor(),
             outputStructType=_OUTPUT_SCHEMA,
             outputMode="Update",
             timeMode="None",
         )
-        name = f"shareholders_tws_{uuid.uuid4().hex[:8]}"
-        query = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        all_updates = drain(updates, "update", scratch_dir("ktable_tws_"))
     finally:
         if prev_provider is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -156,14 +127,4 @@ def run_shareholders_tws(
             spark.conf.set(
                 "spark.sql.streaming.stateStore.providerClass", prev_provider
             )
-
-    from pyspark.sql import Window as W
-
-    all_updates = spark.table(name)
-    w = W.partitionBy("client").orderBy(F.desc("seq"))
-    return (
-        all_updates.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .where(F.col("positions") != "")
-        .select("client", "positions")
-    )
+    return last_emission_per_client(all_updates)

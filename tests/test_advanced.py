@@ -429,12 +429,12 @@ def test_datasource_reads_directory_of_part_files():
 
 
 def test_partitioned_stream_reader_offsets_partitions_arrow():
-    """The partition-parallel stream reader (the one spark.readStream
-    actually uses, since streamReader() wins over simpleStreamReader):
-    latestOffset advances by at most linesPerBatch lines, offsets are
-    exact line boundaries, partitions() covers each (start, end) range
-    exactly once across files, and read() yields Arrow batches whose
-    union replays every record exactly once."""
+    """The connector's stream reader: latestOffset advances by at most
+    linesPerBatch lines, offsets are exact line boundaries, partitions()
+    covers each (start, end) range exactly once across files (an empty
+    part file and a _SUCCESS marker included), read() yields Arrow batches
+    whose union replays every record exactly once, and the terminal offset
+    is stable."""
     import json
     import os
     import tempfile
@@ -450,6 +450,7 @@ def test_partitioned_stream_reader_offsets_partitions_arrow():
             for _ in range(n):
                 i = next(offsets)
                 f.write(json.dumps({"key": f"k{i}", "value": i, "offset": i}) + "\n")
+    open(os.path.join(d, "_SUCCESS"), "w").close()  # writer marker: skipped
 
     r = ChangelogJsonlPartitionedStreamReader(
         {"path": d, "linesPerBatch": "5", "numPartitions": "3"}
@@ -471,6 +472,7 @@ def test_partitioned_stream_reader_offsets_partitions_arrow():
         n_batches += 1
     assert sorted(x["offset"] for x in got) == list(range(19))
     assert n_batches == 4  # ceil(19/5): bounded micro-batches
+    assert r.latestOffset() == start  # the terminal offset is stable
     # replaying a committed range is deterministic (restart recovery)
     s0 = {"file": 0, "pos": 0}
     e0 = r._advance(s0, 5)
@@ -1559,50 +1561,6 @@ def test_wav_stereo_roundtrip_and_contract():
     bad[fmt_off + 12 : fmt_off + 14] = struct.pack("<H", 2)  # block_align=2
     with _pytest.raises(ValueError, match="block_align"):
         decode_wav(bytes(bad))
-
-
-def test_stream_reader_offsets_and_replay():
-    """SimpleDataSourceStreamReader contract: bounded batches advance
-    durable (file, pos) offsets across part files; readBetweenOffsets
-    re-serves any committed range exactly (recovery); the terminal offset
-    yields an empty batch."""
-    import json
-    import os
-    import tempfile
-
-    from kafka_streams_and_ktable_example_spark.sources.pydatasource import (
-        ChangelogJsonlStreamReader,
-    )
-
-    d = tempfile.mkdtemp(prefix="cl_stream_")
-    for fi, n in [(0, 7), (1, 0), (2, 5)]:  # includes an empty part file
-        with open(os.path.join(d, f"part-{fi:05d}.txt"), "w") as f:
-            for k in range(n):
-                f.write(
-                    json.dumps({"key": f"{fi}:{k}", "value": k, "offset": fi * 100 + k})
-                    + "\n"
-                )
-    open(os.path.join(d, "_SUCCESS"), "w").close()
-
-    r = ChangelogJsonlStreamReader({"path": d, "linesPerBatch": "4"})
-    off = r.initialOffset()
-    offs, seen = [off], []
-    while True:
-        rows, nxt = r.read(off)
-        rows = list(rows)
-        if not rows:
-            break
-        seen += rows
-        off = nxt
-        offs.append(off)
-    assert [x[2] for x in seen] == [0, 1, 2, 3, 4, 5, 6, 200, 201, 202, 203, 204]
-    assert len(offs) == 4  # 12 records / 4 per batch
-    # exact replay of the middle committed range
-    rep = list(r.readBetweenOffsets(offs[1], offs[3]))
-    assert [x[2] for x in rep] == [x[2] for x in seen[4:12]]
-    # terminal offset is stable: reading past EOF yields nothing
-    rows, final = r.read(off)
-    assert list(rows) == [] and r.read(final)[1] == final
 
 
 def test_wav_codec_roundtrip_and_corruption():

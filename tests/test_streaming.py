@@ -1195,3 +1195,23 @@ def test_cogroup_ivm_golden_scenario(spark, tmp_path):
     for epoch, (rows, expected) in enumerate(steps):
         job.process_batch(spark.createDataFrame(rows, schema), epoch)
         assert view_rows() == expected, f"after batch {epoch}"
+
+
+def test_events_session_stream_dir_is_removed_by_scratch_cleanup(spark, sf_dir):
+    """The session-window query writes to a fixed per-(session, args) dir
+    under the temp dir; it is registered scratch, so cleanup removes it
+    instead of leaving one dir behind per Spark application."""
+    import glob
+
+    from kafka_streams_and_ktable_example_spark import plans
+    from kafka_streams_and_ktable_example_spark.session import cleanup_scratch_dirs
+
+    query = plans.REGISTRY["streaming_events_session_window"]
+    assert query.spark(spark, sf_dir).count() > 0
+    pattern = os.path.join(
+        tempfile.gettempdir(),
+        f"events_sessions_{spark.sparkContext.applicationId}_*",
+    )
+    assert glob.glob(pattern)
+    cleanup_scratch_dirs()
+    assert not glob.glob(pattern)
