@@ -11,9 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-HEX_DIGITS = "0123456789abcdef"
-
-
 def tokens(text: Column | str) -> Column:
     """Whitespace tokenization (documents are single-space separated)."""
     return F.split(text if isinstance(text, Column) else F.col(text), " ")
@@ -76,8 +73,3 @@ def cosine(a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | 
     na = norm_a if norm_a is not None else l2_norm(a)
     nb = norm_b if norm_b is not None else l2_norm(b)
     return dot(a, b) / (na * nb)
-
-
-def hex_digit_value(c: Column) -> Column:
-    """hex char -> 0..15 via strpos — portable to any SQL engine."""
-    return F.instr(F.lit(HEX_DIGITS), c) - 1

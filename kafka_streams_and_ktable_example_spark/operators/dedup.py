@@ -73,23 +73,6 @@ def _exploded_shingles(
 # --------------------------------------------------------------------------
 
 
-def exact_duplicates(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Group by content hash; return one row per duplicate group with the
-    keeper (min id) and the group size. Groups of size 1 are excluded."""
-    fp = F.md5(F.col(text_col))
-    return (
-        df.select(F.col(id_col), fp.alias("content_fp"))
-        .groupBy("content_fp")
-        .agg(
-            F.min(id_col).alias("keeper_id"),
-            F.count("*").alias("group_size"),
-        )
-        .where(F.col("group_size") > 1)
-    )
-
-
 def dedup_exact(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -118,14 +118,6 @@ def scan_view(view: DataFrame) -> list[tuple]:
     return sorted((r[0], list(r[1])) for r in rows)
 
 
-def register_view(view: DataFrame, name: str = "us_share_holders") -> None:
-    """Register the materialized view for interactive queries — the analog
-    of opening store "us-share-holders" (`kafka_streams.clj:83-89`), except
-    Spark's view is global rather than per-instance-partial (SURVEY §3.3).
-    """
-    view.createOrReplaceTempView(name)
-
-
 def snapshot_asof(changelog: DataFrame, max_offset) -> DataFrame:
     """Point-in-time KTable: the latest-per-key live snapshot as of a log
     position — time travel over the changelog. The reference can only scan

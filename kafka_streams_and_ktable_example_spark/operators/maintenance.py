@@ -1,73 +1,21 @@
-"""Table maintenance: small-file compaction and layout stats.
+"""Table maintenance: Z-order layout, copy-on-write merge, file manifests
+and versioned snapshots.
 
 The reference has no storage layer at all (its state lives in Kafka
 Streams' RocksDB stores, `kafka_streams.clj:64,80`); on Spark the
-equivalent operational concern is parquet table hygiene: every streaming
-micro-batch / IVM swap / partitioned append produces files, and a 100 TB
-table drowning in KB-sized files turns every scan into a file-listing and
-task-scheduling bottleneck. Compaction rewrites a directory to
-target-sized files — the OPTIMIZE of Delta/Iceberg, expressed on plain
-parquet.
+equivalent operational concern is parquet table hygiene: how a table is
+laid out for skip-scans, how it is updated in place and how a
+multi-table version is published atomically — the OPTIMIZE / MERGE /
+VACUUM of Delta/Iceberg, expressed on plain parquet.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def parquet_layout_stats(spark: SparkSession, path: str) -> dict:
-    """Files / bytes / rows of a parquet directory — the numbers that decide
-    whether compaction is due (driver-side listing; at cluster scale this
-    comes from the table format's manifest instead)."""
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_rows = spark.read.parquet(path).count()
-    return {
-        "n_files": len(files),
-        "total_bytes": total,
-        "n_rows": n_rows,
-        "avg_file_bytes": total // max(1, len(files)),
-    }
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: list | None = None,
-) -> dict:
-    """Rewrite a parquet directory into ~target-sized files, atomically.
-
-    File count = ceil(current_bytes / target). ``sort_cols`` optionally
-    re-clusters rows during the rewrite (sortWithinPartitions — keeps
-    min/max row-group stats tight so later scans prune, without a global
-    sort). The rewrite is a read→write of the same data, so it is safe to
-    re-run and idempotent in content; the directory swap is atomic at the
-    rename level (same contract as the streaming state stores).
-    """
-    before = parquet_layout_stats(spark, path)
-    n_files = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
-    df: DataFrame = spark.read.parquet(path)
-    compacted = df.repartition(n_files)
-    if sort_cols:
-        compacted = compacted.sortWithinPartitions(*sort_cols)
-    tmp = tempfile.mkdtemp(prefix="compact_", dir=os.path.dirname(path.rstrip("/")))
-    compacted.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = parquet_layout_stats(spark, path)
-    return {"before": before, "after": after}
 
 
 def zorder_value(cols: list, n_bits: int = 8, cuts_per_col: list | None = None):
@@ -137,24 +85,6 @@ def write_zordered(
         .parquet(path)
     )
     return path
-
-
-def rowgroup_spans(path: str, column: str) -> list:
-    """(min, max) per parquet row group for ``column`` — the stats a
-    skip-scan consults; tight spans = prunable layout."""
-    import pyarrow.parquet as pq
-
-    spans = []
-    for fname in sorted(os.listdir(path)):
-        if not fname.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, fname)).metadata
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == column and col.statistics is not None:
-                    spans.append((col.statistics.min, col.statistics.max))
-    return spans
 
 
 def cow_merge(

@@ -789,9 +789,9 @@ LIMIT 10
     tags=("streaming", "events", "topk"),
 )
 def streaming_topk_complete(spark, sf_dir):
-    from ..streaming.pipeline import _events_stream, drain
+    from ..streaming.pipeline import drain, events_stream
 
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     agg = (
         stream.groupBy("user_id")
         .agg(
@@ -1030,12 +1030,12 @@ FROM events GROUP BY event_type
 )
 def streaming_state_store_read(spark, sf_dir):
     from ..session import scratch_dir
-    from ..streaming.pipeline import _events_stream, drain
+    from ..streaming.pipeline import drain, events_stream
 
     # the returned DataFrame reads the checkpoint lazily, so the dir can
     # only be reclaimed after the driver is done with it — at exit
     ckpt = scratch_dir("statestore_ckpt_")
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n_events"))
     drain(agg, "complete", ckpt)
     state = spark.read.format("statestore").load(ckpt)

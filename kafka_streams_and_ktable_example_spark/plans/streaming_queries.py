@@ -1,22 +1,45 @@
-"""M2 streaming queries in the registry.
+"""Streaming queries in the registry.
 
-Both run a real Structured Streaming query to completion (availableNow
-trigger) and return the final materialized result — and both carry a FULL
-SQL oracle, because snapshot-recompute ≡ incremental maintenance
-(SURVEY §4.3): the streaming pipeline's final state must equal the batch
-recompute DuckDB performs.
+Each function below is one query's whole definition, with its constants
+written inline next to its oracle; the machinery it runs on (stream
+sources, replay and drain runners, the IVM jobs) lives in
+``streaming/pipeline.py``. Every query runs a real Structured Streaming
+query to completion (availableNow trigger) and returns the final result,
+and every one carries a FULL SQL oracle, because snapshot-recompute ≡
+incremental maintenance (SURVEY §4.3): the streaming pipeline's final
+state must equal the batch recompute DuckDB performs.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 
-from ..session import scratch_dir
-from ..sources.changelog import shareholders_changelog
+from ..session import register_scratch_dir, scratch_dir
+from ..sources.changelog import (
+    cogroup_multiplexed_changelog,
+    multiplexed_join_changelog,
+    orders_changelog,
+    shareholders_changelog,
+)
+from ..sources.fixture_cache import ensure_layout, fixture_dir
+from ..sources.tables import load_table
 from ..streaming.pipeline import (
+    AggIvmJob,
+    CogroupIvmJob,
+    JoinIvmJob,
+    Scd2IvmJob,
+    SetIvmJob,
+    StreamingLshDedupJob,
+    append_replay_file,
     chunk_stream,
     drain,
-    run_events_windowed_stream,
+    events_stream,
+    replay,
+    replay_changelog,
     run_shareholders_stream,
     write_changelog_chunks,
 )
@@ -74,6 +97,29 @@ def streaming_shareholders_stateful(spark, sf_dir):
     return run_shareholders_stateful(spark, chunk_dir)
 
 
+def _events_windowed(spark, sf_dir, slide):
+    """Per-type count and value total over 1-hour event-time windows,
+    sliding by ``slide`` (tumbling when None), with a 10-minute watermark.
+    The memory sink is the O6 'queryable store' analog for streams; in
+    complete mode its final contents equal the batch aggregate."""
+    win = F.window("ts", "1 hour", slide) if slide else F.window("ts", "1 hour")
+    agg = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(win, "event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+    )
+    return drain(agg, "complete").select(
+        F.col("window.start").alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_value",
+    )
+
+
 @register(
     "streaming_events_tumbling",
     oracle="""
@@ -89,7 +135,7 @@ GROUP BY 1, 2
     tags=("streaming", "events"),
 )
 def streaming_events_tumbling(spark, sf_dir):
-    return run_events_windowed_stream(spark, sf_dir)
+    return _events_windowed(spark, sf_dir, None)
 
 
 @register(
@@ -114,7 +160,43 @@ GROUP BY 1, 2
     tags=("streaming", "events"),
 )
 def streaming_events_sliding(spark, sf_dir):
-    return run_events_windowed_stream(spark, sf_dir, slide="30 minutes")
+    return _events_windowed(spark, sf_dir, "30 minutes")
+
+
+def _interval_join(spark, sf_dir, how):
+    """Clicks joined (``how``) to the same user's purchases at most 1 hour
+    after them. Both sides carry a 2-hour event-time watermark, so Spark
+    bounds the join state: rows older than watermark + interval are
+    evicted, the mechanism that keeps state finite on an unbounded stream
+    (and that releases an outer join's null rows)."""
+    left = (
+        events_stream(spark, sf_dir)
+        .where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("left_id"),
+            "user_id",
+            F.col("ts").alias("left_ts"),
+        )
+        .withWatermark("left_ts", "2 hours")
+    )
+    right = (
+        events_stream(spark, sf_dir)
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("right_id"),
+            F.col("user_id").alias("r_user_id"),
+            F.col("ts").alias("right_ts"),
+        )
+        .withWatermark("right_ts", "2 hours")
+    )
+    return left.join(
+        right,
+        F.expr(
+            "user_id = r_user_id AND right_ts >= left_ts "
+            "AND right_ts <= left_ts + INTERVAL 1 HOUR"
+        ),
+        how,
+    )
 
 
 @register(
@@ -134,9 +216,10 @@ WHERE c.event_type = 'click' AND p.event_type = 'purchase'
     tags=("streaming", "join", "events"),
 )
 def streaming_stream_stream_join(spark, sf_dir):
-    from ..streaming.pipeline import run_stream_stream_join
-
-    return run_stream_stream_join(spark, sf_dir)
+    joined = _interval_join(spark, sf_dir, "inner").select(
+        "left_id", "right_id", "user_id", "left_ts", "right_ts"
+    )
+    return drain(joined, "append")
 
 
 @register(
@@ -153,9 +236,19 @@ WHERE event_type = 'purchase'
     tags=("streaming", "join", "events"),
 )
 def streaming_stream_static_enrich(spark, sf_dir):
-    from ..streaming.pipeline import run_stream_static_enrich
-
-    return run_stream_static_enrich(spark, sf_dir)
+    events = events_stream(spark, sf_dir).where(
+        F.col("event_type") == "purchase"
+    )
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_mktsegment"
+    )
+    # no forced broadcast: customer scales with SF; the per-micro-batch
+    # planner broadcasts it while it fits and falls back to a shuffle
+    # join once it doesn't.
+    enriched = events.join(
+        cust, F.col("user_id") == F.col("c_custkey")
+    ).select("event_id", "user_id", "c_name", "c_mktsegment", "value")
+    return drain(enriched, "append")
 
 
 @register(
@@ -185,9 +278,56 @@ FROM sessions GROUP BY user_id, sid
     tags=("streaming", "events", "stateful"),
 )
 def streaming_events_session_window(spark, sf_dir):
-    from ..streaming.pipeline import run_events_session_stream
+    agg = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+    )
+    # Complete-mode output goes through foreachBatch to a parquet dir
+    # (last batch overwrites), NOT the memory sink: the memory sink
+    # collects every result row to the DRIVER, which at the 100x replica
+    # (60M events → millions of sessions) exceeded
+    # spark.driver.maxResultSize (measured r6: 1037 MiB of task results).
+    # foreachBatch writes the same complete-mode relation executor-side —
+    # identical rows at any scale, driver memory stays flat.
+    #
+    # The dir is fixed per (application, sf_dir), NOT mkdtemp-per-call:
+    # the returned DataFrame reads it lazily so rmtree here is unsafe, and
+    # a fresh dir per invocation accumulated unbounded temp disk across
+    # replica-scale sweeps (millions of session rows per complete-mode
+    # rewrite). mode("overwrite") below handles staleness; the app id
+    # keeps concurrent sessions apart, and the scratch registration
+    # removes the dir at cleanup or process exit.
+    sf_key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    out_dir = register_scratch_dir(
+        os.path.join(
+            tempfile.gettempdir(),
+            f"events_sessions_{spark.sparkContext.applicationId}_{sf_key}",
+        )
+    )
+    os.makedirs(out_dir, exist_ok=True)
 
-    return run_events_session_stream(spark, sf_dir)
+    def sink(batch_df, _bid):
+        # complete mode re-emits the whole result each batch: overwrite
+        batch_df.write.mode("overwrite").parquet(out_dir)
+
+    (
+        agg.writeStream.outputMode("complete")
+        .foreachBatch(sink)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return spark.read.parquet(out_dir).select(
+        F.col("session_window.start").alias("session_start"),
+        "user_id",
+        "n_events",
+        "total_value",
+    )
 
 
 @register(
@@ -204,11 +344,9 @@ FROM events
     tags=("streaming", "dedup", "stateful"),
 )
 def streaming_dedup_by_key(spark, sf_dir):
-    from ..streaming.pipeline import _events_stream
-
-    events = _events_stream(spark, sf_dir)
     deduped = (
-        events.withWatermark("ts", "2 hours")
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
         .dropDuplicates(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
@@ -232,11 +370,9 @@ FROM events
     tags=("streaming", "dedup", "stateful"),
 )
 def streaming_dedup_within_watermark(spark, sf_dir):
-    from ..streaming.pipeline import _events_stream
-
-    events = _events_stream(spark, sf_dir)
     deduped = (
-        events.withWatermark("ts", "2 hours")
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
@@ -267,9 +403,24 @@ FROM l LEFT JOIN r
     tags=("streaming", "join", "events"),
 )
 def streaming_stream_stream_left_outer(spark, sf_dir):
-    from ..streaming.pipeline import run_stream_stream_left_outer
-
-    return run_stream_stream_left_outer(spark, sf_dir)
+    # Determinism contract: output is restricted to the CLOSED region
+    # left_ts < 2024-01-29 — lefts old enough that the final watermark
+    # (min over both sides of max event time − delay) provably passed
+    # their match window, so every unmatched one has emitted its null row
+    # by query end. The cutoff must be applied AFTER the join, not on the
+    # left source: filtering the source would shrink the left side's max
+    # event time and hold the global watermark back below the cutoff
+    # itself, permanently trapping the newest lefts in state (found
+    # empirically; the reference's unwindowed KTable never hits this —
+    # compaction semantics make late data trivially correct,
+    # SURVEY §2 Table B).
+    cutoff = F.lit("2024-01-29 00:00:00").cast("timestamp")
+    joined = (
+        _interval_join(spark, sf_dir, "left_outer")
+        .where(F.col("left_ts") < cutoff)
+        .select("left_id", "user_id", "right_id")
+    )
+    return drain(joined, "append")
 
 
 @register(
@@ -308,9 +459,14 @@ FROM latest GROUP BY o_custkey
     tags=("streaming", "ktable", "stateful", "parity"),
 )
 def streaming_orders_rollup_ivm(spark, sf_dir):
-    from ..streaming.pipeline import run_orders_rollup_ivm
-
-    return run_orders_rollup_ivm(spark, sf_dir)
+    job = replay_changelog(
+        spark, AggIvmJob, orders_changelog(spark, sf_dir), 8, "orders_ivm"
+    )
+    return job.view().select(
+        "o_custkey",
+        "n_orders",
+        F.round("total_price", 2).alias("total_price"),
+    )
 
 
 @register(
@@ -361,9 +517,14 @@ FROM olatest o JOIN clatest c ON o.o_custkey = c.key
     tags=("streaming", "ktable", "stateful", "join", "parity"),
 )
 def streaming_join_view_ivm(spark, sf_dir):
-    from ..streaming.pipeline import run_join_view_ivm
-
-    return run_join_view_ivm(spark, sf_dir)
+    cl = multiplexed_join_changelog(spark, sf_dir)
+    job = replay_changelog(spark, JoinIvmJob, cl, 8, "join_ivm")
+    return job.view_df().select(
+        "o_orderkey",
+        "o_custkey",
+        F.round("o_totalprice", 2).alias("o_totalprice"),
+        "c_mktsegment",
+    )
 
 
 @register(
@@ -414,9 +575,12 @@ WHERE NOT EXISTS (
     tags=("streaming", "dedup", "lsh", "pipeline"),
 )
 def streaming_lsh_dedup_incremental(spark, sf_dir):
-    from ..streaming.pipeline import run_streaming_lsh_dedup
-
-    return run_streaming_lsh_dedup(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", F.col("doc_id").alias("offset")
+    )
+    return replay_changelog(
+        spark, StreamingLshDedupJob, docs, 6, "lshdedup"
+    ).kept_df()
 
 
 @register(
@@ -451,9 +615,31 @@ WHERE (right_id IS NULL AND left_ts < TIMESTAMP '2024-01-29 00:00:00')
     tags=("streaming", "join", "events"),
 )
 def streaming_stream_stream_full_outer(spark, sf_dir):
-    from ..streaming.pipeline import run_stream_stream_full_outer
-
-    return run_stream_stream_full_outer(spark, sf_dir)
+    # Determinism contract (the left-outer join's, applied per side): an
+    # unmatched left needs left_ts closed, an unmatched right needs
+    # right_ts closed, a matched pair is keyed by its left. The filter
+    # sits AFTER the join: filtering a source would hold the global
+    # watermark back and trap rows in state.
+    cutoff = F.lit("2024-01-29 00:00:00").cast("timestamp")
+    closed = (
+        (F.col("right_id").isNull() & (F.col("left_ts") < cutoff))
+        | (F.col("left_id").isNull() & (F.col("right_ts") < cutoff))
+        | (
+            F.col("left_id").isNotNull()
+            & F.col("right_id").isNotNull()
+            & (F.col("left_ts") < cutoff)
+        )
+    )
+    joined = (
+        _interval_join(spark, sf_dir, "full_outer")
+        .where(closed)
+        .select(
+            "left_id",
+            F.coalesce("user_id", "r_user_id").alias("user_id"),
+            "right_id",
+        )
+    )
+    return drain(joined, "append")
 
 
 @register(
@@ -478,9 +664,18 @@ GROUP BY 1
     tags=("streaming", "events", "dedup"),
 )
 def streaming_distinct_users_hourly(spark, sf_dir):
-    from ..streaming.pipeline import run_events_distinct_users_chained
-
-    return run_events_distinct_users_chained(spark, sf_dir)
+    deduped = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
+        .withColumn("hr", F.date_trunc("hour", "ts"))
+        .dropDuplicates(["user_id", "hr"])
+    )
+    agg = deduped.groupBy(F.window("ts", "1 hour")).agg(
+        F.count("*").alias("distinct_users")
+    )
+    return drain(agg, "append").select(
+        F.col("window.start").alias("window_start"), "distinct_users"
+    )
 
 
 @register(
@@ -505,19 +700,53 @@ WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= wm2.w
 GROUP BY 1
 """,
     doc="Watermark late-data DROP semantics, observable and exactly "
-    "predictable: events replayed as two micro-batches (all non-error "
-    "first, then the out-of-order error events). An error row survives iff "
+    "predictable: events replayed as three micro-batches (all non-error "
+    "first, then the error events at/after the resulting watermark, then "
+    "the out-of-order late errors). An error row survives iff "
     "its hour-window was still open at the batch-2 watermark (window end > "
     "max(on-time ts) - 10 min); append mode then emits windows whose end "
     "passed the final watermark. The oracle states both rules "
     "arithmetically — the eviction contract that bounds window state on an "
-    "unbounded stream.",
+    "unbounded stream, and one the reference never had to define (its "
+    "KTable pipeline is unwindowed latest-offset-wins, "
+    "kafka_streams.clj:60-81).",
     tags=("streaming", "events", "watermark"),
 )
 def streaming_watermark_late_drop(spark, sf_dir):
-    from ..streaming.pipeline import run_watermark_late_drop
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    # Three batches, not two: Spark's stateful operators use TWO watermarks
+    # (SPARK-40925) — late-input filtering uses the PREVIOUS batch's
+    # watermark, eviction the current one — so the on-time batch must land
+    # two triggers before the late data for the drop to be observable.
+    # Batch 1 (errors at/after the batch-0 watermark, often empty) advances
+    # the query one trigger, which (a) emits every window closed by the
+    # batch-0 watermark and (b) arms the late filter for batch 2.
+    on_time = events.where(F.col("event_type") != "error")
+    wm1 = (
+        on_time.agg((F.max("ts") - F.expr("INTERVAL 10 minutes")).alias("w"))
+        .collect()[0]
+        .w
+    )
+    is_error = F.col("event_type") == "error"
+    replay_dir = scratch_dir("events_late_replay_")
+    for part in (
+        on_time,
+        events.where(is_error & (F.col("ts") >= F.lit(wm1))),
+        events.where(is_error & (F.col("ts") < F.lit(wm1))),
+    ):
+        append_replay_file(part, replay_dir)
 
-    return run_watermark_late_drop(spark, sf_dir)
+    agg = (
+        chunk_stream(spark, replay_dir, events.schema)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour"))
+        .agg(F.count("*").alias("n_events"))
+    )
+    return drain(agg, "append").select(
+        F.col("window.start").alias("window_start"), "n_events"
+    )
 
 
 @register(
@@ -558,11 +787,6 @@ FROM s GROUP BY user_id, sid
     tags=("streaming", "stateful", "session"),
 )
 def streaming_session_timeout_custom(spark, sf_dir):
-    import os
-    import shutil
-
-    from ..sources.tables import load_table
-    from ..streaming.pipeline import write_changelog_chunks
     from ..streaming.stateful import GAP_US, run_sessionize_with_timeout
 
     ev = (
@@ -577,18 +801,8 @@ def streaming_session_timeout_custom(spark, sf_dir):
     far = ev.agg(F.max("ts_us")).first()[0] + 10 * GAP_US
     schema = "user_id long, ts_us long, offset long"
     for k in range(2):
-        stage = scratch_dir("session_sentinel_")
-        spark.createDataFrame(
-            [(-1, far + k * 1_000_000, far + k * 1_000_000)], schema
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            f for f in sorted(os.listdir(stage)) if f.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(stage, part),
-            os.path.join(chunk_dir, f"9{k:02d}-sentinel.parquet"),
-        )
-        shutil.rmtree(stage, ignore_errors=True)
+        sentinel = (-1, far + k * 1_000_000, far + k * 1_000_000)
+        append_replay_file(spark.createDataFrame([sentinel], schema), chunk_dir)
 
     out = run_sessionize_with_timeout(spark, chunk_dir, schema)
     return out.where(F.col("user_id") >= 0).select(
@@ -638,9 +852,18 @@ FROM hist WHERE NOT tombstone
     tags=("streaming", "ktable", "stateful", "scd2", "parity"),
 )
 def streaming_scd2_incremental(spark, sf_dir):
-    from ..streaming.pipeline import run_scd2_incremental
-
-    return run_scd2_incremental(spark, sf_dir)
+    job = replay_changelog(
+        spark, Scd2IvmJob, orders_changelog(spark, sf_dir), 6, "scd2_ivm"
+    )
+    return job.view().select(
+        "key",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        "valid_from",
+        "valid_to",
+        F.col("valid_to").isNull().alias("is_current"),
+    )
 
 
 @register(
@@ -668,9 +891,7 @@ FROM events
 def streaming_observe_metrics(spark, sf_dir):
     import uuid as _uuid
 
-    from ..streaming.pipeline import _events_stream
-
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     obs = stream.observe(
         "audit",
         F.count(F.lit(1)).alias("rows"),
@@ -735,9 +956,12 @@ GROUP BY client
     tags=("streaming", "ktable", "stateful", "parity"),
 )
 def streaming_shareholders_set_ivm(spark, sf_dir):
-    from ..streaming.pipeline import run_shareholders_set_ivm
-
-    return run_shareholders_set_ivm(spark, sf_dir)
+    job = replay_changelog(
+        spark, SetIvmJob, shareholders_changelog(spark, sf_dir), 6, "set_ivm"
+    )
+    return job.view().select(
+        "client", F.concat_ws(",", "positions").alias("positions")
+    )
 
 
 @register(
@@ -772,8 +996,6 @@ FROM e GROUP BY event_type
     tags=("streaming", "agg", "parity"),
 )
 def streaming_update_mode_emissions(spark, sf_dir):
-    from ..sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("offset"), "event_type"
     )
@@ -815,50 +1037,29 @@ FROM tens GROUP BY 1, 2
     tags=("streaming", "window", "agg"),
 )
 def streaming_rewindowed_hourly(spark, sf_dir):
-    import os
-    import shutil
-
-    from ..sources.tables import load_table
-
     # chained stateful aggregations are append-only (complete mode is
     # rejected), and append emits a window only once the watermark passes
     # its end — so the replay carries THREE far-future sentinel batches
-    # (named to sort after the data file) that push the watermark beyond
+    # (appended after the data file) that push the watermark beyond
     # every real window through BOTH stateful tiers (the SPARK-40925
     # two-watermark model needs the extra batches), exactly the
     # streaming_session_timeout_custom pattern. Sentinel windows are
     # dropped from the result by their marker type.
+    schema = "ts timestamp, event_type string"
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     chunk_dir = scratch_dir("rewin_chunks_")
-    stage = os.path.join(chunk_dir, "_stage")
-    ev.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(
-        f for f in sorted(os.listdir(stage)) if f.endswith(".parquet")
-    )
-    os.rename(
-        os.path.join(stage, part), os.path.join(chunk_dir, "000-data.parquet")
-    )
-    shutil.rmtree(stage, ignore_errors=True)
+    append_replay_file(ev, chunk_dir)
     far = ev.agg(
         (F.max("ts") + F.expr("INTERVAL 240 HOURS")).alias("t")
     ).collect()[0]["t"]
-    for k in range(3):
-        stage_k = os.path.join(chunk_dir, f"_stage{k}")
-        spark.createDataFrame(
-            [(far, "__wm__")], "ts timestamp, event_type string"
-        ).coalesce(1).write.mode("overwrite").parquet(stage_k)
-        pk = next(
-            f for f in sorted(os.listdir(stage_k)) if f.endswith(".parquet")
+    for _ in range(3):
+        append_replay_file(
+            spark.createDataFrame([(far, "__wm__")], schema), chunk_dir
         )
-        os.rename(
-            os.path.join(stage_k, pk),
-            os.path.join(chunk_dir, f"9{k:02d}-sentinel.parquet"),
-        )
-        shutil.rmtree(stage_k, ignore_errors=True)
 
-    stream = chunk_stream(
-        spark, chunk_dir, "ts timestamp, event_type string"
-    ).withWatermark("ts", "0 seconds")
+    stream = chunk_stream(spark, chunk_dir, schema).withWatermark(
+        "ts", "0 seconds"
+    )
     tens = stream.groupBy(
         F.window("ts", "10 minutes").alias("w10"), "event_type"
     ).agg(F.count("*").alias("n"))
@@ -902,35 +1103,7 @@ WHERE c.event_type = 'click'
     tags=("streaming", "join", "events"),
 )
 def streaming_stream_stream_left_semi(spark, sf_dir):
-    from ..streaming.pipeline import _events_stream
-
-    left = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("left_id"),
-            "user_id",
-            F.col("ts").alias("left_ts"),
-        )
-        .withWatermark("left_ts", "2 hours")
-    )
-    right = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("right_ts"),
-        )
-        .withWatermark("right_ts", "2 hours")
-    )
-    joined = left.join(
-        right,
-        F.expr(
-            "user_id = r_user_id AND right_ts >= left_ts "
-            "AND right_ts <= left_ts + INTERVAL 1 HOUR"
-        ),
-        "left_semi",
-    )
+    joined = _interval_join(spark, sf_dir, "left_semi")
     return drain(joined, "append").select("left_id", "user_id", "left_ts")
 
 
@@ -957,12 +1130,10 @@ GROUP BY 1
     tags=("streaming", "events", "agg"),
 )
 def streaming_union_two_sources(spark, sf_dir):
-    from ..streaming.pipeline import _events_stream
-
-    clicks = _events_stream(spark, sf_dir).where(
+    clicks = events_stream(spark, sf_dir).where(
         F.col("event_type") == "click"
     )
-    purchases = _events_stream(spark, sf_dir).where(
+    purchases = events_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
     both = clicks.unionByName(purchases).withWatermark("ts", "10 minutes")
@@ -1033,9 +1204,8 @@ FROM ordagg o FULL OUTER JOIN posagg p ON o.client = p.client
     tags=("streaming", "ktable", "stateful", "parity"),
 )
 def streaming_cogroup_ivm(spark, sf_dir):
-    from ..streaming.pipeline import run_cogroup_ivm
-
-    return run_cogroup_ivm(spark, sf_dir)
+    cl = cogroup_multiplexed_changelog(spark, sf_dir)
+    return replay_changelog(spark, CogroupIvmJob, cl, 6, "cogroup_ivm").view()
 
 
 @register(
@@ -1073,8 +1243,7 @@ SELECT CAST(filled.chunk AS BIGINT) AS batch_id,
 FROM filled JOIN ref ON filled.bucket = ref.bucket
 GROUP BY filled.chunk
 """,
-    doc="Streaming data-drift monitor "
-    "(streaming/pipeline.py::run_tvd_drift_monitor): six event_id-"
+    doc="Streaming data-drift monitor: six event_id-"
     "ordered micro-batches each score their 10-bucket value histogram "
     "against the first batch's reference via total variation distance "
     "— TVD instead of PSI because |p-q| needs no logarithm, making "
@@ -1088,6 +1257,48 @@ GROUP BY filled.chunk
     tags=("streaming", "qa", "drift", "ops"),
 )
 def streaming_tvd_drift_monitor(spark, sf_dir):
-    from ..streaming.pipeline import run_tvd_drift_monitor
+    ev = load_table(spark, sf_dir, "events").select(
+        F.col("event_id").alias("offset"),
+        F.expr(
+            "least(greatest(coalesce("
+            "CAST(round(value * 100) AS BIGINT), 0), 0) div 2000, 9)"
+        ).alias("bucket"),
+    )
+    # the 6-chunk split is cached per sf_dir and reused across runs; the
+    # oracle's chunk arithmetic assumes the same 6 chunks
+    replay_dir = fixture_dir(
+        "events_tvd_chunks6", sf_dir, mtime_of="events.parquet"
+    )
 
-    return run_tvd_drift_monitor(spark, sf_dir)
+    def _write(path: str) -> None:
+        write_changelog_chunks(ev, path, n_chunks=6)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    ensure_layout(replay_dir, _write)
+
+    results: list[tuple[int, int, int]] = []
+    ref: dict = {}
+
+    def _score(df, epoch_id: int) -> None:
+        rows = df.groupBy("bucket").count().collect()  # bounded: <=10 rows
+        hist = {int(r["bucket"]): int(r["count"]) for r in rows}
+        n = sum(hist.values())
+        if not ref:
+            ref["h"], ref["n"] = hist, n
+        q, qn = ref["h"], ref["n"]
+        tvd = (
+            sum(
+                abs(
+                    hist.get(b, 0) * 1_000_000 // n
+                    - q.get(b, 0) * 1_000_000 // qn
+                )
+                for b in range(10)
+            )
+            // 2
+        )
+        results.append((int(epoch_id), n, tvd))
+
+    replay(spark, replay_dir, "bucket long", _score, scratch_dir("tvd_drift_"))
+    return spark.createDataFrame(
+        sorted(results), "batch_id long, n_events long, tvd_e6 long"
+    )

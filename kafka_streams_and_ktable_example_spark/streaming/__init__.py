@@ -1,13 +1,5 @@
 """Structured Streaming drivers for the engine's incremental semantics."""
 
-from .pipeline import (
-    ChangelogStreamJob,
-    run_shareholders_stream,
-    run_events_windowed_stream,
-)
+from .pipeline import ChangelogStreamJob, run_shareholders_stream
 
-__all__ = [
-    "ChangelogStreamJob",
-    "run_shareholders_stream",
-    "run_events_windowed_stream",
-]
+__all__ = ["ChangelogStreamJob", "run_shareholders_stream"]

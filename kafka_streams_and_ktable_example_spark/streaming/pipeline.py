@@ -1,4 +1,4 @@
-"""Incremental (M2) drivers: the reference's topology under Structured Streaming.
+"""Streaming machinery: the reference's topology under Structured Streaming.
 
 The reference consumes a compacted Kafka topic and maintains state
 incrementally (`our-service/src/our_service/kafka_streams.clj:60-96`). Here
@@ -30,11 +30,20 @@ tables. The checkpointed file source replays an unfinished batch id with the
 same files, so a batch whose (query id, epoch) the manifest already holds is
 skipped, and any other batch is applied.
 
-Two helpers start and finish the streaming runs: ``replay`` drives a
-foreachBatch function over ``chunk_stream`` — a file stream reading one
-chunk file per micro-batch, the reader half of ``write_changelog_chunks``
-— and ``drain`` runs a streaming frame into a memory sink and returns the
-sink's table.
+The machinery every streaming query in ``plans/`` runs on:
+
+- sources: ``chunk_stream`` (a file stream reading one chunk file per
+  micro-batch) over the files of ``write_changelog_chunks`` (an
+  offset-ordered split) and ``append_replay_file`` (one frame appended as
+  the next micro-batch); ``events_stream`` (events.parquet as a stream);
+- runners: ``replay`` drives a foreachBatch function over
+  ``chunk_stream`` at a small per-batch shuffle width; ``replay_changelog``
+  replays a changelog through a new ``IvmJob``; ``drain`` runs a streaming
+  frame into a memory sink and returns the sink's table;
+- state: ``IvmJob`` and its jobs — ``ChangelogStreamJob`` (the
+  reference's topology, run by ``run_shareholders_stream``),
+  ``AggIvmJob``, ``JoinIvmJob``, ``StreamingLshDedupJob``,
+  ``Scd2IvmJob``, ``SetIvmJob`` and ``CogroupIvmJob``.
 
 Kafka wiring: swap the parquet file source for
 ``spark.readStream.format("kafka").option("subscribe", topic)`` and
@@ -57,7 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.ktable import compact, compact_flat, grouped_reduce_view
-from ..session import register_scratch_dir, scratch_dir
+from ..session import scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
 
 
@@ -251,38 +260,6 @@ def run_shareholders_stream(
     )
 
 
-def run_events_windowed_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Streaming tumbling-window aggregate over the events table replayed
-    through the file source, with an event-time watermark; results land in
-    a memory sink (the O6 'queryable store' analog for streams).
-
-    Complete output mode → final contents equal the batch aggregate, which
-    is the oracle.
-    """
-    events = _events_stream(spark, sf_dir)
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    return drain(agg, "complete").select(
-        F.col("window.start").alias("window_start"),
-        "event_type",
-        "n_events",
-        "total_value",
-    )
-
-
 def write_changelog_chunks(
     changelog: DataFrame, out_dir: str, n_chunks: int = 8
 ) -> str:
@@ -327,11 +304,31 @@ def write_changelog_chunks(
     return out_dir
 
 
-def _events_stream(spark: SparkSession, sf_dir: str):
+def append_replay_file(df: DataFrame, chunk_dir: str) -> None:
+    """Append ``df`` to ``chunk_dir`` as the next micro-batch: one parquet
+    file whose mtime is pinned one second after the newest file already
+    there, so ``chunk_stream`` replays it after them whatever the wall
+    clock says."""
+    os.makedirs(chunk_dir, exist_ok=True)
+    files = [f for f in os.listdir(chunk_dir) if f.endswith(".parquet")]
+    mtime = 1 + max(
+        (os.path.getmtime(os.path.join(chunk_dir, f)) for f in files),
+        default=1_600_000_000 - 1,
+    )
+    staging = os.path.join(chunk_dir, "_staging")
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    part = next(f for f in sorted(os.listdir(staging)) if f.endswith(".parquet"))
+    dst = os.path.join(chunk_dir, f"{len(files):03d}-append.parquet")
+    os.rename(os.path.join(staging, part), dst)
+    os.utime(dst, (mtime, mtime))
+    shutil.rmtree(staging)
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file-source stream (ts normalized to TimestampType).
 
     The explicit stream schema must match the file's physical ts type, which
-    differs across driver testdata generations (TIMESTAMP(NANOS) → long vs
+    differs across testdata generations (TIMESTAMP(NANOS) → long vs
     TIMESTAMP(MICROS) → TIMESTAMP_NTZ) — introspect the batch schema first.
     """
     from ..sources.tables import events_schema_and_ts_normalizer
@@ -349,218 +346,6 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     if not os.path.exists(link):
         os.symlink(path, link)
     return norm(spark.readStream.schema(schema).parquet(stream_dir))
-
-
-def run_stream_stream_join(
-    spark: SparkSession,
-    sf_dir: str,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    within: str = "INTERVAL 1 HOUR",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner interval join: right-type events within `within`
-    after a left-type event by the same user.
-
-    Both sides carry event-time watermarks so Spark bounds the join state
-    (left rows older than watermark+interval are evicted — the mechanism
-    that keeps state finite on an unbounded stream). Inner join output is
-    exactly the set of qualifying pairs, so the availableNow replay equals
-    the batch self-join oracle.
-    """
-    left = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == left_type)
-        .select(
-            F.col("event_id").alias("left_id"),
-            F.col("user_id"),
-            F.col("ts").alias("left_ts"),
-        )
-        .withWatermark("left_ts", watermark)
-    )
-    right = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == right_type)
-        .select(
-            F.col("event_id").alias("right_id"),
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("right_ts"),
-        )
-        .withWatermark("right_ts", watermark)
-    )
-    joined = left.join(
-        right,
-        F.expr(
-            f"user_id = r_user_id AND right_ts >= left_ts "
-            f"AND right_ts <= left_ts + {within}"
-        ),
-    ).select("left_id", "right_id", "user_id", "left_ts", "right_ts")
-    return drain(joined, "append")
-
-
-def run_events_session_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming sessionization with session_window: per-user sessions close
-    after `gap` of inactivity; the final merged sessions equal the batch
-    gap-based sessionization.
-
-    Complete-mode output goes through foreachBatch to a parquet dir
-    (last batch overwrites), NOT the memory sink: the memory sink
-    collects every result row to the DRIVER, which at the 100x replica
-    (60M events → millions of sessions) exceeded
-    spark.driver.maxResultSize (measured r6: 1037 MiB of task results).
-    foreachBatch writes the same complete-mode relation executor-side —
-    identical rows at any scale, driver memory stays flat."""
-    events = _events_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    # fixed per-(session, args) dir, NOT mkdtemp-per-call: the returned
-    # DataFrame reads out_dir lazily so rmtree here is unsafe, and a fresh
-    # dir per invocation accumulated unbounded temp disk across replica-
-    # scale sweeps (millions of session rows per complete-mode rewrite).
-    # Same args within a session → same dir, and mode("overwrite") below
-    # already handles staleness; the app id keeps concurrent sessions
-    # apart, leaving at most one dir per (session, args) on disk, and the
-    # scratch registration removes it at cleanup or process exit.
-    import hashlib
-    import tempfile
-
-    arg_key = hashlib.md5(
-        f"{sf_dir}|{gap}|{watermark}".encode()
-    ).hexdigest()[:12]
-    out_dir = register_scratch_dir(
-        os.path.join(
-            tempfile.gettempdir(),
-            f"events_sessions_{spark.sparkContext.applicationId}_{arg_key}",
-        )
-    )
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batch_df, _bid):
-        # complete mode re-emits the whole result each batch: overwrite
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    query = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir).select(
-        F.col("session_window.start").alias("session_start"),
-        "user_id",
-        "n_events",
-        "total_value",
-    )
-
-
-def run_stream_static_enrich(
-    spark: SparkSession,
-    sf_dir: str,
-    event_type: str = "purchase",
-) -> DataFrame:
-    """Stream-static enrichment join: each streaming event picks up its
-    customer dimension row (the per-record lookup every event pipeline
-    does before sinking).
-
-    The static side is a plain batch DataFrame — Spark re-plans it per
-    micro-batch as a broadcast hash join, so the stream side never
-    shuffles and no join state accumulates (unlike stream-stream joins,
-    stream-static needs no watermark: the dimension is a table, not a
-    stream). Append-mode output over an availableNow replay equals the
-    batch join, which is the oracle.
-    """
-    from ..sources.tables import load_table
-
-    events = _events_stream(spark, sf_dir).where(
-        F.col("event_type") == event_type
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    # no forced broadcast: customer scales with SF; the per-micro-batch
-    # planner broadcasts it while it fits and falls back to a shuffle
-    # join once it doesn't.
-    enriched = events.join(
-        cust, F.col("user_id") == F.col("c_custkey")
-    ).select("event_id", "user_id", "c_name", "c_mktsegment", "value")
-    return drain(enriched, "append")
-
-
-def run_stream_stream_left_outer(
-    spark: SparkSession,
-    sf_dir: str,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    within: str = "INTERVAL 1 HOUR",
-    watermark: str = "2 hours",
-    closed_before: str = "2024-01-29 00:00:00",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every left-type event, paired
-    with each right-type event by the same user within `within` after it —
-    or a null right side if none ever arrives.
-
-    The null emission is the stateful part: an unmatched left row emits
-    only once the watermark passes ``left_ts + within`` (before that, a
-    match could still arrive), so Spark holds it in join state and
-    releases the null row from a later micro-batch's state eviction.
-
-    Determinism contract: output is restricted to the CLOSED region
-    ``left_ts < closed_before`` — lefts old enough that the final
-    watermark (min over both sides of max event time − delay) provably
-    passed their match window, so every unmatched one has emitted its
-    null row by query end. The cutoff must be applied AFTER the join, not
-    on the left source: filtering the source would shrink the left side's
-    max event time and hold the global watermark back below the cutoff
-    itself, permanently trapping the newest lefts in state (found
-    empirically; the reference's unwindowed KTable never hits this —
-    compaction semantics make late data trivially correct,
-    SURVEY §2 Table B).
-    """
-    left = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == left_type)
-        .select(
-            F.col("event_id").alias("left_id"),
-            F.col("user_id"),
-            F.col("ts").alias("left_ts"),
-        )
-        .withWatermark("left_ts", watermark)
-    )
-    right = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == right_type)
-        .select(
-            F.col("event_id").alias("right_id"),
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("right_ts"),
-        )
-        .withWatermark("right_ts", watermark)
-    )
-    joined = (
-        left.join(
-            right,
-            F.expr(
-                f"user_id = r_user_id AND right_ts >= left_ts "
-                f"AND right_ts <= left_ts + {within}"
-            ),
-            "left_outer",
-        )
-        .where(F.col("left_ts") < F.lit(closed_before).cast("timestamp"))
-        .select("left_id", "user_id", "right_id")
-    )
-    return drain(joined, "append")
 
 
 class AggIvmJob(IvmJob):
@@ -628,25 +413,6 @@ class AggIvmJob(IvmJob):
 
     def view(self) -> DataFrame:
         return self.read("agg_state", self.AGG_SCHEMA)
-
-
-def run_orders_rollup_ivm(
-    spark: SparkSession,
-    sf_dir: str,
-    n_chunks: int = 8,
-) -> DataFrame:
-    """The per-customer orders rollup maintained INCREMENTALLY over an
-    8-micro-batch changelog replay (adder/subtractor deltas, no snapshot
-    recompute) — final aggregate state must equal the batch recompute."""
-    from ..sources.changelog import orders_changelog
-
-    cl = orders_changelog(spark, sf_dir)
-    job = replay_changelog(spark, AggIvmJob, cl, n_chunks, "orders_ivm")
-    return job.view().select(
-        "o_custkey",
-        "n_orders",
-        F.round("total_price", 2).alias("total_price"),
-    )
 
 
 class JoinIvmJob(IvmJob):
@@ -751,26 +517,6 @@ class JoinIvmJob(IvmJob):
         return self.read("view_state", self.VIEW_SCHEMA)
 
 
-def run_join_view_ivm(
-    spark: SparkSession,
-    sf_dir: str,
-    n_chunks: int = 8,
-) -> DataFrame:
-    """Replay the multiplexed orders+customer CDC stream in n_chunks
-    micro-batches through JoinIvmJob; return the final maintained join view
-    (must equal the batch join of the two latest snapshots)."""
-    from ..sources.changelog import multiplexed_join_changelog
-
-    cl = multiplexed_join_changelog(spark, sf_dir)
-    job = replay_changelog(spark, JoinIvmJob, cl, n_chunks, "join_ivm")
-    return job.view_df().select(
-        "o_orderkey",
-        "o_custkey",
-        F.round("o_totalprice", 2).alias("o_totalprice"),
-        "c_mktsegment",
-    )
-
-
 class StreamingLshDedupJob(IvmJob):
     """Incremental corpus dedup: each arriving micro-batch of documents is
     checked against the accumulated LSH band index and only novel docs
@@ -844,192 +590,6 @@ class StreamingLshDedupJob(IvmJob):
 
     def kept_df(self) -> DataFrame:
         return self.read("kept", self.KEPT_SCHEMA)
-
-
-def run_streaming_lsh_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    n_chunks: int = 6,
-) -> DataFrame:
-    """Replay the documents table in doc_id-ordered micro-batches through
-    StreamingLshDedupJob; return the surviving (deduped) document set."""
-    from ..sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", F.col("doc_id").alias("offset")
-    )
-    return replay_changelog(
-        spark, StreamingLshDedupJob, docs, n_chunks, "lshdedup"
-    ).kept_df()
-
-
-def run_stream_stream_full_outer(
-    spark: SparkSession,
-    sf_dir: str,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    within: str = "INTERVAL 1 HOUR",
-    watermark: str = "2 hours",
-    closed_before: str = "2024-01-29 00:00:00",
-) -> DataFrame:
-    """Stream-stream FULL OUTER interval join: clicks paired with purchases
-    within the interval, plus null-padded rows for clicks that never
-    convert AND purchases with no preceding click — both null emissions
-    driven by watermark state eviction on their own side.
-
-    Determinism contract (same reasoning as run_stream_stream_left_outer,
-    applied per side): output restricted to the watermark-closed region via
-    a per-shape filter — an unmatched left needs ``left_ts`` closed, an
-    unmatched right needs ``right_ts`` closed, a matched pair is keyed by
-    its left. The filter sits AFTER the join (filtering a source would
-    hold the global watermark back and trap rows in state); the batch
-    oracle applies the identical CASE filter to an unrestricted full join.
-    """
-    left = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == left_type)
-        .select(
-            F.col("event_id").alias("left_id"),
-            F.col("user_id"),
-            F.col("ts").alias("left_ts"),
-        )
-        .withWatermark("left_ts", watermark)
-    )
-    right = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == right_type)
-        .select(
-            F.col("event_id").alias("right_id"),
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("right_ts"),
-        )
-        .withWatermark("right_ts", watermark)
-    )
-    cutoff = F.lit(closed_before).cast("timestamp")
-    closed = (
-        (F.col("right_id").isNull() & (F.col("left_ts") < cutoff))
-        | (F.col("left_id").isNull() & (F.col("right_ts") < cutoff))
-        | (
-            F.col("left_id").isNotNull()
-            & F.col("right_id").isNotNull()
-            & (F.col("left_ts") < cutoff)
-        )
-    )
-    joined = (
-        left.join(
-            right,
-            F.expr(
-                f"user_id = r_user_id AND right_ts >= left_ts "
-                f"AND right_ts <= left_ts + {within}"
-            ),
-            "full_outer",
-        )
-        .where(closed)
-        .select(
-            "left_id",
-            F.coalesce("user_id", "r_user_id").alias("user_id"),
-            "right_id",
-        )
-    )
-    return drain(joined, "append")
-
-
-def run_events_distinct_users_chained(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Exact distinct-users-per-hour as CHAINED stateful operators (Spark
-    3.5+ multi-stateful support): event-time dropDuplicates on
-    (user_id, hour) feeds a downstream tumbling-window count — the
-    standard decomposition because COUNT(DISTINCT) is not a streaming
-    aggregate. Both operators share the event-time watermark; dedup state
-    expires per hour bucket, and append mode emits each window once its
-    end passes the final watermark (max event time - watermark). The
-    oracle reproduces that closure rule arithmetically, so the append-mode
-    result is exactly predictable from the batch data.
-    """
-    events = _events_stream(spark, sf_dir)
-    dd = (
-        events.withWatermark("ts", watermark)
-        .withColumn("hr", F.date_trunc("hour", "ts"))
-        .dropDuplicates(["user_id", "hr"])
-    )
-    agg = dd.groupBy(F.window("ts", "1 hour")).agg(
-        F.count("*").alias("distinct_users")
-    )
-    return drain(agg, "append").select(
-        F.col("window.start").alias("window_start"), "distinct_users"
-    )
-
-
-def run_watermark_late_drop(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Late-data DROP semantics made observable: replay events as THREE
-    micro-batches — every non-'error' event, then errors at/after the
-    resulting watermark, then the out-of-order late errors. By then the
-    stream's watermark has advanced to max(on-time ts) - delay, and the
-    windowed aggregation drops a late row iff its window's state was
-    already evicted (window end <= watermark); late rows into still-open
-    windows are accepted. Hourly append-mode counts therefore equal the
-    batch recomputation that includes an 'error' row only when its
-    hour-window end exceeds the on-time watermark — the oracle states that
-    rule arithmetically.
-
-    This is the contract the reference never had to define (its KTable
-    pipeline is unwindowed latest-offset-wins, `our-service/src/our_service/
-    kafka_streams.clj:60-81`); on an unbounded 100 TB stream it is what
-    bounds window state.
-    """
-    from ..sources.tables import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    replay_dir = scratch_dir("events_late_replay_")
-    staging = os.path.join(replay_dir, "_staging")
-    # Three batches, not two: Spark's stateful operators use TWO watermarks
-    # (SPARK-40925) — late-input filtering uses the PREVIOUS batch's
-    # watermark, eviction the current one — so the on-time batch must land
-    # two triggers before the late data for the drop to be observable.
-    # Batch 1 (errors at/after the batch-0 watermark, often empty) advances
-    # the query one trigger, which (a) emits every window closed by the
-    # batch-0 watermark and (b) arms the late filter for batch 2.
-    wm1 = (
-        events.where(F.col("event_type") != "error")
-        .agg((F.max("ts") - F.expr(f"INTERVAL {watermark}")).alias("w"))
-        .collect()[0]
-        .w
-    )
-    on_time = events.where(F.col("event_type") != "error")
-    errors_fresh = events.where(
-        (F.col("event_type") == "error") & (F.col("ts") >= F.lit(wm1))
-    )
-    errors_late = events.where(
-        (F.col("event_type") == "error") & (F.col("ts") < F.lit(wm1))
-    )
-    for i, part in enumerate((on_time, errors_fresh, errors_late)):
-        d = os.path.join(staging, str(i))
-        part.coalesce(1).write.mode("overwrite").parquet(d)
-        src = next(f for f in sorted(os.listdir(d)) if f.endswith(".parquet"))
-        dst = os.path.join(replay_dir, f"{i:03d}.parquet")
-        os.rename(os.path.join(d, src), dst)
-        # file stream source orders by (mtime, path): pin both
-        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-    shutil.rmtree(staging)
-
-    agg = (
-        chunk_stream(spark, replay_dir, events.schema)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count("*").alias("n_events"))
-    )
-    return drain(agg, "append").select(
-        F.col("window.start").alias("window_start"), "n_events"
-    )
 
 
 class Scd2IvmJob(IvmJob):
@@ -1114,26 +674,6 @@ class Scd2IvmJob(IvmJob):
         return self.read("scd2_state", self.SCD_SCHEMA)
 
 
-def run_scd2_incremental(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 6
-) -> DataFrame:
-    """SCD2 history maintained incrementally over an offset-ordered
-    changelog replay; returns the final validity-interval table."""
-    from ..sources.changelog import orders_changelog
-
-    cl = orders_changelog(spark, sf_dir)
-    job = replay_changelog(spark, Scd2IvmJob, cl, n_chunks, "scd2_ivm")
-    return job.view().select(
-        "key",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "valid_from",
-        "valid_to",
-        F.col("valid_to").isNull().alias("is_current"),
-    )
-
-
 class SetIvmJob(IvmJob):
     """TRUE incremental maintenance of the reference's SET-valued view —
     SURVEY §7.4 hard-part #4's scale representation made real: the
@@ -1211,20 +751,6 @@ class SetIvmJob(IvmJob):
 
     def view(self) -> DataFrame:
         return self.read("set_view", self.VIEW_SCHEMA)
-
-
-def run_shareholders_set_ivm(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 6
-) -> DataFrame:
-    """The shareholders set view maintained by array add/subtract over an
-    offset-ordered changelog replay; returns the final view."""
-    from ..sources.changelog import shareholders_changelog
-
-    cl = shareholders_changelog(spark, sf_dir)
-    job = replay_changelog(spark, SetIvmJob, cl, n_chunks, "set_ivm")
-    return job.view().select(
-        "client", F.concat_ws(",", "positions").alias("positions")
-    )
 
 
 class CogroupIvmJob(IvmJob):
@@ -1334,81 +860,3 @@ class CogroupIvmJob(IvmJob):
 
     def view(self) -> DataFrame:
         return self.read("cogroup_view", self.VIEW_SCHEMA)
-
-
-def run_cogroup_ivm(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 6
-) -> DataFrame:
-    """Replay the multiplexed orders+positions changelog in n_chunks
-    micro-batches through CogroupIvmJob; returns the final cogrouped view
-    (must equal the batch cogroup of the two latest snapshots)."""
-    from ..sources.changelog import cogroup_multiplexed_changelog
-
-    cl = cogroup_multiplexed_changelog(spark, sf_dir)
-    return replay_changelog(spark, CogroupIvmJob, cl, n_chunks, "cogroup_ivm").view()
-
-
-def run_tvd_drift_monitor(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 6
-) -> DataFrame:
-    """Streaming data-drift monitor: the events table replays as
-    ``n_chunks`` event_id-ordered micro-batches (``replay`` over
-    mtime-pinned chunk files), and every batch's 10-bucket value histogram
-    is scored against the FIRST batch's reference histogram with total
-    variation distance — the drift metric that needs no logarithms, so the
-    whole monitor is exact integer arithmetic (PSI's log-ratio would hang
-    cross-engine determinism on libm ulps). foreachBatch collects only the
-    bounded 10-row histogram per batch (never the data), keeps the
-    reference in driver state, and appends (batch_id, n, tvd_e6) — the
-    shape of a production drift gate wired to a metrics sink. The oracle
-    reproduces the chunk assignment arithmetically (same least/floor
-    formula as the replay writer), so append output is exactly
-    predictable from batch data.
-    """
-    from ..sources.fixture_cache import ensure_layout, fixture_dir
-    from ..sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_id").alias("offset"),
-        F.expr(
-            "least(greatest(coalesce("
-            "CAST(round(value * 100) AS BIGINT), 0), 0) div 2000, 9)"
-        ).alias("bucket"),
-    )
-
-    replay_dir = fixture_dir(
-        f"events_tvd_chunks{n_chunks}", sf_dir, mtime_of="events.parquet"
-    )
-
-    def _write(path: str) -> None:
-        write_changelog_chunks(ev, path, n_chunks=n_chunks)
-        open(os.path.join(path, "_SUCCESS"), "w").close()
-
-    ensure_layout(replay_dir, _write)
-
-    results: list[tuple[int, int, int]] = []
-    ref: dict = {}
-
-    def _score(df, epoch_id: int) -> None:
-        rows = df.groupBy("bucket").count().collect()  # bounded: <=10 rows
-        hist = {int(r["bucket"]): int(r["count"]) for r in rows}
-        n = sum(hist.values())
-        if not ref:
-            ref["h"], ref["n"] = hist, n
-        q, qn = ref["h"], ref["n"]
-        tvd = (
-            sum(
-                abs(
-                    hist.get(b, 0) * 1_000_000 // n
-                    - q.get(b, 0) * 1_000_000 // qn
-                )
-                for b in range(10)
-            )
-            // 2
-        )
-        results.append((int(epoch_id), n, tvd))
-
-    replay(spark, replay_dir, "bucket long", _score, scratch_dir("tvd_drift_"))
-    return spark.createDataFrame(
-        sorted(results), "batch_id long, n_events long, tvd_e6 long"
-    )

@@ -86,7 +86,7 @@ def _update_client(
 def position_deltas(stream: DataFrame) -> DataFrame:
     """The changelog as per-client position deltas: (client, key, id,
     exchange, offset, tomb) — the input of the per-client state operators
-    here and in ``tws.py``."""
+    here."""
     return stream.select(
         F.split(F.col("key"), ":::").getItem(0).alias("client"),
         "key",

@@ -587,6 +587,26 @@ def test_runtime_bloom_filter_injected(spark, sf_dir):
     assert "bloom_filter_agg" in p
 
 
+def rowgroup_spans(path: str, column: str) -> list:
+    """(min, max) per parquet row group for ``column`` — the stats a
+    skip-scan consults; tight spans = prunable layout."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    spans = []
+    for fname in sorted(os.listdir(path)):
+        if not fname.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(path, fname)).metadata
+        for rg in range(md.num_row_groups):
+            for ci in range(md.num_columns):
+                col = md.row_group(rg).column(ci)
+                if col.path_in_schema == column and col.statistics is not None:
+                    spans.append((col.statistics.min, col.statistics.max))
+    return spans
+
+
 def test_zorder_tightens_rowgroup_spans(spark, sf_dir, tmp_path):
     """Z-ordering must shrink per-row-group (min, max) spans on BOTH
     clustered columns vs a hash-scattered layout — the statistic a
@@ -594,7 +614,6 @@ def test_zorder_tightens_rowgroup_spans(spark, sf_dir, tmp_path):
     scattered files each cover ~the full value range; Z-ordered files
     cover small hyper-rectangles."""
     from kafka_streams_and_ktable_example_spark.operators.maintenance import (
-        rowgroup_spans,
         write_zordered,
     )
     from kafka_streams_and_ktable_example_spark.sources.tables import load_table

@@ -18,6 +18,7 @@ from kafka_streams_and_ktable_example_spark.sources.changelog import (
 )
 from kafka_streams_and_ktable_example_spark.streaming.pipeline import (
     ChangelogStreamJob,
+    append_replay_file,
     run_shareholders_stream,
     write_changelog_chunks,
 )
@@ -264,8 +265,10 @@ def test_chunk_replay_follows_offset_order(spark, sf_dir, tmp_path):
     its output, one file per micro-batch, sees strictly rising batch
     minimum offsets. The chunks are written by 16 parallel tasks, as at
     sf0.1 (at this scale AQE would otherwise coalesce the write into one
-    task that writes the chunks in order)."""
+    task that writes the chunks in order). Frames added afterwards with
+    append_replay_file replay last, in the order they were appended."""
     chunk_dir = str(tmp_path / "chunks")
+    cl = shareholders_changelog(spark, sf_dir)
     confs = {
         "spark.sql.shuffle.partitions": "16",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
@@ -274,15 +277,20 @@ def test_chunk_replay_follows_offset_order(spark, sf_dir, tmp_path):
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        write_changelog_chunks(
-            shareholders_changelog(spark, sf_dir), chunk_dir, n_chunks=8
-        )
+        write_changelog_chunks(cl, chunk_dir, n_chunks=8)
     finally:
         for k, v in prev.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+    hi = cl.agg(F.max("offset")).first()[0]
+    appended = [hi + 1, hi + 2]
+    for off in appended:
+        append_replay_file(
+            spark.createDataFrame([("z:::Z", off)], "key string, offset long"),
+            chunk_dir,
+        )
     mins = []
     (
         spark.readStream.schema("key string, offset long")
@@ -296,8 +304,9 @@ def test_chunk_replay_follows_offset_order(spark, sf_dir, tmp_path):
         .start()
         .awaitTermination()
     )
-    assert len(mins) == 8
+    assert len(mins) == 10
     assert all(a < b for a, b in zip(mins, mins[1:])), mins
+    assert mins[-2:] == appended
 
 
 def test_out_of_order_across_batches(spark, tmp_path):
@@ -644,43 +653,6 @@ def test_ivm_stale_batch_record_loses(spark, tmp_path):
     assert end == {(100, 1, 10.0)}
 
 
-def test_tws_shareholders_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas (typed MapState) variant must equal the
-    batch grouped-reduce view. Skips where the TWS python runtime
-    (google.protobuf) is unavailable — the implementation is gated."""
-    import pytest
-
-    from kafka_streams_and_ktable_example_spark.streaming.tws import HAS_TWS_RUNTIME
-
-    if not HAS_TWS_RUNTIME:
-        pytest.skip("google.protobuf not installed: transformWithState gated")
-
-    from kafka_streams_and_ktable_example_spark.operators.ktable import shareholders_view
-    from kafka_streams_and_ktable_example_spark.sources.changelog import (
-        shareholders_changelog,
-    )
-    from kafka_streams_and_ktable_example_spark.streaming.pipeline import (
-        write_changelog_chunks,
-    )
-    from kafka_streams_and_ktable_example_spark.streaming.tws import (
-        run_shareholders_tws,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    cl = shareholders_changelog(spark, sf_dir)
-    chunk_dir = str(tmp_path / "chunks")
-    write_changelog_chunks(cl, chunk_dir, n_chunks=4)
-    got = {
-        (r.client, r.positions)
-        for r in run_shareholders_tws(spark, chunk_dir).collect()
-    }
-    want = {
-        (r.client, ",".join(sorted(r.positions)))
-        for r in shareholders_view(cl).collect()
-    }
-    assert got == want
-
-
 def test_join_ivm_golden_scenario(spark, tmp_path):
     """JoinIvmJob semantics on a scripted two-entity changelog:
     - an order's update re-prices it in the view;
@@ -811,31 +783,6 @@ def test_streaming_lsh_dedup_retraction_add_delete_readd(spark, tmp_path):
     )
     kept2 = {r.doc_id for r in job.kept_df().collect()}
     assert kept2 == {9}, kept2  # 12 collides with 9 (not with ghost 1)
-
-
-def test_compact_small_files_preserves_content(spark, tmp_path):
-    """Compaction: 40 tiny files -> few target-sized files, identical rows,
-    atomic swap leaves no .old/.tmp residue."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from kafka_streams_and_ktable_example_spark.operators.maintenance import (
-        compact_small_files,
-        parquet_layout_stats,
-    )
-
-    path = str(tmp_path / "frag")
-    spark.range(4000).withColumn("v", F.col("id") * 2).repartition(40).write.parquet(
-        path
-    )
-    assert parquet_layout_stats(spark, path)["n_files"] == 40
-    stats = compact_small_files(spark, path, target_file_bytes=64 * 1024)
-    assert stats["after"]["n_rows"] == 4000
-    assert stats["after"]["n_files"] < 40
-    got = spark.read.parquet(path).agg(F.sum("v")).collect()[0][0]
-    assert got == 2 * sum(range(4000))
-    assert not any(".old" in f or "compact_" in f for f in os.listdir(str(tmp_path)))
 
 
 def test_schema_evolution_merged_read(spark, tmp_path):

@@ -90,7 +90,8 @@ ANNOTATIONS = {
         "two k-th-order-statistic selections (median, then MAD, then "
         "fence count; r11 exact_kth_value). The textual exchange count "
         "inlines the repeated selection subtrees that runtime exchange "
-        "reuse dedups (plans/r11/*_after_final.txt: ReusedExchange x10); "
+        "reuse dedups (ReusedExchange x10 in the AQE final plan; "
+        "git show 43b2fc3:plans/r11/agg_exact_mad_robust_scale_after_final.txt); "
         "no full-data exchange or sort anywhere — scheduling-bound job "
         "count, never a data-scale hazard"
     ),
