@@ -945,10 +945,10 @@ GROUP BY client
 """,
     doc="The reference's set-valued view maintained INCREMENTALLY as "
     "sorted arrays (streaming/pipeline.py::SetIvmJob): per micro-batch "
-    "each changed key's old visible position is array_except'ed out and "
-    "its new one array_union'ed in — no collect_set recompute of the "
-    "snapshot (each batch still rewrites the state tables in full), "
-    "empty array deletes the row. "
+    "only the changed clients' records are compacted and their arrays "
+    "re-collected — no collect_set recompute of the snapshot; both state "
+    "tables commit as keyed deltas (a full snapshot every 8 versions), "
+    "and an empty array deletes the row. "
     "This is SURVEY §7.4 hard-part #4's '100 TB representation' "
     "(sorted arrays + set algebra instead of per-group re-collection) "
     "actually wired: final state must equal the batch-recomputed "

@@ -19,6 +19,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap when $SPARK_GRAFT_DRIVER_MEM is unset: half the
+    machine's physical RAM, 1g to 48g. A fixed 48g let the heap outgrow a
+    small machine's RAM before G1 collected, and the kernel killed the
+    JVM."""
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(48, half_gib))}g"
+
+
 # --- query-scratch lifecycle -------------------------------------------------
 # Some plans (graph_edge_triangle_support's K-pass close) must write
 # intermediate parquet OUTSIDE Spark's managed storage: the returned
@@ -198,7 +207,10 @@ def get_spark(app_name: str = "kafka_streams_and_ktable_example_spark") -> Spark
             ),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python DataSource filter pushdown (Spark 4.1, off by default):

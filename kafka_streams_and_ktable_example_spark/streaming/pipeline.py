@@ -19,16 +19,21 @@ what the reference's interactive query observes — not the per-record change
 trace (micro-batching legitimately conflates intra-batch updates; the
 reference's cache=0 per-record emission is not promised).
 
-Scale/production shape: the compaction merge is one hash aggregation keyed
-by `key` per micro-batch; state lives in parquet tables (stand-ins for Delta
-MERGE on a cluster), and every batch rewrites each state table in full.
-Restart safety: every job commits through ``IvmJob``. An epoch's tables land
-in fresh ``<work_dir>/<table>/<version>/`` directories, one manifest naming
-that version is published last with ``os.replace``, and only then are older
-versions deleted — a crash at any point leaves a manifest naming complete
-tables. The checkpointed file source replays an unfinished batch id with the
-same files, so a batch whose (query id, epoch) the manifest already holds is
-skipped, and any other batch is applied.
+Scale/production shape: state lives in memory between batches, with
+parquet snapshot and delta files under it (stand-ins for a keyed Delta
+MERGE on a cluster). Every job commits through ``IvmJob``: each table's
+committed version is kept in memory (``localCheckpoint``), and an epoch's
+files land in fresh ``<work_dir>/<table>/{snapshot,delta}/<version>/``
+directories, one manifest naming them is published last with
+``os.replace``, and only then is the in-memory version swapped and are
+older files deleted — a crash at any point leaves a manifest naming
+complete files, from which a fresh job rebuilds the tables. ``SetIvmJob``
+commits keyed deltas (only its changed clients' rows), and writes its
+tables in full every ``SNAPSHOT_EVERY`` versions; the other six jobs still
+return and write every table in full each batch. The checkpointed file
+source replays an unfinished batch id with the same files, so a batch
+whose (query id, epoch) the manifest already holds is skipped, and any
+other batch is applied.
 
 The machinery every streaming query in ``plans/`` runs on:
 
@@ -39,7 +44,8 @@ The machinery every streaming query in ``plans/`` runs on:
 - runners: ``replay`` drives a foreachBatch function over
   ``chunk_stream`` at a small per-batch shuffle width; ``replay_changelog``
   replays a changelog through a new ``IvmJob``; ``drain`` runs a streaming
-  frame into a memory sink and returns the sink's table;
+  frame into a memory sink at the same width and returns the sink's
+  table;
 - state: ``IvmJob`` and its jobs — ``ChangelogStreamJob`` (the
   reference's topology, run by ``run_shareholders_stream``),
   ``AggIvmJob``, ``JoinIvmJob``, ``StreamingLshDedupJob``,
@@ -82,7 +88,9 @@ _SMALL_SHUFFLE_KEYS = (
 @contextlib.contextmanager
 def small_shuffle(spark: SparkSession):
     """Pin per-batch shuffle fan-out (and AQE's initial fan-out) to 8 for a
-    replay; the previous values come back on exit."""
+    ``replay`` or ``drain``; the previous values come back on exit. A
+    stateful query's shuffle width is its state-store task count per
+    micro-batch, so a bare session's 200 would run 200 tasks a batch."""
     prev = {k: spark.conf.get(k, None) for k in _SMALL_SHUFFLE_KEYS}
     for k in _SMALL_SHUFFLE_KEYS:
         spark.conf.set(k, "8")
@@ -96,51 +104,115 @@ def small_shuffle(spark: SparkSession):
                 spark.conf.set(k, v)
 
 
+#: Versions divisible by this commit each delta table as a snapshot; the
+#: versions between append one delta file per table.
+SNAPSHOT_EVERY = 8
+
+
 class IvmJob:
-    """Base of the foreachBatch jobs: parquet state tables under
-    ``work_dir``, committed once per (query id, epoch).
+    """Base of the foreachBatch jobs: state tables under ``work_dir``,
+    committed once per (query id, epoch), each table's committed version
+    kept in memory between batches.
 
     A subclass implements ``update(batch_df) -> {table: DataFrame}`` over
-    the tables it ``read``s. ``process_batch`` commits the result: each
-    table goes to a fresh ``<work_dir>/<table>/<version>/`` directory,
-    then ``_manifest.json`` (version, commit key, each table's schema) is
-    published with ``os.replace``, then older versions are deleted. A crash
-    at any step leaves a manifest naming complete tables. A batch whose
-    commit key the manifest already holds is skipped: Spark replays an
-    unfinished batch id with the same files. The key's query id is the
-    stream's (stable across restarts on one checkpoint) and None for a
-    direct call, so a fresh stream's epoch 0 still applies after a direct
-    epoch-0 call.
+    the tables it ``read``s. A table named in ``DELTAS`` comes back as a
+    keyed delta: its rows replace the committed rows with the same key
+    columns, and a row failing the table's live predicate (a SQL string,
+    None for none) deletes its key. Any other table comes back whole.
+
+    ``process_batch`` commits the result as version ``v``:
+
+    - the new version of each table is materialized in memory
+      (``localCheckpoint``, memory and disk, at most the default
+      parallelism in partitions);
+    - a whole table, and a delta table at every ``SNAPSHOT_EVERY``-th
+      version, is written as ``<table>/snapshot/<v>/``; a delta table's
+      other versions write only the delta, as one file in
+      ``<table>/delta/<v>/``;
+    - ``_manifest.json`` (version, commit key, and per table its schema,
+      snapshot version and delta versions) is published with
+      ``os.replace``;
+    - only then does the new in-memory version replace the old one, whose
+      cache is released, and are files the manifest no longer names
+      deleted.
+
+    A crash at any step leaves a manifest naming complete files. A fresh
+    job rebuilds each table once, on first ``read``, from its snapshot and
+    then its deltas in version order. A batch whose commit key the
+    manifest already holds is skipped: Spark replays an unfinished batch
+    id with the same files. The key's query id is the stream's (stable
+    across restarts on one checkpoint) and None for a direct call, so a
+    fresh stream's epoch 0 still applies after a direct epoch-0 call.
+
+    A frame from ``read`` serves the in-memory version, so it is valid
+    until the next commit or ``close``.
     """
+
+    DELTAS: dict[str, tuple[list[str], str | None]] = {}
 
     def __init__(self, spark: SparkSession, work_dir: str):
         self.spark = spark
         self.work_dir = work_dir
         self._manifest_path = os.path.join(work_dir, "_manifest.json")
         self._cached: list[DataFrame] = []
+        self._live: dict[str, DataFrame] = {}
         try:
             with open(self._manifest_path) as f:
                 self.manifest = json.load(f)
         except FileNotFoundError:
-            self.manifest = {"version": 0, "commit": None, "schemas": {}}
+            self.manifest = {"version": 0, "commit": None, "tables": {}}
 
-    def _dir(self, table: str, version: int) -> str:
-        return os.path.join(self.work_dir, table, str(version))
+    def _dir(self, table: str, kind: str, version) -> str:
+        return os.path.join(self.work_dir, table, kind, str(version))
 
     def read(self, table: str, schema) -> DataFrame:
-        """The committed ``table``, read with the schema recorded at commit
-        (no schema-inference job); an empty ``schema`` frame before then."""
-        recorded = self.manifest["schemas"].get(table)
-        if recorded is None:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(StructType.fromJson(recorded)).parquet(
-            self._dir(table, self.manifest["version"])
-        )
+        """The committed ``table``; an empty ``schema`` frame before any
+        commit."""
+        if table not in self._live:
+            entry = self.manifest["tables"].get(table)
+            if entry is None:
+                return self.spark.createDataFrame([], schema)
+            self._live[table] = self._materialize(self._rebuild(table, entry))
+        return self._live[table]
+
+    def _rebuild(self, table: str, entry: dict) -> DataFrame:
+        """``table`` read back from its snapshot and deltas, with the
+        schema recorded at commit (no schema-inference job)."""
+        schema = StructType.fromJson(entry["schema"])
+        if entry["snapshot"] is None:
+            df = self.spark.createDataFrame([], schema)
+        else:
+            df = self.spark.read.schema(schema).parquet(
+                self._dir(table, "snapshot", entry["snapshot"])
+            )
+        for v in entry["deltas"]:
+            delta = self.spark.read.schema(schema).parquet(
+                self._dir(table, "delta", v)
+            )
+            df = self._apply(table, df, delta)
+        return df
+
+    def _apply(self, table: str, df: DataFrame, delta: DataFrame) -> DataFrame:
+        keys, live = self.DELTAS[table]
+        kept = df.join(F.broadcast(delta.select(*keys)), keys, "left_anti")
+        return kept.unionByName(delta if live is None else delta.where(live))
+
+    def _materialize(self, df: DataFrame) -> DataFrame:
+        """``df`` computed once into memory and disk, its lineage cut; a
+        union grows the partition count, so it is bounded here."""
+        n = self.spark.sparkContext.defaultParallelism
+        return df.coalesce(n).localCheckpoint(eager=True)
+
+    @staticmethod
+    def _release(df: DataFrame) -> None:
+        """Drop the blocks of a ``_materialize``d frame."""
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
 
     def _persist(self, df: DataFrame) -> DataFrame:
-        """Cache ``df`` for this batch; released once the batch commits."""
-        self._cached.append(df.persist())
-        return df
+        """``df`` materialized for this batch; released once the batch
+        commits."""
+        self._cached.append(self._materialize(df))
+        return self._cached[-1]
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         commit = [
@@ -150,26 +222,59 @@ class IvmJob:
         if commit == self.manifest["commit"]:
             return
         version = self.manifest["version"] + 1
+        live, tables = {}, {}
         try:
-            tables = self.update(batch_df)
-            for name, df in tables.items():
-                df.write.mode("overwrite").parquet(self._dir(name, version))
-            manifest = {
-                "version": version,
-                "commit": commit,
-                "schemas": {n: df.schema.jsonValue() for n, df in tables.items()},
-            }
+            for name, df in self.update(batch_df).items():
+                entry = self.manifest["tables"].get(
+                    name, {"snapshot": None, "deltas": []}
+                )
+                if name in self.DELTAS:
+                    live[name] = self._materialize(
+                        self._apply(name, self.read(name, df.schema), df)
+                    )
+                else:
+                    live[name] = self._materialize(df)
+                if name in self.DELTAS and version % SNAPSHOT_EVERY:
+                    df.coalesce(1).write.mode("overwrite").parquet(
+                        self._dir(name, "delta", version)
+                    )
+                    entry = {**entry, "deltas": entry["deltas"] + [version]}
+                else:
+                    live[name].write.mode("overwrite").parquet(
+                        self._dir(name, "snapshot", version)
+                    )
+                    entry = {"snapshot": version, "deltas": []}
+                tables[name] = {**entry, "schema": df.schema.jsonValue()}
+            manifest = {"version": version, "commit": commit, "tables": tables}
             with open(self._manifest_path + ".tmp", "w") as f:
                 json.dump(manifest, f)
             os.replace(self._manifest_path + ".tmp", self._manifest_path)
             self.manifest = manifest
+        except BaseException:
+            for df in live.values():
+                self._release(df)
+            raise
         finally:
             while self._cached:
-                self._cached.pop().unpersist()
-        for name in tables:
-            for old in os.listdir(os.path.join(self.work_dir, name)):
-                if old != str(version):
-                    shutil.rmtree(self._dir(name, old), ignore_errors=True)
+                self._release(self._cached.pop())
+        for name, df in live.items():
+            if name in self._live:
+                self._release(self._live[name])
+            self._live[name] = df
+        for name, entry in tables.items():
+            named = {f"snapshot/{entry['snapshot']}"}
+            named.update(f"delta/{v}" for v in entry["deltas"])
+            for kind in ("snapshot", "delta"):
+                d = os.path.join(self.work_dir, name, kind)
+                for v in os.listdir(d) if os.path.isdir(d) else ():
+                    if f"{kind}/{v}" not in named:
+                        shutil.rmtree(os.path.join(d, v), ignore_errors=True)
+
+    def close(self) -> None:
+        """Release the in-memory versions; a later ``read`` rebuilds from
+        files."""
+        while self._live:
+            self._release(self._live.popitem()[1])
 
 
 def chunk_stream(spark: SparkSession, chunk_dir: str, schema) -> DataFrame:
@@ -186,12 +291,14 @@ def chunk_stream(spark: SparkSession, chunk_dir: str, schema) -> DataFrame:
 def drain(df: DataFrame, mode: str, checkpoint: str | None = None) -> DataFrame:
     """Run the streaming ``df`` to completion into a memory sink — output
     mode ``mode``, availableNow trigger, checkpoint in ``checkpoint`` (a
-    temporary one when None) — and return the sink's table."""
+    temporary one when None), small per-batch shuffle width — and return
+    the sink's table."""
     name = f"drain_{uuid.uuid4().hex[:8]}"
     writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
-    writer.trigger(availableNow=True).start().awaitTermination()
+    with small_shuffle(df.sparkSession):
+        writer.trigger(availableNow=True).start().awaitTermination()
     return df.sparkSession.table(name)
 
 
@@ -442,10 +549,10 @@ class JoinIvmJob(IvmJob):
     def update(self, batch_df: DataFrame) -> dict:
         # sever the streaming lineage: a streaming-sourced plan disables AQE
         # for every derived job, so the tiny per-batch deltas would shuffle
-        # at the full static partition count. localCheckpoint materializes
-        # the delta as a batch RDD — everything downstream gets AQE's
-        # partition coalescing (observed 10x on the 8-batch replay).
-        batch_df = batch_df.localCheckpoint(eager=True)
+        # at the full static partition count. Materializing the delta as a
+        # batch RDD gives everything downstream AQE's partition coalescing
+        # (observed 10x on the 8-batch replay).
+        batch_df = self._persist(batch_df)
         a_state = self.read("a_state", self.A_SCHEMA)
         b_state = self.read("b_state", self.B_SCHEMA)
         view = self.read("view_state", self.VIEW_SCHEMA)
@@ -456,9 +563,9 @@ class JoinIvmJob(IvmJob):
         db = batch_df.where(F.col("src") == "c").select(
             "key", "c_mktsegment", "tombstone", "offset"
         )
-        # persist the compacted states: each feeds its own state write AND
-        # the delta-join terms AND the view write — without the cache the
-        # triple write re-runs the compaction lineage three times per batch
+        # materialize the compacted states: each feeds its own state AND
+        # the delta-join terms AND the view — unmaterialized, the commit
+        # re-runs the compaction lineage three times per batch
         a_new = self._persist(
             compact_flat(a_state.unionByName(da), ["o_custkey", "o_totalprice"])
         )
@@ -501,15 +608,13 @@ class JoinIvmJob(IvmJob):
                 "c_mktsegment",
             )
         )
-        # the three legs are map-only (broadcast semi/anti joins), so no
-        # shuffle exists for AQE to coalesce — without the explicit
-        # coalesce the union's task count is the SUM of the legs'
-        # partitions and grows every batch with the state file count
+        # the three legs are map-only (broadcast semi/anti joins), so the
+        # union's task count is the SUM of the legs' partitions; the commit
+        # coalesces it back to the default parallelism
         new_view = (
             keep.select("o_orderkey", "o_custkey", "o_totalprice", "c_mktsegment")
             .unionByName(add_a)
             .unionByName(add_b)
-            .coalesce(8)
         )
         return {"view_state": new_view, "a_state": a_new, "b_state": b_new}
 
@@ -551,7 +656,7 @@ class StreamingLshDedupJob(IvmJob):
     def update(self, batch_df: DataFrame) -> dict:
         from ..operators.dedup import lsh_bands, minhash_signatures
 
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = self._persist(batch_df)
         idx = self.read("band_index", self.IDX_SCHEMA)
         kept = self.read("kept", self.KEPT_SCHEMA)
 
@@ -582,10 +687,10 @@ class StreamingLshDedupJob(IvmJob):
         kept_batch = batch_df.select("doc_id", "lang").join(
             dropped, "doc_id", "left_anti"
         )
-        new_kept = kept.unionByName(kept_batch).coalesce(4)
+        new_kept = kept.unionByName(kept_batch)
         new_idx = idx.unionByName(
             bands_new.select("doc_id", "band_idx", "band_hash")
-        ).coalesce(4)
+        )
         return {"kept": new_kept, "band_index": new_idx}
 
     def kept_df(self) -> DataFrame:
@@ -675,79 +780,71 @@ class Scd2IvmJob(IvmJob):
 
 
 class SetIvmJob(IvmJob):
-    """TRUE incremental maintenance of the reference's SET-valued view —
-    SURVEY §7.4 hard-part #4's scale representation made real: the
-    per-client position set is stored as a SORTED ARRAY and maintained by
-    array_except (subtractor) + array_union (adder) per micro-batch — the
-    snapshot-sized collect_set recompute never runs. The deltas come from
-    the changed keys alone, but every batch rewrites both state tables in
-    full.
+    """Incremental maintenance of the reference's SET-valued view: the
+    per-client position set stored as a sorted array, rebuilt per
+    micro-batch for the clients the batch touches only.
 
-    Per batch, for every changed key: its PREVIOUS visible contribution
-    (latest compacted value that was non-tombstone and NASDAQ) is removed
-    from its client's array, its NEW winning contribution added; a client
-    whose array empties vanishes (the subtractor's nil-deletes-row,
-    kafka_streams.clj:77-79). Two state tables (``compact_state``, the
-    compacted changelog, and ``set_view``, the array view); at cluster
-    scale both partition by their key and the array update is a keyed
-    MERGE. This is the third IVM face — aggregate (AggIvmJob), join
-    (JoinIvmJob), dimension history (Scd2IvmJob), and now the
-    reference's own set semantics.
+    ``client`` is the prefix of ``key``, so every record of a client lives
+    in that client's rows. Per batch, the live ``compact_state`` rows of
+    the batch's clients (a broadcast semi join) and the batch go through
+    one ``repartition("client")``; grouping by (client, key) with
+    ``max_by(value, offset)`` compacts them as ``compact`` does, and
+    grouping the same partitions by client collects each changed client's
+    visible ids (non-tombstone, NASDAQ) into a sorted array. Both tables
+    commit as keyed deltas (``IvmJob.DELTAS``):
+
+    - ``compact_state`` (the compacted changelog, tombstones retained):
+      the keys whose winning record came from the batch;
+    - ``set_view``: one row per changed client; an empty array is that
+      client's tombstone, so the client leaves the view (the subtractor's
+      nil-deletes-row, kafka_streams.clj:77-79).
+
+    A batch writes those deltas, not the state; every ``SNAPSHOT_EVERY``
+    versions both tables are written in full. This is the set face of the
+    IVM jobs, beside aggregate (AggIvmJob), join (JoinIvmJob) and
+    dimension history (Scd2IvmJob).
     """
 
     VIEW_SCHEMA = "client string, positions array<string>"
-
-    @staticmethod
-    def _visible(df: DataFrame) -> DataFrame:
-        return df.where(
-            F.col("value").isNotNull()
-            & (F.col("value.exchange") == "NASDAQ")
-        ).select(
-            F.split("key", ":::").getItem(0).alias("client"),
-            F.col("value.id").alias("id"),
-        )
+    DELTAS = {
+        "compact_state": (["key"], None),
+        "set_view": (["client"], "size(positions) > 0"),
+    }
 
     def update(self, batch_df: DataFrame) -> dict:
         state = self.read("compact_state", batch_df.schema)
-        view = self.view()
-        keys = batch_df.select("key").distinct()
-
-        # subtractor: previous visible contribution of each changed key
-        rem = (
-            self._visible(state.join(keys, "key", "left_semi"))
-            .groupBy("client")
-            .agg(F.collect_set("id").alias("rem"))
-        )
-        # adder: new winning contribution after union-compaction
-        merged = compact(state.unionByName(batch_df))
-        add = (
-            self._visible(merged.join(keys, "key", "left_semi"))
-            .groupBy("client")
-            .agg(F.collect_set("id").alias("add"))
-        )
-        empty = F.array().cast("array<string>")
-        delta = rem.join(add, "client", "full_outer").select(
-            "client",
-            F.coalesce("rem", empty).alias("rem"),
-            F.coalesce("add", empty).alias("add"),
-        )
-        updated = (
-            delta.join(view, "client", "left")
-            .select(
-                "client",
-                F.sort_array(
-                    F.array_union(
-                        F.array_except(
-                            F.coalesce("positions", empty), F.col("rem")
-                        ),
-                        F.col("add"),
-                    )
-                ).alias("positions"),
+        client = "split(key, ':::')[0] AS client"
+        batch = batch_df.selectExpr(client, "key", "value", "offset", "true AS fresh")
+        old = state.selectExpr(
+            client, "key", "value", "offset", "false AS fresh"
+        ).join(F.broadcast(batch.select("client")), "client", "left_semi")
+        # one row per changed client: its view array, and the compacted
+        # records the batch won (``fresh``), from one shuffle
+        changed = self._persist(
+            old.unionByName(batch)
+            .repartition("client")
+            .groupBy("client", "key")
+            .agg(
+                F.expr("max_by(value, offset) AS value"),
+                F.expr("max(offset) AS offset"),
+                F.expr("max_by(fresh, offset) AS fresh"),
             )
-            .where(F.size("positions") > 0)
+            .groupBy("client")
+            .agg(
+                F.expr(
+                    "sort_array(collect_set(CASE WHEN value.exchange = 'NASDAQ'"
+                    " THEN value.id END)) AS positions"
+                ),
+                F.expr(
+                    "collect_list(CASE WHEN fresh THEN struct(key, value, offset)"
+                    " END) AS won"
+                ),
+            )
         )
-        untouched = view.join(delta, "client", "left_anti")
-        return {"set_view": untouched.unionByName(updated), "compact_state": merged}
+        return {
+            "compact_state": changed.select(F.explode("won").alias("r")).select("r.*"),
+            "set_view": changed.select("client", "positions"),
+        }
 
     def view(self) -> DataFrame:
         return self.read("set_view", self.VIEW_SCHEMA)
@@ -793,7 +890,7 @@ class CogroupIvmJob(IvmJob):
 
     def update(self, batch_df: DataFrame) -> dict:
         # sever streaming lineage so AQE coalesces the tiny per-batch plans
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = self._persist(batch_df)
         state = self.read("compact_state", batch_df.schema)
         view = self.view()
 
@@ -854,7 +951,7 @@ class CogroupIvmJob(IvmJob):
         )
         untouched = view.join(clients, "client", "left_anti")
         return {
-            "cogroup_view": untouched.unionByName(updated).coalesce(8),
+            "cogroup_view": untouched.unionByName(updated),
             "compact_state": merged,
         }
 

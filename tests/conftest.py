@@ -5,9 +5,6 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # small data; 32 threads is overhead
-# small data; the session default (48g) lets the heap grow past a small
-# box's RAM before G1 collects, and the kernel then kills the JVM
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 from kafka_streams_and_ktable_example_spark.session import get_spark
 

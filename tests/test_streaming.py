@@ -202,34 +202,147 @@ def _inject_crash(m, after_write: int) -> None:
     m.setattr(os, "replace", replace)
 
 
+def _crash_base(spark, tmp_path, name: str, version: int):
+    """``name``'s job with ``b0`` committed as version 1 and empty batches
+    up to ``version - 1``, in a base dir that each crash copies, and the
+    view an uninterrupted run reaches after ``b1`` and ``b2``. Returns
+    (job class, b1, b2, view reader, base dir, b1's epoch, that view)."""
+    import shutil
+
+    cls, (b0, b1, b2), view = _ivm_case(spark, name)
+    base = str(tmp_path / f"base{version}")
+    job = cls(spark, base)
+    job.process_batch(b0, 0)
+    for epoch in range(1, version - 1):
+        job.process_batch(b0.limit(0), epoch)
+    job.close()
+    epoch = version - 1
+    shutil.copytree(base, str(tmp_path / f"ref{version}"))
+    ref = cls(spark, str(tmp_path / f"ref{version}"))
+    ref.process_batch(b1, epoch)
+    ref.process_batch(b2, epoch + 1)
+    return cls, b1, b2, view, base, epoch, view(ref)
+
+
 @pytest.mark.parametrize("name", sorted(IVM_SCENARIOS))
 def test_crash_mid_commit_replays_to_same_view(spark, tmp_path, monkeypatch, name):
     """Crash injection at every commit boundary: epoch 1 dies after each
     table write and after the manifest write; a restarted job replays the
     same (query id, epoch) and then epoch 2. The view must equal an
-    uninterrupted run — no lost state, no delta applied twice."""
+    uninterrupted run — no lost state, no delta applied twice. The crashed
+    commit is version 2, where a delta table writes its delta, and again
+    version ``SNAPSHOT_EVERY``, where every table writes a snapshot."""
     import shutil
 
-    cls, (b0, b1, b2), view = _ivm_case(spark, name)
-    base = str(tmp_path / "base")
-    cls(spark, base).process_batch(b0, 0)
-    shutil.copytree(base, str(tmp_path / "ref"))
-    ref = cls(spark, str(tmp_path / "ref"))
-    ref.process_batch(b1, 1)
-    ref.process_batch(b2, 2)
-    want = view(ref)
+    from kafka_streams_and_ktable_example_spark.streaming.pipeline import SNAPSHOT_EVERY
+
     n_tables = IVM_SCENARIOS[name][3]
-    for point in range(1, n_tables + 2):
-        work = str(tmp_path / f"crash{point}")
-        shutil.copytree(base, work)
-        with monkeypatch.context() as m:
-            _inject_crash(m, point)
-            with contextlib.suppress(_Crash):
-                cls(spark, work).process_batch(b1, 1)
-        job = cls(spark, work)  # the restarted process
-        job.process_batch(b1, 1)
-        job.process_batch(b2, 2)
-        assert view(job) == want, f"{name}: crash after step {point}"
+    for version in (2, SNAPSHOT_EVERY):
+        cls, b1, b2, view, base, epoch, want = _crash_base(spark, tmp_path, name, version)
+        for point in range(1, n_tables + 2):
+            work = str(tmp_path / f"crash{version}_{point}")
+            shutil.copytree(base, work)
+            with monkeypatch.context() as m:
+                _inject_crash(m, point)
+                with contextlib.suppress(_Crash):
+                    cls(spark, work).process_batch(b1, epoch)
+            job = cls(spark, work)  # the restarted process
+            job.process_batch(b1, epoch)
+            job.process_batch(b2, epoch + 1)
+            assert view(job) == want, (
+                f"{name}: crash after step {point} of version {version}"
+            )
+
+
+def test_set_ivm_retry_in_same_process_after_crash(spark, tmp_path, monkeypatch):
+    """A SetIvmJob whose commit dies (after a delta or snapshot write, or
+    after the manifest) retries the same epoch in the same process: its
+    in-memory version is still the last committed one, so the retry and
+    the next batch give the uninterrupted view."""
+    import shutil
+
+    from kafka_streams_and_ktable_example_spark.streaming.pipeline import SNAPSHOT_EVERY
+
+    for version in (2, SNAPSHOT_EVERY):
+        cls, b1, b2, view, base, epoch, want = _crash_base(
+            spark, tmp_path, "SetIvmJob", version
+        )
+        for point in (1, 2, 3):
+            work = str(tmp_path / f"retry{version}_{point}")
+            shutil.copytree(base, work)
+            job = cls(spark, work)
+            job.view().count()  # rebuild the in-memory version first
+            with monkeypatch.context() as m:
+                _inject_crash(m, point)
+                with pytest.raises(_Crash):
+                    job.process_batch(b1, epoch)
+            job.process_batch(b1, epoch)
+            job.process_batch(b2, epoch + 1)
+            assert view(job) == want, f"retry after step {point} of version {version}"
+            job.close()
+
+
+def _set_batches(spark, n: int) -> list:
+    """``n`` deterministic shareholders micro-batches over 5 clients x 4
+    tickers: adds, exchange flips, amount changes and tombstones."""
+    exchanges = ("NASDAQ", "LON", "NASDAQ", "NYSE")
+    out, offset = [], 0
+    for b in range(n):
+        rows = []
+        for j in range(6):
+            client, ticker = f"c{(b + j) % 5}", f"T{(b * 3 + j) % 4}"
+            value = None if (b + 2 * j) % 7 == 0 else pos(
+                client, ticker, exchanges[(b + j) % 4], b * 10 + j
+            )
+            rows.append((f"{client}:::{ticker}", value, offset))
+            offset += 1
+        out.append(changelog_from_rows(spark, rows))
+    return out
+
+
+@pytest.fixture(scope="module")
+def set_ivm_after_12(spark, tmp_path_factory):
+    """A SetIvmJob after 12 batches (a snapshot at version 8, deltas after
+    it), with the batches it took."""
+    from kafka_streams_and_ktable_example_spark.streaming.pipeline import SetIvmJob
+
+    batches = _set_batches(spark, 12)
+    job = SetIvmJob(spark, str(tmp_path_factory.mktemp("set_ivm_12")))
+    for epoch, batch in enumerate(batches):
+        job.process_batch(batch, epoch)
+    yield job, batches
+    job.close()
+
+
+def test_set_ivm_restart_reads_same_view(spark, set_ivm_after_12):
+    """A fresh SetIvmJob on the same work_dir rebuilds the view from the
+    snapshot plus its deltas, and it equals both the live job's in-memory
+    view and a batch recompute of every record."""
+    from functools import reduce
+
+    from kafka_streams_and_ktable_example_spark.streaming.pipeline import SetIvmJob
+
+    job, batches = set_ivm_after_12
+    live = scan_view(job.view())
+    fresh = SetIvmJob(spark, job.work_dir)
+    assert fresh.manifest["version"] == 12
+    assert fresh.manifest["tables"]["set_view"]["snapshot"] == 8
+    assert fresh.manifest["tables"]["set_view"]["deltas"] == [9, 10, 11, 12]
+    assert scan_view(fresh.view()) == live
+    fresh.close()
+    recompute = shareholders_view(
+        reduce(lambda a, b: a.unionByName(b), batches)
+    )
+    assert live == scan_view(recompute)
+
+
+def test_set_ivm_live_version_partitions_bounded(spark, set_ivm_after_12):
+    """Each commit unions the delta into the live version; the commit
+    coalesces it, so the partition count does not grow with the batches."""
+    job, _ = set_ivm_after_12
+    bound = spark.sparkContext.defaultParallelism
+    assert job.view().rdd.getNumPartitions() <= bound
+    assert job.read("compact_state", None).rdd.getNumPartitions() <= bound
 
 
 def test_direct_epoch_then_fresh_stream_epoch_zero_both_apply(spark, tmp_path):
