@@ -92,19 +92,24 @@ def grouped_reduce_view(
     )
 
 
-def shareholders_view(changelog: DataFrame, exchange: str = "NASDAQ") -> DataFrame:
+def shareholders_view(changelog: DataFrame) -> DataFrame:
     """The reference's full topology (`kafka_streams.clj:60-81`) in one call.
 
     changelog(key, value struct{client,id,ticker,exchange,amount}, offset)
-    → view(client, positions array<string>) for positions on ``exchange``.
+    → view(client, positions array<string>) for the NASDAQ positions.
     """
-    snap = latest_snapshot(changelog)
     return grouped_reduce_view(
-        snap,
-        predicate=F.col("exchange") == exchange,
+        latest_snapshot(changelog),
+        predicate="exchange = 'NASDAQ'",
         group_col="client",
         collect_col="id",
     )
+
+
+def positions_csv(view: DataFrame) -> DataFrame:
+    """``shareholders_view`` → (client, positions string): the registry's
+    set-valued encoding, the sorted set comma-joined."""
+    return view.selectExpr("client", "concat_ws(',', positions) AS positions")
 
 
 def scan_view(view: DataFrame) -> list[tuple]:

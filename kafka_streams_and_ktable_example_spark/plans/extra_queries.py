@@ -526,6 +526,28 @@ GROUP BY client
 """
 
 
+def _shareholders_jsonl(spark, sf_dir) -> str:
+    """The shareholders changelog as wire-format JSONL records
+    (``"value":null`` = tombstone) in the fixture cache; returns its dir.
+
+    A DISTRIBUTED text write (the executors serialize their partitions in
+    parallel; a driver .collect() here would OOM at 100x), cached per
+    (sf_dir, testdata generation) and reused across invocations.
+    """
+    from ..sources.changelog import shareholders_changelog
+    from ..sources.fixture_cache import ensure_layout, fixture_dir
+
+    def _write(p: str) -> None:
+        shareholders_changelog(spark, sf_dir).select(
+            F.to_json(
+                F.struct("key", "value", "offset"),
+                {"ignoreNullFields": "false"},
+            ).alias("value")
+        ).write.mode("overwrite").text(p)
+
+    return ensure_layout(fixture_dir("shareholders_cl", sf_dir), _write)
+
+
 @register(
     "sources_python_datasource_view",
     oracle=_SHAREHOLDERS_CTE_PD,
@@ -535,55 +557,20 @@ GROUP BY client
     "through a registered format with BYTE-RANGE input partitions — the "
     "connector surface a 1000-executor cluster needs (split at the source, "
     "no driver funnel). The records then flow through the engine's real "
-    "ingress (from_json -> latest_snapshot -> grouped_reduce_view), landing "
+    "ingress (sources/changelog.py::from_wire_json -> operators/ktable.py::"
+    "shareholders_view -> positions_csv), landing "
     "on the same result as ktable_shareholders_view's parquet-derived "
     "changelog — one pipeline, two sources, the reference's serde/topology "
     "separation (kafka_streams.clj:21-39 vs 60-81).",
     tags=("source", "connector", "ktable"),
 )
 def sources_python_datasource_view(spark, sf_dir):
-    from ..operators.ktable import grouped_reduce_view, latest_snapshot
-    from ..sources.changelog import POSITION_SCHEMA, shareholders_changelog
-    from ..sources.fixture_cache import ensure_layout, fixture_dir
-    from ..sources.pydatasource import register_changelog_jsonl
+    from ..operators.ktable import positions_csv, shareholders_view
+    from ..sources.changelog import from_wire_json
+    from ..sources.pydatasource import read_changelog_jsonl
 
-    register_changelog_jsonl(spark)
-
-    # materialize the deterministic changelog as wire-format JSONL — a
-    # DISTRIBUTED text write (the executors serialize their partitions in
-    # parallel; a driver .collect() here would OOM at 100×), cached per
-    # (sf_dir, testdata generation) and reused across invocations
-    def _write(p: str) -> None:
-        shareholders_changelog(spark, sf_dir).select(
-            F.to_json(
-                F.struct("key", "value", "offset"),
-                {"ignoreNullFields": "false"},  # tombstone = "value":null
-            ).alias("value")
-        ).write.mode("overwrite").text(p)
-
-    path = ensure_layout(fixture_dir("shareholders_cl", sf_dir), _write)
-
-    wire = (
-        spark.read.format("changelog_jsonl")
-        .option("path", path)
-        .option("numPartitions", "8")
-        .load()
-    )
-    cl = wire.select(
-        "key",
-        F.from_json("value_json", POSITION_SCHEMA).alias("value"),
-        "offset",
-    )
-    view = grouped_reduce_view(
-        latest_snapshot(cl),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.select(
-        "client", F.concat_ws(",", "positions_arr").alias("positions")
-    )
+    wire = read_changelog_jsonl(spark, _shareholders_jsonl(spark, sf_dir))
+    return positions_csv(shareholders_view(from_wire_json(wire)))
 
 
 @register(
@@ -2170,22 +2157,12 @@ def join_bucketed_colocated(spark, sf_dir):
 def sources_python_datasource_stream(spark, sf_dir):
     import uuid
 
-    from ..operators.ktable import grouped_reduce_view, latest_snapshot
-    from ..sources.changelog import POSITION_SCHEMA, shareholders_changelog
-    from ..sources.fixture_cache import ensure_layout, fixture_dir
+    from ..operators.ktable import positions_csv, shareholders_view
+    from ..sources.changelog import from_wire_json, shareholders_changelog
     from ..sources.pydatasource import register_changelog_jsonl
 
     register_changelog_jsonl(spark)
-
-    def _write(p: str) -> None:
-        shareholders_changelog(spark, sf_dir).select(
-            F.to_json(
-                F.struct("key", "value", "offset"),
-                {"ignoreNullFields": "false"},
-            ).alias("value")
-        ).write.mode("overwrite").text(p)
-
-    path = ensure_layout(fixture_dir("shareholders_cl", sf_dir), _write)
+    path = _shareholders_jsonl(spark, sf_dir)
 
     name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
     # multi-batch replay is the point of this query, but the batch COUNT
@@ -2235,22 +2212,7 @@ def sources_python_datasource_stream(spark, sf_dir):
     q.stop()
     q.awaitTermination()
 
-    wire = spark.table(name)
-    cl = wire.select(
-        "key",
-        F.from_json("value_json", POSITION_SCHEMA).alias("value"),
-        "offset",
-    )
-    view = grouped_reduce_view(
-        latest_snapshot(cl),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.select(
-        "client", F.concat_ws(",", "positions_arr").alias("positions")
-    )
+    return positions_csv(shareholders_view(from_wire_json(spark.table(name))))
 
 
 # Shared verbatim between Spark and DuckDB (like _BFS_SQL): no MATERIALIZED,
@@ -2896,10 +2858,10 @@ def maintenance_cow_merge(spark, sf_dir):
     tags=("source", "connector", "sink", "ktable"),
 )
 def sources_python_datasource_writer(spark, sf_dir):
-    from ..operators.ktable import grouped_reduce_view, latest_snapshot
-    from ..sources.changelog import POSITION_SCHEMA, shareholders_changelog
+    from ..operators.ktable import positions_csv, shareholders_view
+    from ..sources.changelog import from_wire_json, shareholders_changelog
     from ..sources.fixture_cache import ensure_layout, fixture_dir
-    from ..sources.pydatasource import register_changelog_jsonl
+    from ..sources.pydatasource import read_changelog_jsonl, register_changelog_jsonl
 
     register_changelog_jsonl(spark)
 
@@ -2923,27 +2885,8 @@ def sources_python_datasource_writer(spark, sf_dir):
     path = ensure_layout(
         fixture_dir("shareholders_cl_pywriter", sf_dir), _write
     )
-    wire = (
-        spark.read.format("changelog_jsonl")
-        .option("path", path)
-        .option("numPartitions", "8")
-        .load()
-    )
-    cl = wire.select(
-        "key",
-        F.from_json("value_json", POSITION_SCHEMA).alias("value"),
-        "offset",
-    )
-    view = grouped_reduce_view(
-        latest_snapshot(cl),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.select(
-        "client", F.concat_ws(",", "positions_arr").alias("positions")
-    )
+    wire = read_changelog_jsonl(spark, path)
+    return positions_csv(shareholders_view(from_wire_json(wire)))
 
 
 @register(
@@ -3711,44 +3654,14 @@ def format_schema_drift_union(spark, sf_dir):
     tags=("source", "connector", "pushdown"),
 )
 def sources_python_datasource_pushdown(spark, sf_dir):
-    from ..operators.ktable import grouped_reduce_view, latest_snapshot
-    from ..sources.changelog import POSITION_SCHEMA, shareholders_changelog
-    from ..sources.fixture_cache import ensure_layout, fixture_dir
-    from ..sources.pydatasource import register_changelog_jsonl
+    from ..operators.ktable import positions_csv, shareholders_view
+    from ..sources.changelog import from_wire_json
+    from ..sources.pydatasource import read_changelog_jsonl
 
-    register_changelog_jsonl(spark)
-
-    def _write(p: str) -> None:
-        shareholders_changelog(spark, sf_dir).select(
-            F.to_json(
-                F.struct("key", "value", "offset"),
-                {"ignoreNullFields": "false"},
-            ).alias("value")
-        ).write.mode("overwrite").text(p)
-
-    path = ensure_layout(fixture_dir("shareholders_cl", sf_dir), _write)
-    wire = (
-        spark.read.format("changelog_jsonl")
-        .option("path", path)
-        .option("numPartitions", "8")
-        .load()
-        .where((F.col("offset") > 1000) & F.col("key").startswith("1"))
+    wire = read_changelog_jsonl(spark, _shareholders_jsonl(spark, sf_dir)).where(
+        (F.col("offset") > 1000) & F.col("key").startswith("1")
     )
-    cl = wire.select(
-        "key",
-        F.from_json("value_json", POSITION_SCHEMA).alias("value"),
-        "offset",
-    )
-    view = grouped_reduce_view(
-        latest_snapshot(cl),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.select(
-        "client", F.concat_ws(",", "positions_arr").alias("positions")
-    )
+    return positions_csv(shareholders_view(from_wire_json(wire)))
 
 
 @register(
@@ -3771,11 +3684,11 @@ def sources_python_datasource_pushdown(spark, sf_dir):
 def sources_python_datasource_stream_sink(spark, sf_dir):
     import os as _os
 
-    from ..operators.ktable import grouped_reduce_view, latest_snapshot
+    from ..operators.ktable import positions_csv, shareholders_view
     from ..session import scratch_dir
-    from ..sources.changelog import POSITION_SCHEMA, shareholders_changelog
+    from ..sources.changelog import from_wire_json, shareholders_changelog
     from ..sources.fixture_cache import ensure_layout, fixture_dir
-    from ..sources.pydatasource import register_changelog_jsonl
+    from ..sources.pydatasource import read_changelog_jsonl, register_changelog_jsonl
     from ..streaming.pipeline import chunk_stream, write_changelog_chunks
 
     register_changelog_jsonl(spark)
@@ -3810,27 +3723,8 @@ def sources_python_datasource_stream_sink(spark, sf_dir):
     path = ensure_layout(
         fixture_dir("shareholders_cl_streamsink", sf_dir), _build
     )
-    wire = (
-        spark.read.format("changelog_jsonl")
-        .option("path", path)
-        .option("numPartitions", "8")
-        .load()
-    )
-    cl = wire.select(
-        "key",
-        F.from_json("value_json", POSITION_SCHEMA).alias("value"),
-        "offset",
-    )
-    view = grouped_reduce_view(
-        latest_snapshot(cl),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.select(
-        "client", F.concat_ws(",", "positions_arr").alias("positions")
-    )
+    wire = read_changelog_jsonl(spark, path)
+    return positions_csv(shareholders_view(from_wire_json(wire)))
 
 
 _FILTER_CLAUSE_SQL = """

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.ktable import grouped_reduce_view, latest_snapshot
+from ..operators.ktable import latest_snapshot, positions_csv, shareholders_view
 from ..sources.changelog import orders_changelog, shareholders_changelog
 from .catalog import register
 
@@ -72,17 +72,7 @@ GROUP BY client
     tags=("ktable", "parity"),
 )
 def ktable_shareholders_view(spark, sf_dir):
-    cl = shareholders_changelog(spark, sf_dir)
-    view = grouped_reduce_view(
-        latest_snapshot(cl),
-        predicate="exchange = 'NASDAQ'",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.selectExpr(
-        "client", "concat_ws(',', positions_arr) AS positions"
-    )
+    return positions_csv(shareholders_view(shareholders_changelog(spark, sf_dir)))
 
 
 @register(
@@ -188,16 +178,13 @@ WHERE o.client IS NULL OR n.client IS NULL OR o.positions != n.positions
 )
 def ktable_view_deltas(spark, sf_dir):
     from ..operators.deltas import view_deltas
-    from ..operators.ktable import shareholders_view
-    from ..sources.changelog import shareholders_changelog
 
     cl = shareholders_changelog(spark, sf_dir)
     cut = cl.agg(F.expr("max(offset) div 2").cast("long").alias("cut"))
     old_cl = cl.crossJoin(F.broadcast(cut)).where(F.col("offset") <= F.col("cut"))
     old_v = shareholders_view(old_cl.select("key", "value", "offset"))
     new_v = shareholders_view(cl)
-    as_csv = lambda v: v.select("client", F.concat_ws(",", "positions").alias("positions"))
-    return view_deltas(as_csv(old_v), as_csv(new_v))
+    return view_deltas(positions_csv(old_v), positions_csv(new_v))
 
 
 @register(
@@ -273,6 +260,19 @@ def ktable_snapshot_asof_offset(spark, sf_dir):
     )
 
 
+def _order_cash(spark, sf_dir):
+    """Per-client order cash table: live orders' count and rounded total,
+    from the orders changelog's latest snapshot."""
+    return (
+        latest_snapshot(orders_changelog(spark, sf_dir))
+        .groupBy(F.col("o_custkey").cast("string").alias("client"))
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+        )
+    )
+
+
 @register(
     "ktable_table_table_join",
     oracle=_SHAREHOLDERS_CTE
@@ -317,22 +317,8 @@ FROM view v JOIN cash c ON v.client = c.client
     tags=("ktable", "parity", "join"),
 )
 def ktable_table_table_join(spark, sf_dir):
-    view = grouped_reduce_view(
-        latest_snapshot(shareholders_changelog(spark, sf_dir)),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    ).select("client", F.concat_ws(",", "positions_arr").alias("positions"))
-    cash = (
-        latest_snapshot(orders_changelog(spark, sf_dir))
-        .groupBy(F.col("o_custkey").cast("string").alias("client"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
-    return view.join(cash, "client")
+    view = positions_csv(shareholders_view(shareholders_changelog(spark, sf_dir)))
+    return view.join(_order_cash(spark, sf_dir), "client")
 
 
 @register(
@@ -401,17 +387,7 @@ def kafka_wire_changelog_view(spark, sf_dir):
         F.pmod(F.split(F.col("key").cast("string"), ":::")[0].cast("int"), F.lit(4))
         .cast("int"),
     )
-    parsed = parse_changelog_records(raw)
-    view = grouped_reduce_view(
-        latest_snapshot(parsed),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.select(
-        "client", F.concat_ws(",", "positions_arr").alias("positions")
-    )
+    return positions_csv(shareholders_view(parse_changelog_records(raw)))
 
 
 @register(
@@ -568,23 +544,9 @@ FROM view v FULL OUTER JOIN cash c ON v.client = c.client
     tags=("ktable", "parity", "join"),
 )
 def ktable_table_outer_join(spark, sf_dir):
-    view = grouped_reduce_view(
-        latest_snapshot(shareholders_changelog(spark, sf_dir)),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    ).select("client", F.concat_ws(",", "positions_arr").alias("positions"))
-    cash = (
-        latest_snapshot(orders_changelog(spark, sf_dir))
-        .groupBy(F.col("o_custkey").cast("string").alias("client"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
+    view = positions_csv(shareholders_view(shareholders_changelog(spark, sf_dir)))
     v = view.alias("v")
-    c = cash.alias("c")
+    c = _order_cash(spark, sf_dir).alias("c")
     return (
         v.join(c, F.col("v.client") == F.col("c.client"), "full_outer")
         .select(
@@ -666,20 +628,10 @@ GROUP BY client
     tags=("ktable", "parity", "kafka"),
 )
 def kafka_wire_corrupt_view(spark, sf_dir):
-    from ..operators.ktable import grouped_reduce_view, latest_snapshot
     from ..sources.kafka import parse_changelog_records
 
     parsed = parse_changelog_records(_corrupt_wire_records(spark, sf_dir))
-    view = grouped_reduce_view(
-        latest_snapshot(parsed),
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
-    return view.select(
-        "client", F.concat_ws(",", "positions_arr").alias("positions")
-    )
+    return positions_csv(shareholders_view(parsed))
 
 
 @register(

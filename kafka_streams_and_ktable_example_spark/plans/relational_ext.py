@@ -471,14 +471,13 @@ GROUP BY client
     tags=("ktable", "lookup"),
 )
 def ktable_point_lookup(spark, sf_dir):
-    from ..operators.ktable import shareholders_view
+    from ..operators.ktable import positions_csv, shareholders_view
     from ..sources.changelog import shareholders_changelog
 
     cl = shareholders_changelog(spark, sf_dir).where(
         F.col("key").startswith("42:::")
     )
-    view = shareholders_view(cl)
-    return view.select("client", F.concat_ws(",", "positions").alias("positions"))
+    return positions_csv(shareholders_view(cl))
 
 
 @register(

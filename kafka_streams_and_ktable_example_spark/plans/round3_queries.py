@@ -1558,16 +1558,9 @@ GROUP BY 1
     tags=("ktable", "parity"),
 )
 def ktable_scatter_gather_instances(spark, sf_dir):
-    from ..operators.ktable import grouped_reduce_view
+    from ..operators.ktable import shareholders_view
 
-    snap = latest_snapshot(shareholders_changelog(spark, sf_dir))
-    view = grouped_reduce_view(
-        snap,
-        predicate=F.col("exchange") == "NASDAQ",
-        group_col="client",
-        collect_col="id",
-        set_col="positions_arr",
-    )
+    view = shareholders_view(shareholders_changelog(spark, sf_dir))
     instance = (
         F.conv(F.substring(F.md5(F.col("client")), 1, 4), 16, 10).cast("int")
         % 3
@@ -1575,7 +1568,7 @@ def ktable_scatter_gather_instances(spark, sf_dir):
     return (
         view.select(
             instance.alias("instance_id"),
-            F.size("positions_arr").alias("n_positions"),
+            F.size("positions").alias("n_positions"),
         )
         .groupBy("instance_id")
         .agg(

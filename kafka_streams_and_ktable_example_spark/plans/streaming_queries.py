@@ -18,6 +18,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from ..operators.ktable import positions_csv
 from ..session import register_scratch_dir, scratch_dir
 from ..sources.changelog import (
     cogroup_multiplexed_changelog,
@@ -66,10 +67,7 @@ def streaming_shareholders_incremental(spark, sf_dir):
     cl = shareholders_changelog(spark, sf_dir)
     chunk_dir = scratch_dir("shareholders_chunks_")
     write_changelog_chunks(cl, chunk_dir, n_chunks=8)
-    view = run_shareholders_stream(spark, chunk_dir)
-    return view.select(
-        "client", F.concat_ws(",", "positions").alias("positions")
-    )
+    return positions_csv(run_shareholders_stream(spark, chunk_dir))
 
 
 @register(
@@ -959,9 +957,7 @@ def streaming_shareholders_set_ivm(spark, sf_dir):
     job = replay_changelog(
         spark, SetIvmJob, shareholders_changelog(spark, sf_dir), 6, "set_ivm"
     )
-    return job.view().select(
-        "client", F.concat_ws(",", "positions").alias("positions")
-    )
+    return positions_csv(job.view())
 
 
 @register(

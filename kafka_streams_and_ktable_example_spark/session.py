@@ -142,10 +142,8 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> int:
 
     ``initialPartitionNum`` is a runtime SQL conf, so benchmarks sweeping
     several scale factors in one session call this between scales.
-    An explicit $SPARK_GRAFT_INITIAL_PARTS always wins.
     """
-    env = os.environ.get("SPARK_GRAFT_INITIAL_PARTS")
-    n = int(env) if env else tuned_initial_partitions(sf_dir)
+    n = tuned_initial_partitions(sf_dir)
     spark.conf.set(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(n)
     )
@@ -194,16 +192,11 @@ def get_spark(app_name: str = "kafka_streams_and_ktable_example_spark") -> Spark
         # taxed every sf0.1 query ~1.3x for nothing (BENCH_r03 vs r01).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INITIAL_PARTS",
-                str(
-                    tuned_initial_partitions(
-                        os.environ.get(
-                            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-                        ),
-                        cpus,
-                    )
-                ),
+            str(
+                tuned_initial_partitions(
+                    os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+                    cpus,
+                )
             ),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

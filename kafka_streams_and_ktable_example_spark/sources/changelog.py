@@ -78,6 +78,15 @@ def changelog_from_rows(spark: SparkSession, rows) -> DataFrame:
     return spark.createDataFrame(data, CHANGELOG_SCHEMA)
 
 
+def from_wire_json(wire: DataFrame) -> DataFrame:
+    """JSON wire records ``(key, value_json, offset)`` → the changelog
+    contract: ``value_json`` parses into the position struct, and a null
+    (tombstone) stays null (`kafka_streams.clj:21-26`)."""
+    return wire.select(
+        "key", F.from_json("value_json", POSITION_SCHEMA).alias("value"), "offset"
+    )
+
+
 def orders_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic upsert/delete changelog keyed by o_orderkey.
 

@@ -4,7 +4,7 @@ The reference's only source is a Kafka consumer wired through serdes
 (`our-service/src/our_service/kafka_streams.clj:21-39, 64`). This is the
 engine-native way to add such a connector in PySpark: subclass
 ``pyspark.sql.datasource.DataSource``, register it once per session, and
-``spark.read.format("changelog_jsonl")`` plans it like any other scan —
+``read_changelog_jsonl`` plans it like any other scan —
 with real input partitions, so a 1000-executor cluster splits the byte
 range instead of funneling through the driver.
 
@@ -108,7 +108,7 @@ def _to_arrow_batches(rows, batch_rows: int = _ARROW_BATCH_ROWS):
 
 
 class ChangelogJsonlDataSource(DataSource):
-    """``spark.read.format("changelog_jsonl").option("path", p)`` source —
+    """``changelog_jsonl`` source (``read_changelog_jsonl``) —
     batch scan with byte-range partitions AND a streaming reader
     (``spark.readStream`` replays the log in bounded micro-batches with
     durable (file, byte-pos) offsets, the Kafka-consumer shape)."""
@@ -252,6 +252,18 @@ def register_changelog_jsonl(spark) -> None:
         return
     spark.dataSource.register(ChangelogJsonlDataSource)
     spark._changelog_jsonl_registered = True
+
+
+def read_changelog_jsonl(spark, path: str):
+    """Batch scan of the JSONL changelog under ``path`` through the
+    connector, split into 8 byte-range input partitions."""
+    register_changelog_jsonl(spark)
+    return (
+        spark.read.format("changelog_jsonl")
+        .option("path", path)
+        .option("numPartitions", "8")
+        .load()
+    )
 
 
 class ChangelogJsonlPartitionedStreamReader(DataSourceStreamReader):

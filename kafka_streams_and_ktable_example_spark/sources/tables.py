@@ -27,8 +27,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 #: path -> observed StructType. Schema inference reads parquet footers on
 #: the DRIVER on every spark.read.parquet call (~100 ms for lineitem, per
 #: call, inside any timed window that builds the plan); the testdata and

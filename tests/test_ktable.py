@@ -13,6 +13,7 @@ import random
 
 from kafka_streams_and_ktable_example_spark.operators.ktable import (
     latest_snapshot,
+    positions_csv,
     shareholders_view,
     scan_view,
 )
@@ -58,9 +59,18 @@ def test_golden_scenario(spark):
         ("daniel:::BT.A", pos("daniel", "BT.A", "LON", 1), 1),
     ]
     assert run_view(spark, rows) == [("daniel", ["daniel:::AAPL"])]
+    # the registry's set-valued encoding of the same view
+    as_csv = lambda: [
+        tuple(r)
+        for r in positions_csv(
+            shareholders_view(changelog_from_rows(spark, rows))
+        ).collect()
+    ]
+    assert as_csv() == [("daniel", "daniel:::AAPL")]
     # step 3: tombstone AAPL -> set empties -> group row deleted entirely
     rows.append(("daniel:::AAPL", None, 2))
     assert run_view(spark, rows) == []
+    assert as_csv() == []
 
 
 def test_latest_wins_out_of_order_offsets(spark):
