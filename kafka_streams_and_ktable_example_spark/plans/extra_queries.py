@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import register
+from .ktable_queries import _SHAREHOLDERS_CTE, _VIEW_SELECT
 
 
 @register(
@@ -502,28 +503,9 @@ def scalar_try_funcs(spark, sf_dir):
     )
 
 
-_SHAREHOLDERS_CTE_PD = """
-WITH changelog AS MATERIALIZED (
-  SELECT CAST(o_custkey AS VARCHAR) AS client,
-         'T' || CAST(o_orderkey % 7 AS VARCHAR) AS ticker,
-         CASE CAST(o_orderkey % 3 AS INT)
-           WHEN 0 THEN 'NASDAQ' WHEN 1 THEN 'LON' ELSE 'NYSE' END AS exchange,
-         o_orderkey AS off,
-         (o_orderkey % 11 = 0) AS tombstone
-  FROM orders
-), keyed AS (
-  SELECT client || ':::' || ticker AS key, * FROM changelog
-), latest AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY off DESC) AS rn
-    FROM keyed
-  ) WHERE rn = 1 AND NOT tombstone
-)
-SELECT client,
-       string_agg(key, ',' ORDER BY key) AS positions
-FROM latest WHERE exchange = 'NASDAQ'
-GROUP BY client
-"""
+# The view's oracle with no blank line before its final SELECT, the text
+# the pushdown oracles' replace() chains match.
+_SHAREHOLDERS_CTE_PD = _SHAREHOLDERS_CTE + _VIEW_SELECT
 
 
 def _shareholders_jsonl(spark, sf_dir) -> str:

@@ -35,6 +35,22 @@ WITH changelog AS MATERIALIZED (
 )
 """
 
+# The view over ``latest``: each client's NASDAQ keys as one sorted CSV
+# string (what ``positions_csv`` makes of the Spark side's array), as the
+# final SELECT and as the body of a CTE.
+_POSITIONS_AGG = "string_agg(key, ',' ORDER BY key) AS positions"
+_VIEW_SELECT = f"""SELECT client,
+       {_POSITIONS_AGG}
+FROM latest WHERE exchange = 'NASDAQ'
+GROUP BY client
+"""
+_VIEW_CTE_BODY = f"""  SELECT client, {_POSITIONS_AGG}
+  FROM latest WHERE exchange = 'NASDAQ'
+  GROUP BY client
+"""
+# The shareholders view's whole oracle.
+_SHAREHOLDERS_VIEW = _SHAREHOLDERS_CTE + "\n" + _VIEW_SELECT
+
 # Shared oracle CTE replaying sources.changelog.orders_changelog.
 _ORDERS_CL_CTE = """
 WITH changelog AS MATERIALIZED (
@@ -59,13 +75,7 @@ WITH changelog AS MATERIALIZED (
 
 @register(
     "ktable_shareholders_view",
-    oracle=_SHAREHOLDERS_CTE
-    + """
-SELECT client,
-       string_agg(key, ',' ORDER BY key) AS positions
-FROM latest WHERE exchange = 'NASDAQ'
-GROUP BY client
-""",
+    oracle=_SHAREHOLDERS_VIEW,
     doc="The reference's full topology (kafka_streams.clj:60-81): changelog → "
     "latest snapshot → NASDAQ filter → per-client position set.",
     headline=True,
@@ -145,7 +155,7 @@ def ktable_orders_rollup_by_cust(spark, sf_dir):
 @register(
     "ktable_view_deltas",
     oracle=_SHAREHOLDERS_CTE
-    + """
+    + f"""
 , half AS (SELECT CAST(max(off) // 2 AS BIGINT) AS cut FROM changelog
 ), old_latest AS (
   SELECT client, ticker, exchange, tombstone,
@@ -153,14 +163,11 @@ def ktable_orders_rollup_by_cust(spark, sf_dir):
          client || ':::' || ticker AS key
   FROM changelog, half WHERE off <= cut
 ), old_view AS (
-  SELECT client, string_agg(key, ',' ORDER BY key) AS positions
+  SELECT client, {_POSITIONS_AGG}
   FROM old_latest WHERE rn = 1 AND NOT tombstone AND exchange = 'NASDAQ'
   GROUP BY client
 ), new_view AS (
-  SELECT client, string_agg(key, ',' ORDER BY key) AS positions
-  FROM latest WHERE exchange = 'NASDAQ'
-  GROUP BY client
-)
+{_VIEW_CTE_BODY})
 SELECT coalesce(o.client, n.client) AS client,
        CASE WHEN o.client IS NULL THEN 'insert'
             WHEN n.client IS NULL THEN 'delete'
@@ -276,12 +283,9 @@ def _order_cash(spark, sf_dir):
 @register(
     "ktable_table_table_join",
     oracle=_SHAREHOLDERS_CTE
-    + """
+    + f"""
 , view AS (
-  SELECT client, string_agg(key, ',' ORDER BY key) AS positions
-  FROM latest WHERE exchange = 'NASDAQ'
-  GROUP BY client
-), ocl AS (
+{_VIEW_CTE_BODY}), ocl AS (
   SELECT o_orderkey AS okey, o_custkey, o_totalprice,
          o_orderkey * 3 AS ooff, FALSE AS otomb
   FROM orders
@@ -346,13 +350,7 @@ def ktable_range_scan(spark, sf_dir):
 
 @register(
     "kafka_wire_changelog_view",
-    oracle=_SHAREHOLDERS_CTE
-    + """
-SELECT client,
-       string_agg(key, ',' ORDER BY key) AS positions
-FROM latest WHERE exchange = 'NASDAQ'
-GROUP BY client
-""",
+    oracle=_SHAREHOLDERS_VIEW,
     doc="The reference's view computed from KAFKA-WIRE-SHAPED records: the "
     "shareholders changelog is re-encoded as the Kafka source's record "
     "shape (key binary, value json-binary-or-NULL tombstone, partition "
@@ -499,12 +497,9 @@ def ktable_mapvalues_filternot(spark, sf_dir):
 @register(
     "ktable_table_outer_join",
     oracle=_SHAREHOLDERS_CTE
-    + """
+    + f"""
 , view AS (
-  SELECT client, string_agg(key, ',' ORDER BY key) AS positions
-  FROM latest WHERE exchange = 'NASDAQ'
-  GROUP BY client
-), ocl AS (
+{_VIEW_CTE_BODY}), ocl AS (
   SELECT o_orderkey AS okey, o_custkey, o_totalprice,
          o_orderkey * 3 AS ooff, FALSE AS otomb
   FROM orders
@@ -611,12 +606,8 @@ def _corrupt_wire_records(spark, sf_dir):
     ).replace("FROM changelog\n  ), keyed", "FROM changelog\n  ), keyed")
     .replace("SELECT client || ':::' || ticker AS key, * FROM changelog",
              "SELECT client || ':::' || ticker AS key, * FROM filtered")
-    + """
-SELECT client,
-       string_agg(key, ',' ORDER BY key) AS positions
-FROM latest WHERE exchange = 'NASDAQ'
-GROUP BY client
-""",
+    + "\n"
+    + _VIEW_SELECT,
     doc="Malformed-record hardening (kafka_streams.clj:21-26 NotSerializeNil "
     "parity): the shareholders changelog is wire-encoded, then corrupted — "
     "truncated JSON at off%13, EMPTY (non-null) payloads at off%17, null "

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import register
+from .ktable_queries import _POSITIONS_AGG
 
 
 @register(
@@ -440,7 +441,7 @@ def sql_entrypoint_customer_by_nation(spark, sf_dir):
 
 @register(
     "ktable_point_lookup",
-    oracle="""
+    oracle=f"""
 WITH changelog AS MATERIALIZED (
   SELECT CAST(o_custkey AS VARCHAR) AS client,
          'T' || CAST(o_orderkey % 7 AS VARCHAR) AS ticker,
@@ -455,7 +456,7 @@ WITH changelog AS MATERIALIZED (
          client || ':::' || ticker AS key
   FROM changelog
 )
-SELECT client, string_agg(key, ',' ORDER BY key) AS positions
+SELECT client, {_POSITIONS_AGG}
 FROM latest
 WHERE rn = 1 AND NOT tombstone AND exchange = 'NASDAQ' AND client = '42'
 GROUP BY client

@@ -45,18 +45,12 @@ from ..streaming.pipeline import (
     write_changelog_chunks,
 )
 from .catalog import register
-from .ktable_queries import _ORDERS_CL_CTE, _SHAREHOLDERS_CTE
+from .ktable_queries import _ORDERS_CL_CTE, _SHAREHOLDERS_VIEW
 
 
 @register(
     "streaming_shareholders_incremental",
-    oracle=_SHAREHOLDERS_CTE
-    + """
-SELECT client,
-       string_agg(key, ',' ORDER BY key) AS positions
-FROM latest WHERE exchange = 'NASDAQ'
-GROUP BY client
-""",
+    oracle=_SHAREHOLDERS_VIEW,
     doc="The reference's topology under Structured Streaming: changelog "
     "replayed as 8 micro-batches through foreachBatch compaction state; "
     "final view must equal the batch recompute (SURVEY §4.3) — and the "
@@ -72,13 +66,7 @@ def streaming_shareholders_incremental(spark, sf_dir):
 
 @register(
     "streaming_shareholders_stateful",
-    oracle=_SHAREHOLDERS_CTE
-    + """
-SELECT client,
-       string_agg(key, ',' ORDER BY key) AS positions
-FROM latest WHERE exchange = 'NASDAQ'
-GROUP BY client
-""",
+    oracle=_SHAREHOLDERS_VIEW,
     doc="The reference's adder/subtractor reduce (kafka_streams.clj:72-79) "
     "as a true per-group stateful operator: applyInPandasWithState keeps "
     "each client's latest-per-key records in managed group state and "
@@ -934,19 +922,14 @@ def streaming_observe_metrics(spark, sf_dir):
 
 @register(
     "streaming_shareholders_set_ivm",
-    oracle=_SHAREHOLDERS_CTE
-    + """
-SELECT client,
-       string_agg(key, ',' ORDER BY key) AS positions
-FROM latest WHERE exchange = 'NASDAQ'
-GROUP BY client
-""",
+    oracle=_SHAREHOLDERS_VIEW,
     doc="The reference's set-valued view maintained INCREMENTALLY as "
     "sorted arrays (streaming/pipeline.py::SetIvmJob): per micro-batch "
     "only the changed clients' records are compacted and their arrays "
-    "re-collected — no collect_set recompute of the snapshot; both state "
-    "tables commit as keyed deltas (a full snapshot every 8 versions), "
-    "and an empty array deletes the row. "
+    "re-collected — no collect_set recompute of the snapshot; the one "
+    "client-keyed state table commits those clients' rows as a keyed "
+    "delta (a full snapshot every 8 versions), and the view skips a "
+    "client whose array is empty. "
     "This is SURVEY §7.4 hard-part #4's '100 TB representation' "
     "(sorted arrays + set algebra instead of per-group re-collection) "
     "actually wired: final state must equal the batch-recomputed "

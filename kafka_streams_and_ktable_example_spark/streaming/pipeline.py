@@ -27,10 +27,13 @@ files land in fresh ``<work_dir>/<table>/{snapshot,delta}/<version>/``
 directories, one manifest naming them is published last with
 ``os.replace``, and only then is the in-memory version swapped and are
 older files deleted — a crash at any point leaves a manifest naming
-complete files, from which a fresh job rebuilds the tables. ``SetIvmJob``
-commits keyed deltas (only its changed clients' rows), and writes its
-tables in full every ``SNAPSHOT_EVERY`` versions; the other six jobs still
-return and write every table in full each batch. The checkpointed file
+complete files, from which a fresh job rebuilds the tables. Every job
+returns each table whole, as one query, and each table costs a commit two
+Spark actions: materialize, then write. ``SetIvmJob`` keeps one
+client-keyed table whose changed rows carry the version being committed,
+so a batch writes only those rows as a keyed delta, and the whole table
+every ``SNAPSHOT_EVERY`` versions; the other six jobs write every table
+in full each batch. The checkpointed file
 source replays an unfinished batch id with the same files, so a batch
 whose (query id, epoch) the manifest already holds is skipped, and any
 other batch is applied.
@@ -69,7 +72,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..operators.ktable import compact, compact_flat, grouped_reduce_view
 from ..session import scratch_dir
@@ -115,10 +124,13 @@ class IvmJob:
     kept in memory between batches.
 
     A subclass implements ``update(batch_df) -> {table: DataFrame}`` over
-    the tables it ``read``s. A table named in ``DELTAS`` comes back as a
-    keyed delta: its rows replace the committed rows with the same key
-    columns, and a row failing the table's live predicate (a SQL string,
-    None for none) deletes its key. Any other table comes back whole.
+    the tables it ``read``s, each table returned whole. ``DELTAS`` maps a
+    table to its key columns; such a table also has an int ``_v`` column,
+    the version that last wrote the row. ``update`` stamps every row it
+    changes with ``_v = next_version`` and never drops a row (a key that
+    leaves the table stays as a row its readers filter out), so the rows
+    with ``_v = v`` are exactly version ``v``'s delta, and on rebuild they
+    replace the rows with the same key.
 
     ``process_batch`` commits the result as version ``v``:
 
@@ -127,7 +139,7 @@ class IvmJob:
       parallelism in partitions);
     - a whole table, and a delta table at every ``SNAPSHOT_EVERY``-th
       version, is written as ``<table>/snapshot/<v>/``; a delta table's
-      other versions write only the delta, as one file in
+      other versions write only its ``_v = v`` rows, as one file in
       ``<table>/delta/<v>/``;
     - ``_manifest.json`` (version, commit key, and per table its schema,
       snapshot version and delta versions) is published with
@@ -148,7 +160,7 @@ class IvmJob:
     until the next commit or ``close``.
     """
 
-    DELTAS: dict[str, tuple[list[str], str | None]] = {}
+    DELTAS: dict[str, list[str]] = {}
 
     def __init__(self, spark: SparkSession, work_dir: str):
         self.spark = spark
@@ -161,6 +173,11 @@ class IvmJob:
                 self.manifest = json.load(f)
         except FileNotFoundError:
             self.manifest = {"version": 0, "commit": None, "tables": {}}
+
+    @property
+    def next_version(self) -> int:
+        """The version the next commit writes."""
+        return self.manifest["version"] + 1
 
     def _dir(self, table: str, kind: str, version) -> str:
         return os.path.join(self.work_dir, table, kind, str(version))
@@ -193,9 +210,9 @@ class IvmJob:
         return df
 
     def _apply(self, table: str, df: DataFrame, delta: DataFrame) -> DataFrame:
-        keys, live = self.DELTAS[table]
+        keys = self.DELTAS[table]
         kept = df.join(F.broadcast(delta.select(*keys)), keys, "left_anti")
-        return kept.unionByName(delta if live is None else delta.where(live))
+        return kept.unionByName(delta)
 
     def _materialize(self, df: DataFrame) -> DataFrame:
         """``df`` computed once into memory and disk, its lineage cut; a
@@ -221,21 +238,17 @@ class IvmJob:
         ]
         if commit == self.manifest["commit"]:
             return
-        version = self.manifest["version"] + 1
+        version = self.next_version
         live, tables = {}, {}
         try:
             for name, df in self.update(batch_df).items():
                 entry = self.manifest["tables"].get(
                     name, {"snapshot": None, "deltas": []}
                 )
-                if name in self.DELTAS:
-                    live[name] = self._materialize(
-                        self._apply(name, self.read(name, df.schema), df)
-                    )
-                else:
-                    live[name] = self._materialize(df)
+                live[name] = self._materialize(df)
                 if name in self.DELTAS and version % SNAPSHOT_EVERY:
-                    df.coalesce(1).write.mode("overwrite").parquet(
+                    delta = live[name].where(F.col("_v") == version)
+                    delta.coalesce(1).write.mode("overwrite").parquet(
                         self._dir(name, "delta", version)
                     )
                     entry = {**entry, "deltas": entry["deltas"] + [version]}
@@ -785,49 +798,58 @@ class SetIvmJob(IvmJob):
     micro-batch for the clients the batch touches only.
 
     ``client`` is the prefix of ``key``, so every record of a client lives
-    in that client's rows. Per batch, the live ``compact_state`` rows of
-    the batch's clients (a broadcast semi join) and the batch go through
-    one ``repartition("client")``; grouping by (client, key) with
-    ``max_by(value, offset)`` compacts them as ``compact`` does, and
-    grouping the same partitions by client collects each changed client's
-    visible ids (non-tombstone, NASDAQ) into a sorted array. Both tables
-    commit as keyed deltas (``IvmJob.DELTAS``):
+    in that client's row. State is one client-keyed table,
+    ``compact_state``: per client, its visible ids (non-tombstone, NASDAQ)
+    as a sorted ``positions`` array, its compacted changelog as
+    ``records`` (latest record per key, tombstones retained), and ``_v``.
+    A client whose positions empty keeps its row with an empty array, and
+    the view reads ``size(positions) > 0`` (the subtractor's
+    nil-deletes-row, kafka_streams.clj:77-79), so no row is ever deleted.
 
-    - ``compact_state`` (the compacted changelog, tombstones retained):
-      the keys whose winning record came from the batch;
-    - ``set_view``: one row per changed client; an empty array is that
-      client's tombstone, so the client leaves the view (the subtractor's
-      nil-deletes-row, kafka_streams.clj:77-79).
-
-    A batch writes those deltas, not the state; every ``SNAPSHOT_EVERY``
-    versions both tables are written in full. This is the set face of the
-    IVM jobs, beside aggregate (AggIvmJob), join (JoinIvmJob) and
-    dimension history (Scd2IvmJob).
+    ``update`` returns the new table as one query: the rows of clients the
+    batch does not touch, unchanged, and the batch's clients recomputed.
+    The two joins share one broadcast of the batch's clients. The
+    recomputed side explodes those clients' records, adds the batch and
+    goes through one ``repartition("client")``; grouping by (client, key)
+    with ``max_by(value, offset)`` compacts them as ``compact`` does, and
+    grouping the same partitions by client collects each client's
+    positions and records, stamped ``_v`` with the version being
+    committed. The table commits as a keyed delta (``IvmJob.DELTAS``): a
+    batch writes only its clients' rows, and every ``SNAPSHOT_EVERY``
+    versions the whole table. This is the set face of the IVM jobs,
+    beside aggregate (AggIvmJob), join (JoinIvmJob) and dimension history
+    (Scd2IvmJob).
     """
 
-    VIEW_SCHEMA = "client string, positions array<string>"
-    DELTAS = {
-        "compact_state": (["key"], None),
-        "set_view": (["client"], "size(positions) > 0"),
-    }
+    STATE_SCHEMA = StructType(
+        [
+            StructField("client", StringType()),
+            StructField("positions", ArrayType(StringType())),
+            StructField("records", ArrayType(CHANGELOG_SCHEMA)),
+            StructField("_v", IntegerType()),
+        ]
+    )
+    DELTAS = {"compact_state": ["client"]}
 
     def update(self, batch_df: DataFrame) -> dict:
-        state = self.read("compact_state", batch_df.schema)
-        client = "split(key, ':::')[0] AS client"
-        batch = batch_df.selectExpr(client, "key", "value", "offset", "true AS fresh")
-        old = state.selectExpr(
-            client, "key", "value", "offset", "false AS fresh"
-        ).join(F.broadcast(batch.select("client")), "client", "left_semi")
-        # one row per changed client: its view array, and the compacted
-        # records the batch won (``fresh``), from one shuffle
-        changed = self._persist(
+        state = self.read("compact_state", self.STATE_SCHEMA)
+        batch = batch_df.selectExpr(
+            "split(key, ':::')[0] AS client", "key", "value", "offset"
+        )
+        clients = F.broadcast(batch.select("client"))
+        kept = state.join(clients, "client", "left_anti")
+        old = (
+            state.join(clients, "client", "left_semi")
+            .selectExpr("client", "explode(records) AS r")
+            .select("client", "r.*")
+        )
+        changed = (
             old.unionByName(batch)
             .repartition("client")
             .groupBy("client", "key")
             .agg(
                 F.expr("max_by(value, offset) AS value"),
                 F.expr("max(offset) AS offset"),
-                F.expr("max_by(fresh, offset) AS fresh"),
             )
             .groupBy("client")
             .agg(
@@ -835,19 +857,24 @@ class SetIvmJob(IvmJob):
                     "sort_array(collect_set(CASE WHEN value.exchange = 'NASDAQ'"
                     " THEN value.id END)) AS positions"
                 ),
-                F.expr(
-                    "collect_list(CASE WHEN fresh THEN struct(key, value, offset)"
-                    " END) AS won"
-                ),
+                F.expr("collect_list(struct(key, value, offset)) AS records"),
             )
+            .withColumn("_v", F.lit(self.next_version))
         )
-        return {
-            "compact_state": changed.select(F.explode("won").alias("r")).select("r.*"),
-            "set_view": changed.select("client", "positions"),
-        }
+        return {"compact_state": kept.unionByName(changed)}
+
+    _view: tuple[DataFrame, DataFrame] | None = None
 
     def view(self) -> DataFrame:
-        return self.read("set_view", self.VIEW_SCHEMA)
+        """The view over the committed ``compact_state``, built once per
+        version, so a read pays no analysis for the filter and projection."""
+        state = self.read("compact_state", self.STATE_SCHEMA)
+        if self._view is None or self._view[0] is not state:
+            self._view = (
+                state,
+                state.where("size(positions) > 0").select("client", "positions"),
+            )
+        return self._view[1]
 
 
 class CogroupIvmJob(IvmJob):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import os
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -116,7 +117,7 @@ IVM_SCENARIOS = {
         2,
     ),
     "Scd2IvmJob": (_ORDERS_SCHEMA, _ORDER_BATCHES, "view", 1),
-    "SetIvmJob": (None, _SHAREHOLDER_BATCHES, "view", 2),
+    "SetIvmJob": (None, _SHAREHOLDER_BATCHES, "view", 1),
     "CogroupIvmJob": (
         _COGROUP_SCHEMA,
         [
@@ -255,8 +256,8 @@ def test_crash_mid_commit_replays_to_same_view(spark, tmp_path, monkeypatch, nam
 
 
 def test_set_ivm_retry_in_same_process_after_crash(spark, tmp_path, monkeypatch):
-    """A SetIvmJob whose commit dies (after a delta or snapshot write, or
-    after the manifest) retries the same epoch in the same process: its
+    """A SetIvmJob whose commit dies (after its delta or snapshot write,
+    or after the manifest) retries the same epoch in the same process: its
     in-memory version is still the last committed one, so the retry and
     the next batch give the uninterrupted view."""
     import shutil
@@ -267,7 +268,7 @@ def test_set_ivm_retry_in_same_process_after_crash(spark, tmp_path, monkeypatch)
         cls, b1, b2, view, base, epoch, want = _crash_base(
             spark, tmp_path, "SetIvmJob", version
         )
-        for point in (1, 2, 3):
+        for point in (1, 2):
             work = str(tmp_path / f"retry{version}_{point}")
             shutil.copytree(base, work)
             job = cls(spark, work)
@@ -326,8 +327,9 @@ def test_set_ivm_restart_reads_same_view(spark, set_ivm_after_12):
     live = scan_view(job.view())
     fresh = SetIvmJob(spark, job.work_dir)
     assert fresh.manifest["version"] == 12
-    assert fresh.manifest["tables"]["set_view"]["snapshot"] == 8
-    assert fresh.manifest["tables"]["set_view"]["deltas"] == [9, 10, 11, 12]
+    assert list(fresh.manifest["tables"]) == ["compact_state"]
+    assert fresh.manifest["tables"]["compact_state"]["snapshot"] == 8
+    assert fresh.manifest["tables"]["compact_state"]["deltas"] == [9, 10, 11, 12]
     assert scan_view(fresh.view()) == live
     fresh.close()
     recompute = shareholders_view(
@@ -337,12 +339,68 @@ def test_set_ivm_restart_reads_same_view(spark, set_ivm_after_12):
 
 
 def test_set_ivm_live_version_partitions_bounded(spark, set_ivm_after_12):
-    """Each commit unions the delta into the live version; the commit
-    coalesces it, so the partition count does not grow with the batches."""
+    """Each commit unions the recomputed clients into the live version;
+    the commit coalesces it, so the partition count does not grow with
+    the batches."""
     job, _ = set_ivm_after_12
     bound = spark.sparkContext.defaultParallelism
     assert job.view().rdd.getNumPartitions() <= bound
     assert job.read("compact_state", None).rdd.getNumPartitions() <= bound
+
+
+def test_set_ivm_delta_holds_exactly_the_batch_clients(spark, tmp_path):
+    """Version 2's delta file holds one row per client of batch 2, all
+    stamped ``_v = 2``, and each equals that client's live row."""
+    from kafka_streams_and_ktable_example_spark.streaming.pipeline import SetIvmJob
+
+    b1, b2 = _set_batches(spark, 2)
+    job = SetIvmJob(spark, str(tmp_path / "work"))
+    job.process_batch(b1, 0)
+    job.process_batch(b2, 1)
+    delta = spark.read.parquet(str(tmp_path / "work" / "compact_state" / "delta" / "2"))
+    clients = {r.key.split(":::")[0] for r in b2.collect()}
+
+    def rows(df):
+        return sorted(
+            (r.client, list(r.positions), sorted(map(repr, r.records)), r._v)
+            for r in df.collect()
+        )
+
+    got = rows(delta)
+    assert [r[0] for r in got] == sorted(clients)
+    assert {r[3] for r in got} == {2}
+    live = job.read("compact_state", None)
+    assert got == rows(live.where(F.col("client").isin(*clients)))
+    job.close()
+
+
+def test_set_ivm_delta_batch_runs_at_most_four_jobs(spark, tmp_path):
+    """A delta batch of SetIvmJob, read from a parquet file as a stream's
+    batch is, runs at most four Spark jobs: the broadcast of the batch's
+    clients, the shuffle map, the materialize and the delta write."""
+    from kafka_streams_and_ktable_example_spark.streaming.pipeline import (
+        SNAPSHOT_EVERY,
+        SetIvmJob,
+    )
+
+    b1, b2 = _set_batches(spark, 2)
+    src = str(tmp_path / "b2")
+    b2.write.parquet(src)
+    job = SetIvmJob(spark, str(tmp_path / "work"))
+    job.process_batch(b1, 0)
+    assert job.next_version % SNAPSHOT_EVERY
+    sc = spark.sparkContext
+    group = f"set_ivm_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one SetIvmJob delta batch")
+    try:
+        job.process_batch(spark.read.schema(b2.schema).parquet(src), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts arrive async
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert job.manifest["tables"]["compact_state"]["deltas"] == [1, 2]
+    assert 0 < len(jobs) <= 4, sorted(jobs)
+    job.close()
 
 
 def test_direct_epoch_then_fresh_stream_epoch_zero_both_apply(spark, tmp_path):
