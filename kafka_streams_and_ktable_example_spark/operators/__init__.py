@@ -7,6 +7,8 @@
 - ``similarity`` — approximate nearest neighbor over embedding columns.
 - ``text``       — language id, quality scoring, token counting, fingerprints.
 - ``multimodal`` — binary-column plumbing for image/audio/video payloads.
+- ``graph``      — the graph queries' edge lists, as DataFrame builders and
+                   oracle SQL fragments.
 """
 
 from .ktable import latest_snapshot, shareholders_view, grouped_reduce_view

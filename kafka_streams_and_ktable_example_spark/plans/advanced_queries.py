@@ -32,6 +32,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions import as_double_array
+from ..operators.graph import (
+    CROSS_BORDER_SQL,
+    NATION_TRADE_SQL,
+    cross_border_trade,
+    nation_trade,
+)
 from ..sources.tables import load_table
 from .catalog import register
 
@@ -246,11 +252,9 @@ _PAGERANK_SCALE = 1_000_000_000_000
 WITH edges AS MATERIALIZED (
   SELECT CAST(s.s_nationkey AS BIGINT) AS src, CAST(c.c_nationkey AS BIGINT) AS dst,
          CAST(count(*) AS BIGINT) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  GROUP BY 1, 2
+"""
+    + NATION_TRADE_SQL
+    + """  GROUP BY 1, 2
 ),
 e AS MATERIALIZED (
   SELECT src, dst, w, CAST(sum(w) OVER (PARTITION BY src) AS BIGINT) AS outw
@@ -309,15 +313,8 @@ def graph_pagerank_nations(spark, sf_dir):
     base = _PAGERANK_SCALE // n_nodes
     tele = 15 * base // 100
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-
     edges = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
+        nation_trade(spark, sf_dir)
         .groupBy(
             F.col("s_nationkey").cast("long").alias("src"),
             F.col("c_nationkey").cast("long").alias("dst"),
@@ -736,17 +733,15 @@ def agg_modern_conditional(spark, sf_dir):
     )
 
 
-_BFS_SQL = """
+_BFS_SQL = (
+    """
 WITH RECURSIVE edges AS (
   SELECT CAST(s.s_nationkey AS BIGINT) AS src,
          CAST(c.c_nationkey AS BIGINT) AS dst,
          CAST(count(*) AS BIGINT) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), strong AS (
   SELECT src, dst FROM (
     SELECT src, dst, w,
@@ -765,6 +760,7 @@ SELECT nation, CAST(min(depth) AS INT) AS min_depth,
        CAST(count(*) AS BIGINT) AS n_walks
 FROM bfs GROUP BY nation
 """
+)
 
 
 @register(
@@ -919,12 +915,9 @@ WITH edges AS MATERIALIZED (
   SELECT CAST(s.s_nationkey AS BIGINT) AS src,
          CAST(c.c_nationkey AS BIGINT) AS dst,
          CAST(count(*) AS BIGINT) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), e AS MATERIALIZED (
   SELECT src, dst, 1000000 // (w + 1) AS cost FROM edges
 ), n AS (SELECT CAST(n_nationkey AS BIGINT) AS node, n_name FROM nation),
@@ -984,23 +977,8 @@ WHERE d3.dist < 1000000000000000
 )
 def graph_weighted_sssp(spark, sf_dir):
     INF = 1_000_000_000_000_000
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
     edges = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
+        cross_border_trade(spark, sf_dir)
         .groupBy(
             F.col("s_nationkey").cast("long").alias("src"),
             F.col("c_nationkey").cast("long").alias("dst"),
@@ -1278,12 +1256,9 @@ def udf_scalar_iter_model_init(spark, sf_dir):
 WITH edges0 AS MATERIALIZED (
   SELECT DISTINCT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-), deg0 AS (
+"""
+    + CROSS_BORDER_SQL
+    + """), deg0 AS (
   SELECT n, count(*) AS d FROM (
     SELECT a AS n FROM edges0 UNION ALL SELECT b FROM edges0) GROUP BY n
 ), alive1 AS (SELECT n FROM deg0 WHERE d >= 3),
@@ -1321,23 +1296,8 @@ FROM nation nt
     tags=("graph", "iterative", "analytics"),
 )
 def graph_kcore_membership(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
     edges = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
+        cross_border_trade(spark, sf_dir)
         .select(
             F.least("s_nationkey", "c_nationkey").alias("a"),
             F.greatest("s_nationkey", "c_nationkey").alias("b"),
@@ -1405,12 +1365,9 @@ def graph_kcore_membership(spark, sf_dir):
 WITH flows AS MATERIALIZED (
   SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
          sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS cents
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), exports AS (
   SELECT src AS nationkey, sum(cents) AS out_cents FROM flows GROUP BY src
 ), imports AS (
@@ -1436,23 +1393,8 @@ LEFT JOIN imports i ON i.nationkey = n.n_nationkey
     tags=("analytics", "graph", "agg"),
 )
 def nation_trade_balance(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
     flows = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
+        cross_border_trade(spark, sf_dir)
         .groupBy(
             F.col("s_nationkey").alias("src"),
             F.col("c_nationkey").alias("dst"),
@@ -1501,11 +1443,9 @@ def nation_trade_balance(spark, sf_dir):
 WITH edges AS MATERIALIZED (
   SELECT CAST(s.s_nationkey AS BIGINT) AS src, CAST(c.c_nationkey AS BIGINT) AS dst,
          CAST(count(*) AS BIGINT) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  GROUP BY 1, 2
+"""
+    + NATION_TRADE_SQL
+    + """  GROUP BY 1, 2
 ),
 e AS MATERIALIZED (
   SELECT src, dst, w, CAST(sum(w) OVER (PARTITION BY src) AS BIGINT) AS outw
@@ -1576,15 +1516,8 @@ def graph_personalized_pagerank(spark, sf_dir):
     n_seeds = seeds_df.count()  # bounded dimension: driver scalar is scale-safe
     pers_val = _PAGERANK_SCALE // n_seeds
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-
     edges = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
+        nation_trade(spark, sf_dir)
         .groupBy(
             F.col("s_nationkey").cast("long").alias("src"),
             F.col("c_nationkey").cast("long").alias("dst"),

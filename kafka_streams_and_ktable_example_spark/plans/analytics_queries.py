@@ -18,6 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions import as_double_array
+from ..operators.graph import PART_PAIRS_CTE, part_pairs
 from ..sources.tables import load_table
 from .catalog import register
 
@@ -30,8 +31,7 @@ from .catalog import register
 # Scratch budget: 12 GB/pass is right for THIS box (~70 GB free /tmp);
 # on a cluster the budget is per-executor shuffle storage, so it is
 # overridable (r9 directive #4) via the runtime conf
-# ``spark.graft.tri.scratchBudget`` (bytes) or the env
-# ``SPARK_GRAFT_TRI_SCRATCH_BUDGET``, conf winning. K is NOT capped:
+# ``spark.graft.tri.scratchBudget`` (bytes). K is NOT capped:
 # the r9 plan silently clamped K at 16, so past ~192 GiB of wedge
 # bytes (~300x replica) per-pass scratch would exceed the budget again
 # and the disk-fill failure mode would return with no warning (ADVICE
@@ -44,9 +44,9 @@ _TRI_SCRATCH_BUDGET_BYTES = 12 * 1024**3
 _TRI_KPASS_WARN_PASSES = 64
 # Sanity ceiling, NOT a silent clamp (that was the r9 defect): each pass
 # is a full Spark job, so a K this large can only mean a misconfigured
-# budget (e.g. SPARK_GRAFT_TRI_SCRATCH_BUDGET=0 floors to 1 byte) or an
+# budget (e.g. spark.graft.tri.scratchBudget=0 floors to 1 byte) or an
 # input no number of passes could finish anyway — _tri_n_passes RAISES
-# past it, naming the computed K and the override knobs, instead of
+# past it, naming the computed K and the override conf, instead of
 # launching an effectively unbounded job loop at plan-call time. The
 # default budget only reaches it past ~2.9e15 wedges (~10^6x replica).
 _TRI_KPASS_MAX_PASSES = 4096
@@ -60,12 +60,8 @@ _TRI_LAST_PLAN_INFO: dict = {}
 
 
 def _tri_scratch_budget_bytes(spark) -> int:
-    """Resolve the per-pass scratch budget: runtime conf > env > default."""
-    import os as _os
-
+    """Resolve the per-pass scratch budget: runtime conf, else default."""
     v = spark.conf.get("spark.graft.tri.scratchBudget", None)
-    if v is None:
-        v = _os.environ.get("SPARK_GRAFT_TRI_SCRATCH_BUDGET")
     # floor at 1 byte so pass sizing never divides by zero; a budget so
     # small that K would exceed the sanity ceiling raises loudly there
     return max(1, int(v)) if v else _TRI_SCRATCH_BUDGET_BYTES
@@ -80,9 +76,9 @@ def _tri_n_passes(wedge_rows: int, budget_bytes: int) -> int:
         raise ValueError(
             f"triangle K-pass sizing computed {k} passes for "
             f"{wedge_rows} wedges under a {budget_bytes}-byte scratch "
-            "budget — the budget (spark.graft.tri.scratchBudget / "
-            "SPARK_GRAFT_TRI_SCRATCH_BUDGET) is almost certainly "
-            "misconfigured; refusing to launch an unbounded job loop"
+            "budget — the budget (spark.graft.tri.scratchBudget) is "
+            "almost certainly misconfigured; refusing to launch an "
+            "unbounded job loop"
         )
     return k
 
@@ -6039,13 +6035,8 @@ def pipeline_ab_experiment_readout(spark, sf_dir):
 
 @register(
     "graph_degree_assortativity",
-    oracle="""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS pa,
-         greatest(a.l_partkey, b.l_partkey) AS pb
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), adj AS MATERIALIZED (
+    oracle=PART_PAIRS_CTE
+    + """, adj AS MATERIALIZED (
   SELECT pa AS n, pb AS m FROM e UNION SELECT pb, pa FROM e
 ), deg AS MATERIALIZED (SELECT n, count(*) AS d FROM adj GROUP BY n),
 dir AS (
@@ -6092,22 +6083,7 @@ FROM s
     tags=("graph", "analytics"),
 )
 def graph_degree_assortativity(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-    )
+    e = part_pairs(spark, sf_dir)
     # no distinct() on the doubled edge list: e is distinct with pa < pb,
     # so branch-1 rows satisfy n < m and branch-2 rows n > m — the union
     # is duplicate-free by construction (r10: the redundant dedup was a
@@ -6262,13 +6238,8 @@ def stats_price_index_laspeyres_paasche(spark, sf_dir):
 
 @register(
     "graph_rich_club_coefficient",
-    oracle="""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS pa,
-         greatest(a.l_partkey, b.l_partkey) AS pb
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), adj AS MATERIALIZED (
+    oracle=PART_PAIRS_CTE
+    + """, adj AS MATERIALIZED (
   SELECT pa AS n, pb AS m FROM e UNION SELECT pb, pa FROM e
 ), deg AS MATERIALIZED (SELECT n, count(*) AS d FROM adj GROUP BY n),
 ks(k) AS (VALUES (1), (2), (4), (8)),
@@ -6308,22 +6279,7 @@ FROM club LEFT JOIN internal ON club.k = internal.k
     tags=("graph", "analytics"),
 )
 def graph_rich_club_coefficient(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-    )
+    e = part_pairs(spark, sf_dir)
     # no distinct() on the doubled edge list: e is distinct with pa < pb,
     # so branch-1 rows satisfy n < m and branch-2 rows n > m — the union
     # is duplicate-free by construction (r10: the redundant dedup was a
@@ -6836,13 +6792,8 @@ def stats_partial_correlation(spark, sf_dir):
 
 @register(
     "graph_edge_triangle_support",
-    oracle="""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS pa,
-         greatest(a.l_partkey, b.l_partkey) AS pb
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), wedges AS (
+    oracle=PART_PAIRS_CTE
+    + """, wedges AS (
   SELECT x.pa AS u, x.pb AS v, y.pb AS w
   FROM e x JOIN e y ON x.pa = y.pa AND x.pb < y.pb
 ), tri AS MATERIALIZED (

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.graph import CROSS_BORDER_SQL, cross_border_trade
 from ..sources.tables import load_table
 from .catalog import register
 from .ktable_queries import _SHAREHOLDERS_CTE, _VIEW_SELECT
@@ -154,12 +155,9 @@ def text_intradoc_repetition(spark, sf_dir):
 WITH raw AS MATERIALIZED (
   SELECT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ),
 tri AS MATERIALIZED (
   SELECT e1.a AS x, e1.b AS y, e2.b AS z
@@ -185,17 +183,10 @@ LEFT JOIN (SELECT n, count(*) AS c FROM m GROUP BY n) cnt
     tags=("graph", "join", "analytics"),
 )
 def graph_triangle_count(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = load_table(spark, sf_dir, "nation")
 
     edges = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
+        cross_border_trade(spark, sf_dir)
         .select(
             F.least("s_nationkey", "c_nationkey").alias("a"),
             F.greatest("s_nationkey", "c_nationkey").alias("b"),
@@ -1101,12 +1092,9 @@ def agg_weighted_median(spark, sf_dir):
 WITH e AS MATERIALIZED (
   SELECT DISTINCT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-),
+"""
+    + CROSS_BORDER_SQL
+    + """),
 adj AS MATERIALIZED (
   SELECT a AS n, b AS m FROM e UNION SELECT b, a FROM e
 ),
@@ -1132,16 +1120,8 @@ JOIN deg db ON db.n = c.n_b
     tags=("graph", "analytics"),
 )
 def graph_neighborhood_jaccard(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-
     e = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
+        cross_border_trade(spark, sf_dir)
         .select(
             F.least("s_nationkey", "c_nationkey").alias("a"),
             F.greatest("s_nationkey", "c_nationkey").alias("b"),

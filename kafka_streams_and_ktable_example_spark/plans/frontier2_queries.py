@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.graph import CROSS_BORDER_SQL, cross_border_trade, trade_edges
 from ..sources.tables import load_table
 from .catalog import register
 
@@ -458,12 +459,9 @@ WITH edges AS (
   SELECT CAST(s.s_nationkey AS BIGINT) AS src,
          CAST(c.c_nationkey AS BIGINT) AS dst,
          CAST(count(*) AS BIGINT) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), stats AS (
   SELECT src AS s2, count(*) AS src_cnt, sum(w) AS src_tot FROM edges
   GROUP BY src
@@ -509,15 +507,8 @@ ORDER BY nationkey
     "semantics stay exact while work is capped at |V|^2 x diameter<=3.",
 )
 def graph_closeness_centrality(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
+        cross_border_trade(spark, sf_dir)
         .groupBy(
             F.col("s_nationkey").cast("bigint").alias("src"),
             F.col("c_nationkey").cast("bigint").alias("dst"),
@@ -572,12 +563,9 @@ WITH ew AS MATERIALIZED (
   SELECT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b,
          count(*) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), adj AS MATERIALIZED (
   SELECT a AS n, b AS m, w FROM ew UNION ALL SELECT b, a, w FROM ew
 ), l0 AS (
@@ -648,21 +636,7 @@ ORDER BY label
 def graph_modularity_score(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    ew = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    ew = trade_edges(spark, sf_dir)
     adj = (
         ew.select(F.col("a").alias("n"), F.col("b").alias("m"), "w")
         .unionByName(ew.select(F.col("b").alias("n"), F.col("a").alias("m"), "w"))
@@ -1707,12 +1681,9 @@ WITH ew AS MATERIALIZED (
   SELECT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b,
          count(*) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), adj AS MATERIALIZED (
   SELECT a AS n, b AS m, w FROM ew UNION ALL SELECT b, a, w FROM ew
 ), pick AS MATERIALIZED (
@@ -1767,21 +1738,7 @@ FROM l4
 def graph_boruvka_mst_round(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    ew = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    ew = trade_edges(spark, sf_dir)
     adj = (
         ew.select(F.col("a").alias("n"), F.col("b").alias("m"), "w")
         .unionByName(ew.select(F.col("b").alias("n"), F.col("a").alias("m"), "w"))
@@ -2512,12 +2469,9 @@ def stats_var_cvar_order_value(spark, sf_dir):
 WITH ew AS MATERIALIZED (
   SELECT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), adj AS MATERIALIZED (
   SELECT a AS n, b AS m FROM ew UNION ALL SELECT b, a FROM ew
 ), s0 AS (
@@ -2554,22 +2508,7 @@ ORDER BY nationkey
     "iteration shape.",
 )
 def graph_katz_centrality(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    ew = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .agg(F.count("*").alias("w"))
-        .select("a", "b")
-    )
+    ew = trade_edges(spark, sf_dir).select("a", "b")
     adj = (
         ew.select(F.col("a").alias("n"), F.col("b").alias("m"))
         .unionByName(ew.select(F.col("b").alias("n"), F.col("a").alias("m")))
@@ -3090,12 +3029,9 @@ WITH ew AS MATERIALIZED (
   SELECT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b,
          count(*) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), tot AS (
   SELECT count(*) AS ne, sum(w) AS tw FROM ew
 ), fracs AS (SELECT unnest([0, 25, 50, 75]) AS pct
@@ -3146,22 +3082,7 @@ ORDER BY pct
     "Fixed unroll = deterministic contract in both engines.",
 )
 def graph_percolation_profile(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    ew = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .agg(F.count("*").alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    ew = trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     tot = ew.agg(F.count("*").alias("ne"), F.sum("w").alias("tw"))
     fracs = spark.createDataFrame([(0,), (25,), (50,), (75,)], ["pct"])
     kept = (
@@ -4652,12 +4573,9 @@ def ml_confident_learning_noise(spark, sf_dir):
 WITH ew AS MATERIALIZED (
   SELECT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), adj AS MATERIALIZED (
   SELECT a AS n, b AS m FROM ew UNION ALL SELECT b, a FROM ew
 ), deg AS MATERIALIZED (
@@ -4715,20 +4633,8 @@ FROM gstat CROSS JOIN tri CROSS JOIN wedges CROSS JOIN lpath
     "double with identical text in both engines, e6-rounded.",
 )
 def graph_small_world_sigma(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     ew = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .agg(F.count("*").alias("w"))
+        trade_edges(spark, sf_dir)
         .select("a", "b")
         .localCheckpoint(eager=True)
     )

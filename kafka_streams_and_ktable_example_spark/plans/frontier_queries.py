@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.graph import PART_PAIRS_CTE, part_pairs
 from ..sources.tables import load_table
 from .catalog import register
 
@@ -466,13 +467,8 @@ def supplier_newsvendor_stock(spark, sf_dir):
 
 @register(
     "graph_adamic_adar_link_prediction",
-    oracle="""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS pa,
-         greatest(a.l_partkey, b.l_partkey) AS pb
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), adj AS (
+    oracle=PART_PAIRS_CTE
+    + """, adj AS (
   SELECT pa AS z, pb AS v FROM e UNION ALL SELECT pb, pa FROM e
 ), deg AS (
   SELECT z, count(*) AS deg,
@@ -517,23 +513,7 @@ LIMIT 20
     "sort.",
 )
 def graph_adamic_adar_link_prediction(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        .persist()
-    )
+    e = part_pairs(spark, sf_dir).persist()
     adj = e.select(F.col("pa").alias("z"), F.col("pb").alias("v")).unionByName(
         e.select(F.col("pb").alias("z"), F.col("pa").alias("v"))
     )

@@ -41,11 +41,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.graph import CROSS_BORDER_SQL, trade_edges
 from ..operators.ktable import latest_snapshot
 from ..sources.changelog import orders_changelog, shareholders_changelog
 from ..sources.tables import load_table, register_tables
 from .catalog import register
-from .ktable_queries import _ORDERS_CL_CTE
+from .ktable_queries import _COGROUP_ORACLE, _ORDERS_CL_CTE, _SHAREHOLDERS_CTE
 
 
 # ---------------------------------------------------------------------------
@@ -152,40 +153,7 @@ def ktable_fk_join_enrich(spark, sf_dir):
 
 @register(
     "ktable_cogroup_two_streams",
-    oracle=_ORDERS_CL_CTE
-    + """
-, shcl AS (
-  SELECT CAST(o_custkey AS VARCHAR) AS client,
-         'T' || CAST(o_orderkey % 7 AS VARCHAR) AS ticker,
-         CASE CAST(o_orderkey % 3 AS INT)
-           WHEN 0 THEN 'NASDAQ' WHEN 1 THEN 'LON' ELSE 'NYSE' END AS exchange,
-         o_orderkey AS soff,
-         (o_orderkey % 11 = 0) AS stomb
-  FROM orders
-), shlatest AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (
-      PARTITION BY client || ':::' || ticker ORDER BY soff DESC) AS rn
-    FROM shcl
-  ) WHERE rn = 1 AND NOT stomb
-), ordagg AS (
-  SELECT CAST(o_custkey AS VARCHAR) AS client,
-         count(*) AS n_orders,
-         round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS total_price
-  FROM latest GROUP BY 1
-), posagg AS (
-  SELECT client,
-         count(*) AS n_positions,
-         count(CASE WHEN exchange = 'NASDAQ' THEN 1 END) AS n_nasdaq
-  FROM shlatest GROUP BY client
-)
-SELECT coalesce(o.client, p.client) AS client,
-       CAST(coalesce(o.n_orders, 0) AS BIGINT) AS n_orders,
-       coalesce(o.total_price, 0.0) AS total_price,
-       CAST(coalesce(p.n_positions, 0) AS BIGINT) AS n_positions,
-       CAST(coalesce(p.n_nasdaq, 0) AS BIGINT) AS n_nasdaq
-FROM ordagg o FULL OUTER JOIN posagg p ON o.client = p.client
-""",
+    oracle=_COGROUP_ORACLE,
     doc="KStreams 2.5 COGROUP: two independently-keyed changelog streams "
     "(the orders changelog re-keyed by o_custkey; the reference's "
     "share-position changelog keyed by client) aggregated into ONE "
@@ -1109,12 +1077,9 @@ WITH ew AS MATERIALIZED (
   SELECT least(s.s_nationkey, c.c_nationkey) AS a,
          greatest(s.s_nationkey, c.c_nationkey) AS b,
          count(*) AS w
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE s.s_nationkey <> c.c_nationkey
-  GROUP BY 1, 2
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
 ), adj AS MATERIALIZED (
   SELECT a AS n, b AS m, w FROM ew UNION ALL SELECT b, a, w FROM ew
 ), l0 AS (
@@ -1160,22 +1125,7 @@ FROM l0 JOIN l1 ON l0.n = l1.n JOIN l2 ON l0.n = l2.n
 def graph_label_propagation(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-
-    ew = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    ew = trade_edges(spark, sf_dir)
     adj = (
         ew.select(F.col("a").alias("n"), F.col("b").alias("m"), "w")
         .unionByName(ew.select(F.col("b").alias("n"), F.col("a").alias("m"), "w"))
@@ -1512,23 +1462,9 @@ def ml_gradient_step_linear(spark, sf_dir):
 
 @register(
     "ktable_scatter_gather_instances",
-    oracle="""
-WITH changelog AS MATERIALIZED (
-  SELECT CAST(o_custkey AS VARCHAR) AS client,
-         'T' || CAST(o_orderkey % 7 AS VARCHAR) AS ticker,
-         CASE CAST(o_orderkey % 3 AS INT)
-           WHEN 0 THEN 'NASDAQ' WHEN 1 THEN 'LON' ELSE 'NYSE' END AS exchange,
-         o_orderkey AS off,
-         (o_orderkey % 11 = 0) AS tombstone
-  FROM orders
-), keyed AS (
-  SELECT client || ':::' || ticker AS key, * FROM changelog
-), latest AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY off DESC) AS rn
-    FROM keyed
-  ) WHERE rn = 1 AND NOT tombstone
-), view_rows AS (
+    # the shareholders CTE minus its final newline, then one more CTE
+    oracle=_SHAREHOLDERS_CTE[:-1]
+    + """, view_rows AS (
   SELECT client, count(*) AS n_positions
   FROM latest WHERE exchange = 'NASDAQ'
   GROUP BY client

@@ -45,7 +45,7 @@ from ..streaming.pipeline import (
     write_changelog_chunks,
 )
 from .catalog import register
-from .ktable_queries import _ORDERS_CL_CTE, _SHAREHOLDERS_VIEW
+from .ktable_queries import _COGROUP_ORACLE, _SHAREHOLDERS_VIEW
 
 
 @register(
@@ -1135,40 +1135,7 @@ def streaming_union_two_sources(spark, sf_dir):
 
 @register(
     "streaming_cogroup_ivm",
-    oracle=_ORDERS_CL_CTE
-    + """
-, shcl AS (
-  SELECT CAST(o_custkey AS VARCHAR) AS client,
-         'T' || CAST(o_orderkey % 7 AS VARCHAR) AS ticker,
-         CASE CAST(o_orderkey % 3 AS INT)
-           WHEN 0 THEN 'NASDAQ' WHEN 1 THEN 'LON' ELSE 'NYSE' END AS exchange,
-         o_orderkey AS soff,
-         (o_orderkey % 11 = 0) AS stomb
-  FROM orders
-), shlatest AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (
-      PARTITION BY client || ':::' || ticker ORDER BY soff DESC) AS rn
-    FROM shcl
-  ) WHERE rn = 1 AND NOT stomb
-), ordagg AS (
-  SELECT CAST(o_custkey AS VARCHAR) AS client,
-         count(*) AS n_orders,
-         round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS total_price
-  FROM latest GROUP BY 1
-), posagg AS (
-  SELECT client,
-         count(*) AS n_positions,
-         count(CASE WHEN exchange = 'NASDAQ' THEN 1 END) AS n_nasdaq
-  FROM shlatest GROUP BY client
-)
-SELECT coalesce(o.client, p.client) AS client,
-       CAST(coalesce(o.n_orders, 0) AS BIGINT) AS n_orders,
-       coalesce(o.total_price, 0.0) AS total_price,
-       CAST(coalesce(p.n_positions, 0) AS BIGINT) AS n_positions,
-       CAST(coalesce(p.n_nasdaq, 0) AS BIGINT) AS n_nasdaq
-FROM ordagg o FULL OUTER JOIN posagg p ON o.client = p.client
-""",
+    oracle=_COGROUP_ORACLE,
     doc="KStreams 2.5 COGROUP maintained INCREMENTALLY "
     "(streaming/pipeline.py::CogroupIvmJob): the multiplexed "
     "orders+positions changelog replays as 6 micro-batches; each batch "

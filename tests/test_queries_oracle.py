@@ -4,7 +4,8 @@ sf0.01 — tools/verify_local.py --sf 0.01 covers that scale pre-commit)."""
 
 from __future__ import annotations
 
-import math
+import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -12,21 +13,13 @@ import pytest
 from kafka_streams_and_ktable_example_spark import plans
 from kafka_streams_and_ktable_example_spark.sources.tables import TABLE_NAMES
 
-
-def canon_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+from verify_local import canon_rows  # noqa: E402
 
 
-def canon(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = sorted(tuple(canon_cell(r[i]) for i in order) for r in rows)
-    return sorted(cols), out
+def test_canon_tells_int_from_str():
+    """The driver hashes 123 and '123' differently, so the canon must too."""
+    assert canon_rows(["x"], [(123,)]) != canon_rows(["x"], [("123",)])
 
 
 @pytest.fixture(scope="module")
@@ -45,9 +38,9 @@ WEAK_QUERIES = sorted(n for n, q in plans.REGISTRY.items() if not q.oracle)
 def test_oracle_match(spark, sf_dir, duck, name):
     q = plans.REGISTRY[name]
     sdf = q.spark(spark, sf_dir)
-    sc, sr = canon(sdf.columns, [tuple(r) for r in sdf.collect()])
+    sc, sr = canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
     res = duck.execute(q.oracle)
-    dc, dr = canon([d[0] for d in res.description], res.fetchall())
+    dc, dr = canon_rows([d[0] for d in res.description], res.fetchall())
     assert sc == dc, f"{name}: column names differ"
     assert len(sr) == len(dr), f"{name}: row counts differ"
     assert sr == dr, f"{name}: values differ; first diff: " + str(
@@ -64,26 +57,12 @@ def test_weak_query_runs(spark, sf_dir, name):
     assert sdf.count() >= 0
 
 
-def test_df_transpose_metrics_status_columns_are_strings(spark, sf_dir):
-    """The oracle's F/O/P columns are VARCHAR. BIGINT columns with the same
-    digits still fail the driver's value hash, and canon_cell above renders
-    123 and '123' alike, so the match test cannot see the difference."""
-    from pyspark.sql.types import StringType
-
-    schema = plans.REGISTRY["df_transpose_metrics"].spark(spark, sf_dir).schema
-    assert [schema[c].dataType for c in ("F", "O", "P")] == [StringType()] * 3
-
-
 def test_no_pandas_coercion_hazard_types_in_oracles():
     """No oracle may surface HUGEINT/DECIMAL/UINT result columns: a harness
     that fetches DuckDB results through pandas/Arrow coerces those to
     float64/object and hash-mismatches Spark's int64 even when every value
     is identical (the round-4 pipeline_yield_funnel driver-red root cause).
     Resolves each oracle's schema with a LIMIT 0 wrap — no data scanned."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     from oracle_type_audit import audit
 
     offenders, errors = audit()

@@ -60,6 +60,10 @@ def canon_cell(v):
         return repr(v)
     if isinstance(v, bool):
         return str(int(v))
+    # tag strings so that a string never equals a number, NULL or NaN
+    # with the same text: 123 and '123' hash differently in the driver
+    if isinstance(v, str):
+        return "s:" + v
     return str(v)
 
 
