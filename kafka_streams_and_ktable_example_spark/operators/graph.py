@@ -35,6 +35,28 @@ NATION_TRADE_SQL = """  FROM lineitem l
   JOIN customer c ON o.o_custkey = c.c_custkey
 """
 CROSS_BORDER_SQL = NATION_TRADE_SQL + "  WHERE s.s_nationkey <> c.c_nationkey\n"
+# The distinct undirected cross-border nation pairs (a < b), as the body of
+# an oracle CTE.
+TRADE_PAIRS_SQL = (
+    """  SELECT DISTINCT least(s.s_nationkey, c.c_nationkey) AS a,
+         greatest(s.s_nationkey, c.c_nationkey) AS b
+"""
+    + CROSS_BORDER_SQL
+)
+
+# The undirected weighted trade graph as an oracle's opening CTE:
+# ``ew(a, b, w)``, a < b, w the cross-border lineitems between them.
+TRADE_EDGES_CTE = (
+    """
+WITH ew AS MATERIALIZED (
+  SELECT least(s.s_nationkey, c.c_nationkey) AS a,
+         greatest(s.s_nationkey, c.c_nationkey) AS b,
+         count(*) AS w
+"""
+    + CROSS_BORDER_SQL
+    + """  GROUP BY 1, 2
+)"""
+)
 
 # The part co-purchase graph as an oracle's opening CTE: ``e(pa, pb)``, the
 # distinct part pairs with pa < pb.
@@ -81,6 +103,19 @@ def trade_edges(spark, sf_dir) -> DataFrame:
             F.greatest("s_nationkey", "c_nationkey").alias("b"),
         )
         .agg(F.count("*").alias("w"))
+    )
+
+
+def trade_pairs(spark, sf_dir) -> DataFrame:
+    """The unweighted undirected trade graph: distinct ``(a, b)`` with
+    a < b, one per pair of nations that trade across the border."""
+    return (
+        cross_border_trade(spark, sf_dir)
+        .select(
+            F.least("s_nationkey", "c_nationkey").alias("a"),
+            F.greatest("s_nationkey", "c_nationkey").alias("b"),
+        )
+        .distinct()
     )
 
 

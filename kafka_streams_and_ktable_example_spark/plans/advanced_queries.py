@@ -35,8 +35,10 @@ from ..functions import as_double_array
 from ..operators.graph import (
     CROSS_BORDER_SQL,
     NATION_TRADE_SQL,
+    TRADE_PAIRS_SQL,
     cross_border_trade,
     nation_trade,
+    trade_pairs,
 )
 from ..sources.tables import load_table
 from .catalog import register
@@ -1254,10 +1256,8 @@ def udf_scalar_iter_model_init(spark, sf_dir):
     "graph_kcore_membership",
     oracle="""
 WITH edges0 AS MATERIALIZED (
-  SELECT DISTINCT least(s.s_nationkey, c.c_nationkey) AS a,
-         greatest(s.s_nationkey, c.c_nationkey) AS b
 """
-    + CROSS_BORDER_SQL
+    + TRADE_PAIRS_SQL
     + """), deg0 AS (
   SELECT n, count(*) AS d FROM (
     SELECT a AS n FROM edges0 UNION ALL SELECT b FROM edges0) GROUP BY n
@@ -1296,16 +1296,7 @@ FROM nation nt
     tags=("graph", "iterative", "analytics"),
 )
 def graph_kcore_membership(spark, sf_dir):
-    edges = (
-        cross_border_trade(spark, sf_dir)
-        .select(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .distinct()
-        .coalesce(1)
-        .localCheckpoint()
-    )
+    edges = trade_pairs(spark, sf_dir).coalesce(1).localCheckpoint()
 
     def degrees(e):
         return (

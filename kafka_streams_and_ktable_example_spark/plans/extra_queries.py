@@ -14,7 +14,12 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..operators.graph import CROSS_BORDER_SQL, cross_border_trade
+from ..operators.graph import (
+    CROSS_BORDER_SQL,
+    TRADE_PAIRS_SQL,
+    cross_border_trade,
+    trade_pairs,
+)
 from ..sources.tables import load_table
 from .catalog import register
 from .ktable_queries import _SHAREHOLDERS_CTE, _VIEW_SELECT
@@ -185,15 +190,7 @@ LEFT JOIN (SELECT n, count(*) AS c FROM m GROUP BY n) cnt
 def graph_triangle_count(spark, sf_dir):
     nation = load_table(spark, sf_dir, "nation")
 
-    edges = (
-        cross_border_trade(spark, sf_dir)
-        .select(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .distinct()
-        .persist()
-    )
+    edges = trade_pairs(spark, sf_dir).persist()
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
     e3 = edges.alias("e3")
@@ -1090,10 +1087,8 @@ def agg_weighted_median(spark, sf_dir):
     "graph_neighborhood_jaccard",
     oracle="""
 WITH e AS MATERIALIZED (
-  SELECT DISTINCT least(s.s_nationkey, c.c_nationkey) AS a,
-         greatest(s.s_nationkey, c.c_nationkey) AS b
 """
-    + CROSS_BORDER_SQL
+    + TRADE_PAIRS_SQL
     + """),
 adj AS MATERIALIZED (
   SELECT a AS n, b AS m FROM e UNION SELECT b, a FROM e
@@ -1120,14 +1115,7 @@ JOIN deg db ON db.n = c.n_b
     tags=("graph", "analytics"),
 )
 def graph_neighborhood_jaccard(spark, sf_dir):
-    e = (
-        cross_border_trade(spark, sf_dir)
-        .select(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .distinct()
-    )
+    e = trade_pairs(spark, sf_dir)
     # no distinct() on the doubled edge list: e is distinct with a < b
     # (strict — same-nation pairs are filtered), so branch-1 rows have
     # n < m and branch-2 rows n > m; the union is duplicate-free by

@@ -23,7 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.graph import CROSS_BORDER_SQL, cross_border_trade, trade_edges
+from ..operators.graph import (
+    CROSS_BORDER_SQL,
+    TRADE_EDGES_CTE,
+    cross_border_trade,
+    trade_edges,
+)
 from ..sources.tables import load_table
 from .catalog import register
 
@@ -558,15 +563,8 @@ def graph_closeness_centrality(spark, sf_dir):
 
 @register(
     "graph_modularity_score",
-    oracle="""
-WITH ew AS MATERIALIZED (
-  SELECT least(s.s_nationkey, c.c_nationkey) AS a,
-         greatest(s.s_nationkey, c.c_nationkey) AS b,
-         count(*) AS w
-"""
-    + CROSS_BORDER_SQL
-    + """  GROUP BY 1, 2
-), adj AS MATERIALIZED (
+    oracle=TRADE_EDGES_CTE
+    + """, adj AS MATERIALIZED (
   SELECT a AS n, b AS m, w FROM ew UNION ALL SELECT b, a, w FROM ew
 ), l0 AS (
   SELECT DISTINCT n, n AS lbl FROM adj
@@ -1676,15 +1674,8 @@ def stats_jackknife_ratio_variance(spark, sf_dir):
 
 @register(
     "graph_boruvka_mst_round",
-    oracle="""
-WITH ew AS MATERIALIZED (
-  SELECT least(s.s_nationkey, c.c_nationkey) AS a,
-         greatest(s.s_nationkey, c.c_nationkey) AS b,
-         count(*) AS w
-"""
-    + CROSS_BORDER_SQL
-    + """  GROUP BY 1, 2
-), adj AS MATERIALIZED (
+    oracle=TRADE_EDGES_CTE
+    + """, adj AS MATERIALIZED (
   SELECT a AS n, b AS m, w FROM ew UNION ALL SELECT b, a, w FROM ew
 ), pick AS MATERIALIZED (
   SELECT n, m, w FROM (
@@ -3024,15 +3015,8 @@ def sample_horvitz_thompson(spark, sf_dir):
 
 @register(
     "graph_percolation_profile",
-    oracle="""
-WITH ew AS MATERIALIZED (
-  SELECT least(s.s_nationkey, c.c_nationkey) AS a,
-         greatest(s.s_nationkey, c.c_nationkey) AS b,
-         count(*) AS w
-"""
-    + CROSS_BORDER_SQL
-    + """  GROUP BY 1, 2
-), tot AS (
+    oracle=TRADE_EDGES_CTE
+    + """, tot AS (
   SELECT count(*) AS ne, sum(w) AS tw FROM ew
 ), fracs AS (SELECT unnest([0, 25, 50, 75]) AS pct
 ), kept AS MATERIALIZED (

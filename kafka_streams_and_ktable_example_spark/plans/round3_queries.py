@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.graph import CROSS_BORDER_SQL, trade_edges
+from ..operators.graph import TRADE_EDGES_CTE, trade_edges
 from ..operators.ktable import latest_snapshot
 from ..sources.changelog import orders_changelog, shareholders_changelog
 from ..sources.tables import load_table, register_tables
@@ -1072,15 +1072,8 @@ def events_decayed_popularity(spark, sf_dir):
 
 @register(
     "graph_label_propagation",
-    oracle="""
-WITH ew AS MATERIALIZED (
-  SELECT least(s.s_nationkey, c.c_nationkey) AS a,
-         greatest(s.s_nationkey, c.c_nationkey) AS b,
-         count(*) AS w
-"""
-    + CROSS_BORDER_SQL
-    + """  GROUP BY 1, 2
-), adj AS MATERIALIZED (
+    oracle=TRADE_EDGES_CTE
+    + """, adj AS MATERIALIZED (
   SELECT a AS n, b AS m, w FROM ew UNION ALL SELECT b, a, w FROM ew
 ), l0 AS (
   SELECT DISTINCT n, n AS lbl FROM adj

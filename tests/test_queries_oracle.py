@@ -22,6 +22,20 @@ def test_canon_tells_int_from_str():
     assert canon_rows(["x"], [(123,)]) != canon_rows(["x"], [("123",)])
 
 
+def test_canon_tells_date_from_midnight_timestamp():
+    """Row-wise fetches return datetime.date for a DATE column from both
+    engines, so a DATE must not match a TIMESTAMP at midnight; only the
+    pandas fetch (a midnight Timestamp for DuckDB's DATE) folds the two."""
+    import datetime as dt
+
+    import pandas as pd
+
+    day = dt.date(1995, 3, 15)
+    midnight = dt.datetime(1995, 3, 15)
+    assert canon_rows(["d"], [(day,)]) != canon_rows(["d"], [(midnight,)])
+    assert canon_rows(["d"], [(day,)]) == canon_rows(["d"], [(pd.Timestamp(day),)])
+
+
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duckdb.connect()

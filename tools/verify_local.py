@@ -38,18 +38,21 @@ def canon_cell(v):
     # coerced to float64 stays visibly different from int64.
     if hasattr(v, "item") and type(v).__module__ == "numpy":
         v = v.item()
-    # temporal normalization: Spark's toPandas yields datetime.date for
-    # DATE columns while DuckDB's fetchdf yields midnight Timestamps for
-    # the same values — render every date/datetime as a full ISO instant
-    # so dtype-only differences don't flag (values still compare exactly)
     import datetime as _dt
 
+    # Spark's toPandas yields datetime.date for a DATE column where
+    # DuckDB's fetchdf yields midnight Timestamps, so on the pandas path
+    # (--driver-canon) a midnight Timestamp renders as its date. The
+    # row-wise fetch returns datetime.date from both engines, so there a
+    # DATE never equals a TIMESTAMP at midnight.
+    if type(v).__name__ == "Timestamp":  # pandas, without importing it here
+        v = v.to_pydatetime()
+        if v.time() == _dt.time():
+            return v.date().isoformat()
     if isinstance(v, _dt.datetime):
         return v.isoformat(sep=" ")
     if isinstance(v, _dt.date):
-        return v.isoformat() + " 00:00:00"
-    if type(v).__name__ == "Timestamp":  # pandas, without importing it here
-        return v.to_pydatetime().isoformat(sep=" ")
+        return v.isoformat()
     if v is None:
         return "NULL"
     if isinstance(v, float):
@@ -58,13 +61,13 @@ def canon_cell(v):
         # full shortest-round-trip repr: stricter than any driver hash —
         # if this matches, the doubles are bit-identical across engines
         return repr(v)
-    if isinstance(v, bool):
-        return str(int(v))
-    # tag strings so that a string never equals a number, NULL or NaN
-    # with the same text: 123 and '123' hash differently in the driver
     if isinstance(v, str):
-        return "s:" + v
-    return str(v)
+        return v
+    if isinstance(v, bool):
+        v = int(v)
+    # tag the rest (ints, decimals, nested values): the driver hashes 123
+    # and '123' differently, so a string must never equal a number here
+    return "n:" + str(v)
 
 
 def canon_rows(cols, rows):
