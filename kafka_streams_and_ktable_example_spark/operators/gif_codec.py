@@ -14,8 +14,8 @@ Scope (asserted, not assumed): global color table only (no per-frame
 local tables), no transparency compositing or disposal blending — each
 frame is decoded standalone at full logical-screen size, which is what
 the synthetic fixtures emit; payloads outside the subset raise
-ValueError and PIL takes over when importable
-(operators/multimodal.py::decode_image_bytes).
+ValueError, and no other decoder takes over
+(operators/multimodal.py::decode_image_bytes uses these codecs only).
 
 Determinism note for oracles: GIF is LOSSLESS, so hash-checked queries
 need no quantization closed form at all — the oracle recomputes the

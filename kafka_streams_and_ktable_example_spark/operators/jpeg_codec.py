@@ -24,8 +24,8 @@ PROGRESSIVE (SOF2) is real too, grayscale AND color — spectral selection
 classic six-scan luma plan and libjpeg's ten-scan YCbCr plan with
 interleaved DC scans (see the Annex-G section at the bottom of this
 module). 16-bit (Pq=1) quant tables parse per B.4.1; only 12-bit sample
-precision raises ValueError — PIL takes over when importable
-(operators/multimodal.py::decode_image_bytes).
+precision raises ValueError, and no other decoder takes over
+(operators/multimodal.py::decode_image_bytes uses these codecs only).
 
 Determinism note for oracles: JPEG is lossy, so hash-checked queries use
 BLOCK-CONSTANT source images — every 8x8 block is a single value, the

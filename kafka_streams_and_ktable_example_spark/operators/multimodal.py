@@ -18,13 +18,20 @@ audio via ``operators/adpcm_codec.py`` (adaptive-quantizer encode AND
 decode), for raw-frame video via ``operators/framevid_codec.py``
 (RIFF-style declared-size container), and for COMPRESSED video via
 ``operators/avi_codec.py`` (real RIFF AVI/Motion-JPEG: container walk +
-per-frame JPEG entropy decode) — with PIL picked up automatically when
-importable for other image formats. The byte-statistics stub
-(deterministic fake) remains the oracle path for generic media;
-inter-frame-predicted video (H.26x etc.) still needs ffmpeg on the
-cluster image and raises NotImplementedError. Everything Spark-side is real and
-tested either way: binary columns, typed metadata structs, Arrow-batched
+per-frame JPEG entropy decode). These codecs are the only decoders: a
+format outside them raises NotImplementedError, inter-frame-predicted
+video (H.26x etc.) included, so every decoded pixel is the one the
+oracles' closed forms assume. The byte-statistics stub (deterministic
+fake) is the decode path for generic media. Everything Spark-side is real
+and tested: binary columns, typed metadata structs, Arrow-batched
 mapInPandas signatures, partitioning.
+
+Every per-row operator is one Arrow-batched mapInPandas through
+:func:`_map_rows`, the only place the pandas-batch loop is written. An
+operator supplies a function from one input row's values to one output
+tuple: a synthesizer's is its closed-form pattern plus the encoder, a
+stats operator's is the decode plus the reduction. ``png_patch_stats``
+emits many rows per image and keeps its own loop.
 
 At 100 TB the pattern matters: media bytes stay in binary columns that are
 column-pruned away unless the query touches them, metadata predicates push
@@ -36,15 +43,102 @@ memory is payload-bound, not row-count-bound.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-#: metadata struct every media column carries
-MEDIA_META_FIELDS = "media_type STRING, width INT, height INT, n_frames INT"
+
+def _map_rows(
+    df: DataFrame, cols: list[str], fn: Callable[..., tuple], schema: str
+) -> DataFrame:
+    """Arrow-batched mapInPandas over ``df``'s ``cols``: ``fn(*values)``
+    of each input row is one output row, a tuple in ``schema``'s column
+    order. Values arrive as Python scalars (``bytes`` for a binary
+    column); an empty batch yields an empty frame with the declared
+    columns."""
+    names = StructType.fromDDL(schema).names
+
+    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [fn(*r) for r in pdf.itertuples(index=False, name=None)]
+            yield pd.DataFrame(out, columns=names)
+
+    return df.select(*cols).mapInPandas(rows, schema=schema)
+
+
+def _media_meta(
+    media_type: str, width: Column, height: Column, n_frames: Column
+) -> Column:
+    """The ``media_meta`` struct every synthesized media column carries:
+    (media_type STRING, width INT, height INT, n_frames INT). The sizes
+    are Columns, so a literal stays a non-null literal."""
+    return F.struct(
+        F.lit(media_type).alias("media_type"),
+        width.alias("width"),
+        height.alias("height"),
+        n_frames.alias("n_frames"),
+    ).alias("media_meta")
+
+
+def _pcm16(i: int, n: int) -> list[int]:
+    """The first ``n`` (at most 16) samples of id ``i``'s synthetic PCM16
+    waveform: sample j is byte pair j of sha256(str(i)), big-endian,
+    minus 32768 — the digest the audio oracles recompute."""
+    dig = hashlib.sha256(str(i).encode()).digest()
+    return [(dig[2 * j] << 8 | dig[2 * j + 1]) - 32768 for j in range(n)]
+
+
+def _gray_ramp(d: int) -> tuple[bytes, int, int]:
+    """Graded gray8 PNG pattern pixel(y, x) = (x + y + id) % 256, size
+    8+id%5 × 8+id%7."""
+    w, h = 8 + d % 5, 8 + d % 7
+    return bytes((x + y + d) % 256 for y in range(h) for x in range(w)), w, h
+
+
+def _gray_blocks(d: int) -> tuple[bytes, int, int]:
+    """Block-constant gray8 JPEG pattern block(bx, by) = (37bx + 53by +
+    11id) % 256, geometry 8*(1 + id%2) × 8*(1 + id%3)."""
+    w, h = 8 * (1 + d % 2), 8 * (1 + d % 3)
+    px = bytes(
+        (37 * (x // 8) + 53 * (y // 8) + 11 * d) % 256
+        for y in range(h)
+        for x in range(w)
+    )
+    return px, w, h
+
+
+def _color_tiles(d: int) -> tuple[bytes, int, int]:
+    """MCU-constant RGB JPEG pattern tile(tx, ty) = ((37tx + 53ty + 11id)
+    % 256, (23tx + 41ty + 7id) % 256, (29tx + 31ty + 13id) % 256),
+    geometry 16*(1 + id%2) × 16*(1 + id%3)."""
+    w, h = 16 * (1 + d % 2), 16 * (1 + d % 3)
+    rgb = bytes(
+        c
+        for y in range(h)
+        for x in range(w)
+        for c in (
+            (37 * (x // 16) + 53 * (y // 16) + 11 * d) % 256,
+            (23 * (x // 16) + 41 * (y // 16) + 7 * d) % 256,
+            (29 * (x // 16) + 31 * (y // 16) + 13 * d) % 256,
+        )
+    )
+    return rgb, w, h
+
+
+def _ahash(w: int, h: int, px: bytes) -> tuple[int, int]:
+    """Average hash of a gray plane: 8x8 nearest-neighbor downsample, bit
+    i set iff pixel i exceeds the integer mean, as (pixels 0-31, 32-63)."""
+    from .png_codec import nearest_resize
+
+    rp = nearest_resize(px, w, h, 8, 8)
+    mean = sum(rp) // 64
+    lo = sum((1 << i) for i in range(32) if rp[i] > mean)
+    hi = sum((1 << i) for i in range(32) if rp[32 + i] > mean)
+    return lo, hi
 
 
 def attach_fake_media(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -72,128 +166,26 @@ def attach_fake_media(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def decode_media(df: DataFrame, fake: bool = True) -> DataFrame:
-    """Decode step: mapInPandas over (id, bytes, meta) batches.
+def decode_media(df: DataFrame) -> DataFrame:
+    """Decode step over (doc_id, media_bytes): a deterministic 4-float
+    feature row per payload (byte-level statistics — a stand-in for
+    decoded-pixel stats)."""
 
-    With ``fake=True`` produces a deterministic 4-float feature row per
-    payload (byte-level statistics — a stand-in for decoded-pixel stats).
-    With ``fake=False`` dispatches on container magic to the repo's REAL
-    codecs — PNG (png_codec), baseline grayscale JPEG (jpeg_codec),
-    RIFF/WAVE PCM16 (wav_codec), IMA-ADPCM (adpcm_codec), FRV1 raw-frame
-    video (framevid_codec) — and raises NotImplementedError only for
-    formats with no codec here (compressed video such as H.26x).
-    """
-
-    def _real_features(payload: bytes) -> tuple[float, float, float, float]:
-        """Dispatch on container magic to the repo's REAL codecs: PNG
-        (png_codec), baseline JPEG (jpeg_codec), RIFF AVI/Motion-JPEG
-        video (avi_codec), RIFF/WAVE PCM16 (wav_codec), IMA-ADPCM
-        (adpcm_codec), FRV1 raw-frame video (framevid_codec).
-        Zero-length media (0-sample
-        WAV/ADPCM, 0-frame FRV1) is valid per the containers and yields
-        zeroed features rather than a ZeroDivisionError."""
-        if payload[:8] == PNG_SIGNATURE or payload[:2] == b"\xff\xd8":
-            w, h, c, px = decode_image_bytes(payload)
-            return (
-                float(w * h),
-                float(c),
-                float(sum(px) / len(px)) if px else 0.0,
-                float(px[0]) if px else 0.0,
-            )
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            from .avi_codec import decode_avi_mjpg
-
-            w, h, _fps, frames = decode_avi_mjpg(payload)
-            npix = len(frames) * w * h
-            return (
-                float(len(frames)),
-                float(w * h),
-                float(sum(sum(f) for f in frames) / npix) if npix else 0.0,
-                float(frames[0][0]) if npix else 0.0,
-            )
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            from .wav_codec import decode_wav
-
-            rate, _, samples = decode_wav(payload)
-            return (
-                float(len(samples)),
-                float(rate),
-                float(sum(samples) / len(samples)) if samples else 0.0,
-                float(max(abs(s) for s in samples)) if samples else 0.0,
-            )
-        if payload[:4] == b"ADP1":
-            from .adpcm_codec import decode as adpcm_decode
-
-            samples = adpcm_decode(payload)
-            return (
-                float(len(samples)),
-                8000.0,
-                float(sum(samples) / len(samples)) if samples else 0.0,
-                float(max(abs(s) for s in samples)) if samples else 0.0,
-            )
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            from .gif_codec import gif_frames_rgb
-
-            w, h, rgb_frames, _delay = gif_frames_rgb(payload)
-            npix = len(rgb_frames) * w * h * 3
-            return (
-                float(len(rgb_frames)),
-                float(w * h),
-                float(sum(sum(f) for f in rgb_frames) / npix) if npix else 0.0,
-                float(rgb_frames[0][0] if rgb_frames and rgb_frames[0] else 0),
-            )
-        if payload[:4] == b"FRV1":
-            from .framevid_codec import decode as frv_decode
-
-            w, h, _fps, frames = frv_decode(payload)
-            npix = len(frames) * w * h
-            return (
-                float(len(frames)),
-                float(w * h),
-                float(sum(sum(f) for f in frames) / npix) if npix else 0.0,
-                float(frames[0][0] if frames and frames[0] else 0),
-            )
-        raise NotImplementedError(
-            "no codec for this payload format (PNG/JPEG/GIF/AVI-MJPG/WAV/"
-            "ADPCM/FRV1 are real; anything else needs PIL/ffmpeg on the "
-            "cluster image)"
+    def row(d, payload):
+        digest = hashlib.sha256(payload).digest()
+        return (
+            d,
+            float(len(payload)),
+            float(payload[0] if payload else 0),
+            float(sum(digest[:8]) / 8.0),
+            float(digest[0]),
         )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                rows = [
-                    (r["doc_id"], *_real_features(bytes(r["media_bytes"])))
-                    for _, r in pdf.iterrows()
-                ]
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "first_byte", "sig_mean", "sig_head",
-                    ],
-                )
-                continue
-            rows = []
-            for _, r in pdf.iterrows():
-                payload: bytes = r["media_bytes"]
-                digest = hashlib.sha256(payload).digest()
-                rows.append(
-                    (
-                        r["doc_id"],
-                        float(len(payload)),
-                        float(payload[0] if payload else 0),
-                        float(sum(digest[:8]) / 8.0),
-                        float(digest[0]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_bytes", "first_byte", "sig_mean", "sig_head"],
-            )
-
-    return df.select("doc_id", "media_bytes").mapInPandas(
-        decode,
-        schema="doc_id long, n_bytes double, first_byte double, "
+    return _map_rows(
+        df,
+        ["doc_id", "media_bytes"],
+        row,
+        "doc_id long, n_bytes double, first_byte double, "
         "sig_mean double, sig_head double",
     )
 
@@ -228,53 +220,30 @@ def resize_media(
     (inflate + unfilter), channel-aware nearest-neighbor resample on the
     decoded pixel grid, and re-encode to a genuine PNG of the same color
     type at the target geometry (png_codec end to end); other formats
-    raise NotImplementedError until PIL/ffmpeg exist on the cluster image.
+    raise NotImplementedError.
     """
+    from . import png_codec
 
-    def _real_resize(payload: bytes) -> bytes:
-        from . import png_codec
+    def stub(d, payload, w, h):
+        out_len = max(1, len(payload) * (target_w * target_h) // (w * h))
+        tiled = (payload * (out_len // max(1, len(payload)) + 1))[:out_len]
+        return d, tiled, target_w, target_h, out_len
 
+    def real(d, payload, _w, _h):
         if payload[:8] != PNG_SIGNATURE:
             raise NotImplementedError(
-                "real resize implemented for PNG payloads; other formats "
-                "need PIL/ffmpeg on the cluster image"
+                "real resize implemented for PNG payloads only"
             )
         w, h, c, px = png_codec.decode(payload)
         out = png_codec.nearest_resize(px, w, h, target_w, target_h, channels=c)
         if c == 1:
-            return png_codec.encode_gray8(out, target_w, target_h)
-        if c == 3:
-            return png_codec.encode_rgb8(out, target_w, target_h)
-        # only reachable via PIL decodes of exotic band counts (e.g. RGBA)
-        raise NotImplementedError("real re-encode implemented for gray8/rgb8")
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                rows = []
-                for _, r in pdf.iterrows():
-                    enc = _real_resize(bytes(r["media_bytes"]))
-                    rows.append(
-                        (r["doc_id"], enc, target_w, target_h, len(enc))
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "media_bytes", "width", "height", "n_bytes",
-                    ],
-                )
-                continue
-            rows = []
-            for _, r in pdf.iterrows():
-                payload: bytes = r["media_bytes"]
-                w, h = int(r["width"]), int(r["height"])
-                out_len = max(1, len(payload) * (target_w * target_h) // (w * h))
-                tiled = (payload * (out_len // max(1, len(payload)) + 1))[:out_len]
-                rows.append((r["doc_id"], tiled, target_w, target_h, out_len))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "media_bytes", "width", "height", "n_bytes"],
-            )
+            enc = png_codec.encode_gray8(out, target_w, target_h)
+        elif c == 3:
+            enc = png_codec.encode_rgb8(out, target_w, target_h)
+        else:
+            # png_codec decodes gray+alpha and RGBA PNGs but encodes neither
+            raise NotImplementedError("real re-encode implemented for gray8/rgb8")
+        return d, enc, target_w, target_h, len(enc)
 
     flat = df.select(
         "doc_id",
@@ -282,39 +251,26 @@ def resize_media(
         F.col("media_meta.width").alias("width"),
         F.col("media_meta.height").alias("height"),
     )
-    return flat.mapInPandas(
-        resize,
-        schema="doc_id long, media_bytes binary, width int, height int, n_bytes long",
+    return _map_rows(
+        flat,
+        flat.columns,
+        stub if fake else real,
+        "doc_id long, media_bytes binary, width int, height int, n_bytes long",
     )
 
 
-# -- real PNG path (no PIL needed; see operators/png_codec.py) -------------
+# -- real image decode (stdlib codecs only) ---------------------------------
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
 def decode_image_bytes(payload: bytes) -> tuple[int, int, int, bytes]:
-    """REAL image decode → (width, height, channels, pixels).
-
-    PIL when importable (any format it knows); otherwise the stdlib
-    codecs — PNG (gray/RGB/paletted) and baseline JPEG (grayscale AND
-    3-component YCbCr color, restart intervals included). Raises
-    NotImplementedError only for formats neither path covers.
+    """REAL image decode → (width, height, channels, pixels) through the
+    stdlib codecs — PNG (gray/RGB/paletted, plus gray+alpha and RGBA),
+    baseline and progressive JPEG (grayscale AND 3-component YCbCr
+    color, restart intervals included), GIF (first frame, RGB) and
+    baseline TIFF. Raises NotImplementedError for any other format.
     """
-    try:
-        import io
-
-        from PIL import Image  # type: ignore
-
-        im = Image.open(io.BytesIO(payload))
-        im.load()
-        if im.mode == "P":
-            # palette-expand so PIL and the stdlib codec agree on the
-            # (w, h, 3, rgb) contract for color-type-3 PNGs
-            im = im.convert("RGB")
-        return im.width, im.height, len(im.getbands()), im.tobytes()
-    except ImportError:
-        pass
     if payload[:8] == PNG_SIGNATURE:
         from . import png_codec
 
@@ -349,7 +305,7 @@ def decode_image_bytes(payload: bytes) -> tuple[int, int, int, bytes]:
 
         return decode_tiff(payload)
     raise NotImplementedError(
-        "no codec for this payload format on this machine (install PIL)"
+        "no codec for this payload format (PNG/JPEG/GIF/TIFF decode here)"
     )
 
 
@@ -360,19 +316,11 @@ def attach_synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     so the bytes crossing the plan are genuine encoded PNGs."""
     from . import png_codec
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 5, 8 + d % 7
-                px = bytes((x + y + d) % 256 for y in range(h) for x in range(w))
-                out.append((d, png_codec.encode_gray8(px, w, h, filter_type=d % 3)))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes"])
+    def row(d):
+        px, w, h = _gray_ramp(d)
+        return d, png_codec.encode_gray8(px, w, h, filter_type=d % 3)
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary"
-    )
+    return _map_rows(df, [id_col], row, f"{id_col} long, media_bytes binary")
 
 
 def attach_synth_png_interlaced(
@@ -387,45 +335,27 @@ def attach_synth_png_interlaced(
     the plain encoding's, so the closed-form checksum oracle holds."""
     from . import png_codec
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 1 + d % 12, 1 + d % 11
-                px = bytes((x + 2 * y + d) % 256 for y in range(h) for x in range(w))
-                out.append(
-                    (
-                        d,
-                        png_codec.encode_gray8(
-                            px, w, h, filter_type=d % 3, interlace=True
-                        ),
-                    )
-                )
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes"])
+    def row(d):
+        w, h = 1 + d % 12, 1 + d % 11
+        px = bytes((x + 2 * y + d) % 256 for y in range(h) for x in range(w))
+        return d, png_codec.encode_gray8(px, w, h, filter_type=d % 3, interlace=True)
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary"
-    )
+    return _map_rows(df, [id_col], row, f"{id_col} long, media_bytes binary")
 
 
 def png_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """REAL decode of PNG payloads (inflate + unfilter) → geometry and an
     exact pixel checksum the oracle can recompute in closed form."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, c, px = decode_image_bytes(bytes(r["media_bytes"]))
-                rows.append((int(r[id_col]), w, h, c, int(sum(px))))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "channels", "pixel_sum"]
-            )
+    def row(d, payload):
+        w, h, c, px = decode_image_bytes(payload)
+        return d, w, h, c, int(sum(px))
 
-    return df.mapInPandas(
-        dec,
-        schema=f"{id_col} long, width int, height int, channels int, pixel_sum long",
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, width int, height int, channels int, pixel_sum long",
     )
 
 
@@ -436,19 +366,16 @@ def png_resize_stats(
     reported as the resized image's exact pixel checksum."""
     from . import png_codec
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, c, px = decode_image_bytes(bytes(r["media_bytes"]))
-                rp = png_codec.nearest_resize(px, w, h, new_w, new_h, channels=c)
-                rows.append((int(r[id_col]), new_w, new_h, int(sum(rp))))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "pixel_sum"]
-            )
+    def row(d, payload):
+        w, h, c, px = decode_image_bytes(payload)
+        rp = png_codec.nearest_resize(px, w, h, new_w, new_h, channels=c)
+        return d, new_w, new_h, int(sum(rp))
 
-    return df.mapInPandas(
-        rs, schema=f"{id_col} long, width int, height int, pixel_sum long"
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, width int, height int, pixel_sum long",
     )
 
 
@@ -460,35 +387,23 @@ def attach_synth_png_rgb(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     PNGs; the oracle recomputes the pattern in closed form."""
     from . import png_codec
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 5, 8 + d % 7
-                px = bytes(
-                    (3 * x + 5 * y + 7 * ch + d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for ch in range(3)
-                )
-                out.append(
-                    (d, png_codec.encode_rgb8(px, w, h, filter_type=d % 3), w, h)
-                )
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "w", "h"])
+    def row(d):
+        w, h = 8 + d % 5, 8 + d % 7
+        px = bytes(
+            (3 * x + 5 * y + 7 * ch + d) % 256
+            for y in range(h)
+            for x in range(w)
+            for ch in range(3)
+        )
+        return d, png_codec.encode_rgb8(px, w, h, filter_type=d % 3), w, h
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int"
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.lit(1).alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
     )
 
 
@@ -502,32 +417,17 @@ def attach_synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     are genuine entropy-coded JPEGs."""
     from .jpeg_codec import encode_gray8_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 * (1 + d % 2), 8 * (1 + d % 3)
-                px = bytes(
-                    (37 * (x // 8) + 53 * (y // 8) + 11 * d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                out.append((d, encode_gray8_jpeg(px, w, h, q=16), w, h))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "w", "h"])
+    def row(d):
+        px, w, h = _gray_blocks(d)
+        return d, encode_gray8_jpeg(px, w, h, q=16), w, h
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int"
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.lit(1).alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
     )
 
 
@@ -542,37 +442,17 @@ def attach_synth_color_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     YCbCr<->RGB conversions replay in SQL (operators/jpeg_codec.py)."""
     from .jpeg_codec import encode_rgb_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 16 * (1 + d % 2), 16 * (1 + d % 3)
-                rgb = bytes(
-                    c
-                    for y in range(h)
-                    for x in range(w)
-                    for c in (
-                        (37 * (x // 16) + 53 * (y // 16) + 11 * d) % 256,
-                        (23 * (x // 16) + 41 * (y // 16) + 7 * d) % 256,
-                        (29 * (x // 16) + 31 * (y // 16) + 13 * d) % 256,
-                    )
-                )
-                out.append((d, encode_rgb_jpeg(rgb, w, h, q=16), w, h))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "w", "h"])
+    def row(d):
+        rgb, w, h = _color_tiles(d)
+        return d, encode_rgb_jpeg(rgb, w, h, q=16), w, h
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int"
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.lit(1).alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
     )
 
 
@@ -586,35 +466,17 @@ def attach_synth_jpeg_dri(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the decoded pixels, so the grayscale closed form still holds."""
     from .jpeg_codec import encode_gray8_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 * (1 + d % 2), 8 * (1 + d % 3)
-                px = bytes(
-                    (37 * (x // 8) + 53 * (y // 8) + 11 * d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payload = encode_gray8_jpeg(
-                    px, w, h, q=16, restart_interval=1 + d % 3
-                )
-                out.append((d, payload, w, h))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "w", "h"])
+    def row(d):
+        px, w, h = _gray_blocks(d)
+        return d, encode_gray8_jpeg(px, w, h, q=16, restart_interval=1 + d % 3), w, h
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int"
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.lit(1).alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
     )
 
 
@@ -629,31 +491,15 @@ def attach_synth_tiff(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pixels directly."""
     from .tiff_codec import encode_tiff
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 9, 4 + d % 6
-                px = bytes(
-                    (x // 4 + y + d) % 256 for y in range(h) for x in range(w)
-                )
-                out.append(
-                    (
-                        d,
-                        encode_tiff(
-                            px, w, h,
-                            rows_per_strip=1 + d % 3,
-                            packbits=True,
-                            big_endian=bool(d % 2),
-                        ),
-                    )
-                )
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes"])
+    def row(d):
+        w, h = 8 + d % 9, 4 + d % 6
+        px = bytes((x // 4 + y + d) % 256 for y in range(h) for x in range(w))
+        payload = encode_tiff(
+            px, w, h, rows_per_strip=1 + d % 3, packbits=True, big_endian=bool(d % 2)
+        )
+        return d, payload
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary"
-    )
+    return _map_rows(df, [id_col], row, f"{id_col} long, media_bytes binary")
 
 
 def attach_synth_crossformat(
@@ -674,34 +520,24 @@ def attach_synth_crossformat(
     w, h = 16, 8
     gray_palette = [(i, i, i) for i in range(256)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                key, fmt = d % 7, d % 3
-                gray = bytes(
-                    (x + 3 * y + 7 * key) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                if fmt == 0:
-                    rgb = bytes(v for g in gray for v in (g, g, g))
-                    payload = png_codec.encode_rgb8(rgb, w, h, filter_type=d % 3)
-                elif fmt == 1:
-                    rgb = bytes(v for g in gray for v in (g, g, g))
-                    payload = encode_tiff(
-                        rgb, w, h, channels=3,
-                        rows_per_strip=1 + d % 3, packbits=True,
-                        big_endian=bool(d % 2),
-                    )
-                else:
-                    payload = encode_gif([gray], w, h, gray_palette)
-                out.append((d, payload, fmt))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "fmt"])
+    def row(d):
+        key, fmt = d % 7, d % 3
+        gray = bytes((x + 3 * y + 7 * key) % 256 for y in range(h) for x in range(w))
+        rgb = bytes(v for g in gray for v in (g, g, g))
+        if fmt == 0:
+            payload = png_codec.encode_rgb8(rgb, w, h, filter_type=d % 3)
+        elif fmt == 1:
+            payload = encode_tiff(
+                rgb, w, h, channels=3,
+                rows_per_strip=1 + d % 3, packbits=True,
+                big_endian=bool(d % 2),
+            )
+        else:
+            payload = encode_gif([gray], w, h, gray_palette)
+        return d, payload, fmt
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, fmt int"
+    return _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, fmt int"
     )
 
 
@@ -716,23 +552,17 @@ def crossformat_dedup_groups(
     verifies the GROUPING ITSELF (membership, sizes, format diversity),
     which is only reproducible if all three decoders emit bit-identical
     pixels for the same logical image."""
-    import hashlib as _hashlib
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, c, px = decode_image_bytes(bytes(r["media_bytes"]))
-                dig = _hashlib.md5(
-                    f"{w}x{h}x{c}:".encode() + bytes(px)
-                ).hexdigest()
-                rows.append((int(r[id_col]), int(r["fmt"]), dig, w, h))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "fmt", "digest", "width", "height"]
-            )
+    def row(d, fmt, payload):
+        w, h, c, px = decode_image_bytes(payload)
+        dig = hashlib.md5(f"{w}x{h}x{c}:".encode() + bytes(px)).hexdigest()
+        return d, fmt, dig, w, h
 
-    decoded = df.select(id_col, "fmt", "media_bytes").mapInPandas(
-        dec, schema=f"{id_col} long, fmt int, digest string, width int, height int"
+    decoded = _map_rows(
+        df,
+        [id_col, "fmt", "media_bytes"],
+        row,
+        f"{id_col} long, fmt int, digest string, width int, height int",
     )
     return decoded.groupBy("digest").agg(
         F.min(id_col).alias("keeper_doc_id"),
@@ -758,33 +588,27 @@ def attach_synth_corrupt_media(
     from .gif_codec import encode_gif
     from .jpeg_codec import encode_gray8_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                fmt = d % 4
-                w, h = 8 + d % 5, 8 + d % 7
-                px = bytes((x + y + d) % 256 for y in range(h) for x in range(w))
-                if fmt in (0, 1):
-                    payload = png_codec.encode_gray8(px, w, h, filter_type=d % 3)
-                    if fmt == 1:
-                        at = payload.index(b"IDAT") + 4 + 2
-                        buf = bytearray(payload)
-                        buf[at] ^= 0xFF  # payload byte flips, CRC does not
-                        payload = bytes(buf)
-                elif fmt == 2:
-                    whole = encode_gray8_jpeg(px, w, h, q=16)
-                    payload = whole[: max(20, len(whole) * 3 // 5)]
-                else:
-                    pal = [(i, i, i) for i in range(256)]
-                    whole = encode_gif([px, px], w, h, pal)
-                    payload = whole[: max(20, len(whole) * 3 // 5)]
-                out.append((d, payload, fmt))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "fmt"])
+    def row(d):
+        fmt = d % 4
+        px, w, h = _gray_ramp(d)
+        if fmt in (0, 1):
+            payload = png_codec.encode_gray8(px, w, h, filter_type=d % 3)
+            if fmt == 1:
+                at = payload.index(b"IDAT") + 4 + 2
+                buf = bytearray(payload)
+                buf[at] ^= 0xFF  # payload byte flips, CRC does not
+                payload = bytes(buf)
+        elif fmt == 2:
+            whole = encode_gray8_jpeg(px, w, h, q=16)
+            payload = whole[: max(20, len(whole) * 3 // 5)]
+        else:
+            pal = [(i, i, i) for i in range(256)]
+            whole = encode_gif([px, px], w, h, pal)
+            payload = whole[: max(20, len(whole) * 3 // 5)]
+        return d, payload, fmt
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, fmt int"
+    return _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, fmt int"
     )
 
 
@@ -803,33 +627,29 @@ def media_quarantine_stats(
     from .gif_codec import decode_gif
     from .jpeg_codec import decode_gray8_jpeg
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = bytes(r["media_bytes"])
-                ok, psum = 1, 0
-                try:
-                    if payload[:8] == PNG_SIGNATURE:
-                        _w, _h, _c, px = png_codec.decode(payload)
-                        psum = int(sum(px))
-                    elif payload[:2] == b"\xff\xd8":
-                        _w, _h, px = decode_gray8_jpeg(payload)
-                        psum = int(sum(px))
-                    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                        _w, _h, frames, _pal, _d = decode_gif(payload)
-                        psum = int(sum(sum(f) for f in frames))
-                    else:
-                        ok = 0
-                except ValueError:
-                    ok = 0
-                rows.append((int(r[id_col]), int(r["fmt"]), ok, psum))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "fmt", "ok", "psum"]
-            )
+    def row(d, fmt, payload):
+        ok, psum = 1, 0
+        try:
+            if payload[:8] == PNG_SIGNATURE:
+                _w, _h, _c, px = png_codec.decode(payload)
+                psum = int(sum(px))
+            elif payload[:2] == b"\xff\xd8":
+                _w, _h, px = decode_gray8_jpeg(payload)
+                psum = int(sum(px))
+            elif payload[:6] in (b"GIF87a", b"GIF89a"):
+                _w, _h, frames, _pal, _d = decode_gif(payload)
+                psum = int(sum(sum(f) for f in frames))
+            else:
+                ok = 0
+        except ValueError:
+            ok = 0
+        return d, fmt, ok, psum
 
-    decoded = df.select(id_col, "fmt", "media_bytes").mapInPandas(
-        dec, schema=f"{id_col} long, fmt int, ok int, psum long"
+    decoded = _map_rows(
+        df,
+        [id_col, "fmt", "media_bytes"],
+        row,
+        f"{id_col} long, fmt int, ok int, psum long",
     )
     return decoded.groupBy("fmt").agg(
         F.count("*").alias("n"),
@@ -852,41 +672,27 @@ def attach_synth_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     palette = [((3 * i) % 256, (5 * i) % 256, (7 * i) % 256) for i in range(16)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h, nf = 8 * (1 + d % 2), 8, 2 + d % 3
-                frames = [
-                    bytes(
-                        (x + 2 * y + 3 * f + d) % 16
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    for f in range(nf)
-                ]
-                payload = encode_gif(
-                    frames, w, h, palette,
-                    delay_cs=4 + d % 5, interlace_first=bool(d % 2),
-                )
-                out.append((d, payload, w, h, nf))
-            yield pd.DataFrame(
-                out, columns=[id_col, "media_bytes", "w", "h", "nf"]
-            )
+    def row(d):
+        w, h, nf = 8 * (1 + d % 2), 8, 2 + d % 3
+        frames = [
+            bytes((x + 2 * y + 3 * f + d) % 16 for y in range(h) for x in range(w))
+            for f in range(nf)
+        ]
+        payload = encode_gif(
+            frames, w, h, palette, delay_cs=4 + d % 5, interlace_first=bool(d % 2)
+        )
+        return d, payload, w, h, nf
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int, nf int"
+    flat = _map_rows(
+        df,
+        [id_col],
+        row,
+        f"{id_col} long, media_bytes binary, w int, h int, nf int",
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.col("nf").alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("video", F.col("w"), F.col("h"), F.col("nf")),
     )
 
 
@@ -897,38 +703,26 @@ def gif_animation_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     operators/gif_codec.py)."""
     from .gif_codec import gif_frames_rgb
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, frames, delay = gif_frames_rgb(bytes(r["media_bytes"]))
-                rows.append(
-                    (
-                        int(r[id_col]),
-                        w,
-                        h,
-                        len(frames),
-                        delay,
-                        int(sum(sum(f[0::3]) for f in frames)),
-                        int(sum(sum(f[1::3]) for f in frames)),
-                        int(sum(sum(f[2::3]) for f in frames)),
-                        int(sum(frames[0])),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "n_frames", "delay_cs",
-                    "sum_r", "sum_g", "sum_b", "sum_f0",
-                ],
-            )
+    def row(d, payload):
+        w, h, frames, delay = gif_frames_rgb(payload)
+        return (
+            d,
+            w,
+            h,
+            len(frames),
+            delay,
+            int(sum(sum(f[0::3]) for f in frames)),
+            int(sum(sum(f[1::3]) for f in frames)),
+            int(sum(sum(f[2::3]) for f in frames)),
+            int(sum(frames[0])),
+        )
 
-    return df.select(id_col, "media_bytes").mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, width int, height int, n_frames int, "
-            "delay_cs int, sum_r long, sum_g long, sum_b long, sum_f0 long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, width int, height int, n_frames int, "
+        "delay_cs int, sum_r long, sum_g long, sum_b long, sum_f0 long",
     )
 
 
@@ -945,32 +739,17 @@ def attach_synth_progressive_jpeg(
     block-constant closed form still hash-checks the decode."""
     from .jpeg_codec import encode_gray8_progressive
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 * (1 + d % 2), 8 * (1 + d % 3)
-                px = bytes(
-                    (37 * (x // 8) + 53 * (y // 8) + 11 * d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                out.append((d, encode_gray8_progressive(px, w, h, q=16), w, h))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "w", "h"])
+    def row(d):
+        px, w, h = _gray_blocks(d)
+        return d, encode_gray8_progressive(px, w, h, q=16), w, h
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int"
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.lit(1).alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
     )
 
 
@@ -986,37 +765,17 @@ def attach_synth_progressive_color_jpeg(
     encoding, so the color closed form still hash-checks the decode."""
     from .jpeg_codec import encode_rgb_progressive
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 16 * (1 + d % 2), 16 * (1 + d % 3)
-                rgb = bytes(
-                    c
-                    for y in range(h)
-                    for x in range(w)
-                    for c in (
-                        (37 * (x // 16) + 53 * (y // 16) + 11 * d) % 256,
-                        (23 * (x // 16) + 41 * (y // 16) + 7 * d) % 256,
-                        (29 * (x // 16) + 31 * (y // 16) + 13 * d) % 256,
-                    )
-                )
-                out.append((d, encode_rgb_progressive(rgb, w, h, q=16), w, h))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "w", "h"])
+    def row(d):
+        rgb, w, h = _color_tiles(d)
+        return d, encode_rgb_progressive(rgb, w, h, q=16), w, h
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int"
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.lit(1).alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
     )
 
 
@@ -1026,32 +785,16 @@ def jpeg_color_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     IDCT, chroma upsample, integer YCbCr→RGB — jpeg_codec.py)."""
     from .jpeg_codec import decode_rgb_jpeg
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, px = decode_rgb_jpeg(bytes(r["media_bytes"]))
-                rows.append(
-                    (
-                        int(r[id_col]),
-                        w,
-                        h,
-                        int(sum(px[0::3])),
-                        int(sum(px[1::3])),
-                        int(sum(px[2::3])),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "sum_r", "sum_g", "sum_b"],
-            )
+    def row(d, payload):
+        w, h, px = decode_rgb_jpeg(payload)
+        return d, w, h, int(sum(px[0::3])), int(sum(px[1::3])), int(sum(px[2::3]))
 
-    return df.select(id_col, "media_bytes").mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, width int, height int, "
-            "sum_r long, sum_g long, sum_b long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, width int, height int, "
+        "sum_r long, sum_g long, sum_b long",
     )
 
 
@@ -1060,18 +803,15 @@ def jpeg_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     checksum (huffman scan, dequantize, IDCT, clamp — jpeg_codec.py)."""
     from .jpeg_codec import decode_gray8_jpeg
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, px = decode_gray8_jpeg(bytes(r["media_bytes"]))
-                rows.append((int(r[id_col]), w, h, int(sum(px))))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "pixel_sum"]
-            )
+    def row(d, payload):
+        w, h, px = decode_gray8_jpeg(payload)
+        return d, w, h, int(sum(px))
 
-    return df.select(id_col, "media_bytes").mapInPandas(
-        dec, schema=f"{id_col} long, width int, height int, pixel_sum long"
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, width int, height int, pixel_sum long",
     )
 
 
@@ -1087,19 +827,15 @@ def jpeg_resize_stats(
     from .jpeg_codec import decode_gray8_jpeg
     from .png_codec import nearest_resize
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, px = decode_gray8_jpeg(bytes(r["media_bytes"]))
-                out = nearest_resize(px, w, h, new_w, new_h, channels=1)
-                rows.append((int(r[id_col]), new_w, new_h, int(sum(out))))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "pixel_sum"]
-            )
+    def row(d, payload):
+        w, h, px = decode_gray8_jpeg(payload)
+        return d, new_w, new_h, int(sum(nearest_resize(px, w, h, new_w, new_h)))
 
-    return df.select(id_col, "media_bytes").mapInPandas(
-        dec, schema=f"{id_col} long, width int, height int, pixel_sum long"
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, width int, height int, pixel_sum long",
     )
 
 
@@ -1112,35 +848,23 @@ def attach_synth_avi(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     entropy coding — operators/avi_codec.py."""
     from .avi_codec import encode_avi_mjpg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h, n = 16, 8, 2 + d % 3
-                frames = [
-                    bytes(
-                        (37 * (x // 8) + 11 * d + 19 * f) % 256
-                        for _y in range(h)
-                        for x in range(w)
-                    )
-                    for f in range(n)
-                ]
-                out.append((d, encode_avi_mjpg(frames, w, h, fps=10), n))
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "nf"])
+    def row(d):
+        w, h, n = 16, 8, 2 + d % 3
+        frames = [
+            bytes(
+                (37 * (x // 8) + 11 * d + 19 * f) % 256
+                for _y in range(h)
+                for x in range(w)
+            )
+            for f in range(n)
+        ]
+        return d, encode_avi_mjpg(frames, w, h, fps=10), n
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, nf int"
-    )
+    flat = _map_rows(df, [id_col], row, f"{id_col} long, media_bytes binary, nf int")
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit(16).alias("width"),
-            F.lit(8).alias("height"),
-            F.col("nf").alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("video", F.lit(16), F.lit(8), F.col("nf")),
     )
 
 
@@ -1151,36 +875,24 @@ def avi_video_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     one wrong huffman bit shifts the sums."""
     from .avi_codec import decode_avi_mjpg
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, fps, frames = decode_avi_mjpg(bytes(r["media_bytes"]))
-                rows.append(
-                    (
-                        int(r[id_col]),
-                        len(frames),
-                        w,
-                        h,
-                        fps,
-                        int(sum(sum(f) for f in frames)),
-                        int(sum(frames[0])) if frames else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_frames", "width", "height", "fps",
-                    "pixel_sum", "sum_f0",
-                ],
-            )
+    def row(d, payload):
+        w, h, fps, frames = decode_avi_mjpg(payload)
+        return (
+            d,
+            len(frames),
+            w,
+            h,
+            fps,
+            int(sum(sum(f) for f in frames)),
+            int(sum(frames[0])) if frames else 0,
+        )
 
-    return df.select(id_col, "media_bytes").mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, n_frames int, width int, height int, "
-            "fps int, pixel_sum long, sum_f0 long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, n_frames int, width int, height int, "
+        "fps int, pixel_sum long, sum_f0 long",
     )
 
 
@@ -1193,41 +905,22 @@ def attach_synth_png_pal(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     recomputes the palette lookup in closed form."""
     from . import png_codec
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 5, 8 + d % 7
-                palette = [
-                    ((7 * p + d) % 256, (11 * p + 2 * d) % 256, (13 * p + 3 * d) % 256)
-                    for p in range(16)
-                ]
-                idx = bytes(
-                    (x + 2 * y + d) % 16 for y in range(h) for x in range(w)
-                )
-                out.append(
-                    (
-                        d,
-                        png_codec.encode_pal8(idx, w, h, palette, filter_type=d % 3),
-                        w,
-                        h,
-                    )
-                )
-            yield pd.DataFrame(out, columns=[id_col, "media_bytes", "w", "h"])
+    def row(d):
+        w, h = 8 + d % 5, 8 + d % 7
+        palette = [
+            ((7 * p + d) % 256, (11 * p + 2 * d) % 256, (13 * p + 3 * d) % 256)
+            for p in range(16)
+        ]
+        idx = bytes((x + 2 * y + d) % 16 for y in range(h) for x in range(w))
+        return d, png_codec.encode_pal8(idx, w, h, palette, filter_type=d % 3), w, h
 
-    flat = df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, media_bytes binary, w int, h int"
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
     )
     return flat.select(
         id_col,
         "media_bytes",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.lit(1).alias("n_frames"),
-        ).alias("media_meta"),
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
     )
 
 
@@ -1237,31 +930,19 @@ def png_channel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     sum_g/sum_b zero). Strictly stronger than png_decode_stats for color
     payloads: a channel-swap bug keeps pixel_sum but breaks sum_r/g/b."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, c, px = decode_image_bytes(bytes(r["media_bytes"]))
-                sums = [0, 0, 0]
-                for k, v in enumerate(px):
-                    sums[k % c] += v
-                rows.append(
-                    (int(r[id_col]), w, h, c, int(sum(px)), *map(int, sums))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "channels",
-                    "pixel_sum", "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def row(d, payload):
+        w, h, c, px = decode_image_bytes(payload)
+        sums = [0, 0, 0]
+        for k, v in enumerate(px):
+            sums[k % c] += v
+        return d, w, h, c, int(sum(px)), *sums
 
-    return df.select(id_col, "media_bytes").mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, width int, height int, channels int, "
-            "pixel_sum long, sum_r long, sum_g long, sum_b long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, width int, height int, channels int, "
+        "pixel_sum long, sum_r long, sum_g long, sum_b long",
     )
 
 
@@ -1271,53 +952,30 @@ def attach_synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     so the oracle recomputes the waveform from the same digest."""
     from .wav_codec import encode_wav
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].tolist()
-            payloads = []
-            for i in ids:
-                dig = hashlib.sha256(str(i).encode()).digest()
-                samples = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(16)
-                ]
-                payloads.append(encode_wav(samples))
-            yield pd.DataFrame({id_col: ids, "wav_bytes": payloads})
-
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, wav_bytes binary"
+    return _map_rows(
+        df,
+        [id_col],
+        lambda i: (i, encode_wav(_pcm16(i, 16))),
+        f"{id_col} long, wav_bytes binary",
     )
 
 
 def wav_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode the WAV container (REAL RIFF chunk-walk parse) and reduce to
-    integer waveform statistics the oracle can recompute."""
+    integer waveform statistics the oracle can recompute. A 0-sample
+    payload is a valid container and yields zeroed stats."""
     from .wav_codec import decode_wav
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                id_col: [],
-                "sample_rate": [],
-                "n_samples": [],
-                "peak": [],
-                "energy": [],
-            }
-            for i, payload in zip(b[id_col], b["wav_bytes"]):
-                rate, _, samples = decode_wav(bytes(payload))
-                out[id_col].append(i)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["peak"].append(max(abs(s) for s in samples))
-                out["energy"].append(sum(s * s for s in samples))
-            yield pd.DataFrame(out)
+    def row(i, payload):
+        rate, _, samples = decode_wav(payload)
+        peak = max((abs(s) for s in samples), default=0)
+        return i, rate, len(samples), peak, sum(s * s for s in samples)
 
-    return df.mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, sample_rate int, n_samples int, "
-            "peak int, energy long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "wav_bytes"],
+        row,
+        f"{id_col} long, sample_rate int, n_samples int, peak int, energy long",
     )
 
 
@@ -1327,21 +985,11 @@ def attach_synth_wav_stereo(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (frame-interleaved L R L R …, the RIFF wire layout)."""
     from .wav_codec import encode_wav
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].tolist()
-            payloads = []
-            for i in ids:
-                dig = hashlib.sha256(str(i).encode()).digest()
-                samples = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(16)
-                ]
-                payloads.append(encode_wav(samples, channels=2))
-            yield pd.DataFrame({id_col: ids, "wav_bytes": payloads})
-
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, wav_bytes binary"
+    return _map_rows(
+        df,
+        [id_col],
+        lambda i: (i, encode_wav(_pcm16(i, 16), channels=2)),
+        f"{id_col} long, wav_bytes binary",
     )
 
 
@@ -1349,45 +997,32 @@ def wav_stereo_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode a stereo WAV (REAL RIFF parse incl. block-align checks),
     de-interleave the channels, and reduce to exact per-channel integer
     stats plus the L·R frame dot product (a mono-downmix/abs-stat bug
-    keeps per-channel energies but breaks lr_dot)."""
+    keeps per-channel energies but breaks lr_dot). A 0-frame payload is
+    a valid container and yields zeroed stats."""
     from .wav_codec import decode_wav
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i, payload in zip(b[id_col], b["wav_bytes"]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                if ch != 2:
-                    raise ValueError("expected a stereo payload")
-                left, right = samples[0::2], samples[1::2]
-                # 0-frame payloads are valid RIFF: zeroed stats, same as
-                # decode_media's zero-length-media contract
-                rows.append(
-                    (
-                        int(i),
-                        rate,
-                        len(left),
-                        max((abs(s) for s in left), default=0),
-                        max((abs(s) for s in right), default=0),
-                        sum(s * s for s in left),
-                        sum(s * s for s in right),
-                        sum(l * r for l, r in zip(left, right)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "sample_rate", "n_frames",
-                    "peak_l", "peak_r", "energy_l", "energy_r", "lr_dot",
-                ],
-            )
+    def row(i, payload):
+        rate, ch, samples = decode_wav(payload)
+        if ch != 2:
+            raise ValueError("expected a stereo payload")
+        left, right = samples[0::2], samples[1::2]
+        return (
+            i,
+            rate,
+            len(left),
+            max((abs(s) for s in left), default=0),
+            max((abs(s) for s in right), default=0),
+            sum(s * s for s in left),
+            sum(s * s for s in right),
+            sum(l * r for l, r in zip(left, right)),
+        )
 
-    return df.mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, sample_rate int, n_frames int, peak_l int, "
-            "peak_r int, energy_l long, energy_r long, lr_dot long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "wav_bytes"],
+        row,
+        f"{id_col} long, sample_rate int, n_frames int, peak_l int, "
+        "peak_r int, energy_l long, energy_r long, lr_dot long",
     )
 
 
@@ -1398,70 +1033,53 @@ def attach_synth_adpcm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     so the bytes crossing the plan are actual 4-bit compressed audio."""
     from .adpcm_codec import encode
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].tolist()
-            payloads = []
-            for i in ids:
-                dig = hashlib.sha256(str(i).encode()).digest()
-                samples = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(16)
-                ]
-                payloads.append(encode(samples))
-            yield pd.DataFrame({id_col: ids, "adpcm_bytes": payloads})
+    return _map_rows(
+        df,
+        [id_col],
+        lambda i: (i, encode(_pcm16(i, 16))),
+        f"{id_col} long, adpcm_bytes binary",
+    )
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, adpcm_bytes binary"
+
+def _roundtrip_stats(
+    df: DataFrame, id_col: str, bytes_col: str, decode: Callable[[bytes], list]
+) -> DataFrame:
+    """Reduce a lossy audio round trip to exact integer stats: peak of the
+    original waveform (recomputed from the digest, proving sample
+    parity), energy of the RECONSTRUCTED waveform, and the max/sum
+    absolute quantization error. A 0-sample payload is a valid container
+    and yields zeroed stats."""
+
+    def row(i, payload):
+        recon = decode(payload)
+        orig = _pcm16(i, len(recon))
+        errs = [abs(a - b) for a, b in zip(orig, recon)]
+        return (
+            i,
+            max((abs(s) for s in orig), default=0),
+            sum(r * r for r in recon),
+            max(errs, default=0),
+            sum(errs),
+        )
+
+    return _map_rows(
+        df,
+        [id_col, bytes_col],
+        row,
+        f"{id_col} long, peak_orig long, energy_recon long, "
+        "max_abs_err long, sum_abs_err long",
     )
 
 
 def adpcm_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Parse + decode the ADPCM container (REAL adaptive-quantizer state
-    machine) and reduce the lossy round trip to exact integer stats —
-    peak of the original waveform (recomputed from the digest, proving
-    sample parity), energy of the RECONSTRUCTED waveform, and the max/sum
-    absolute quantization error. The oracle replays the identical encoder
+    machine) and reduce the lossy round trip to exact integer stats
+    (:func:`_roundtrip_stats`). The oracle replays the identical encoder
     state machine with a recursive CTE, so every predictor/step-index
     transition is value-checked."""
     from .adpcm_codec import decode
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                id_col: [],
-                "peak_orig": [],
-                "energy_recon": [],
-                "max_abs_err": [],
-                "sum_abs_err": [],
-            }
-            for i, payload in zip(b[id_col], b["adpcm_bytes"]):
-                recon = decode(bytes(payload))
-                dig = hashlib.sha256(str(int(i)).encode()).digest()
-                orig = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(len(recon))
-                ]
-                out[id_col].append(i)
-                # 0-sample payloads are valid containers: zeroed stats,
-                # same as decode_media's zero-length-media contract
-                out["peak_orig"].append(max((abs(s) for s in orig), default=0))
-                out["energy_recon"].append(sum(r * r for r in recon))
-                out["max_abs_err"].append(
-                    max((abs(a - b_) for a, b_ in zip(orig, recon)), default=0)
-                )
-                out["sum_abs_err"].append(
-                    sum(abs(a - b_) for a, b_ in zip(orig, recon))
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, peak_orig long, energy_recon long, "
-            "max_abs_err long, sum_abs_err long"
-        ),
-    )
+    return _roundtrip_stats(df, id_col, "adpcm_bytes", decode)
 
 
 def attach_synth_mulaw(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1471,21 +1089,11 @@ def attach_synth_mulaw(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     actual 8-bit logarithmic PCM."""
     from .g711_codec import encode
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].tolist()
-            payloads = []
-            for i in ids:
-                dig = hashlib.sha256(str(i).encode()).digest()
-                samples = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(16)
-                ]
-                payloads.append(encode(samples))
-            yield pd.DataFrame({id_col: ids, "mulaw_bytes": payloads})
-
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, mulaw_bytes binary"
+    return _map_rows(
+        df,
+        [id_col],
+        lambda i: (i, encode(_pcm16(i, 16))),
+        f"{id_col} long, mulaw_bytes binary",
     )
 
 
@@ -1496,21 +1104,11 @@ def attach_synth_alaw(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     — actual European-telephony 8-bit logarithmic PCM on the wire."""
     from .g711_codec import alaw_encode
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].tolist()
-            payloads = []
-            for i in ids:
-                dig = hashlib.sha256(str(i).encode()).digest()
-                samples = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(16)
-                ]
-                payloads.append(alaw_encode(samples))
-            yield pd.DataFrame({id_col: ids, "alaw_bytes": payloads})
-
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, alaw_bytes binary"
+    return _map_rows(
+        df,
+        [id_col],
+        lambda i: (i, alaw_encode(_pcm16(i, 16))),
+        f"{id_col} long, alaw_bytes binary",
     )
 
 
@@ -1520,40 +1118,7 @@ def alaw_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     of mulaw_roundtrip_stats."""
     from .g711_codec import alaw_decode
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                id_col: [],
-                "peak_orig": [],
-                "energy_recon": [],
-                "max_abs_err": [],
-                "sum_abs_err": [],
-            }
-            for i, payload in zip(b[id_col], b["alaw_bytes"]):
-                recon = alaw_decode(bytes(payload))
-                dig = hashlib.sha256(str(int(i)).encode()).digest()
-                orig = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(len(recon))
-                ]
-                out[id_col].append(i)
-                out["peak_orig"].append(max((abs(s) for s in orig), default=0))
-                out["energy_recon"].append(sum(r * r for r in recon))
-                out["max_abs_err"].append(
-                    max((abs(a - b_) for a, b_ in zip(orig, recon)), default=0)
-                )
-                out["sum_abs_err"].append(
-                    sum(abs(a - b_) for a, b_ in zip(orig, recon))
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, peak_orig long, energy_recon long, "
-            "max_abs_err long, sum_abs_err long"
-        ),
-    )
+    return _roundtrip_stats(df, id_col, "alaw_bytes", alaw_decode)
 
 
 def mulaw_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1563,42 +1128,7 @@ def mulaw_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     oracle replay encode→decode with plain integer CASE arithmetic."""
     from .g711_codec import decode
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                id_col: [],
-                "peak_orig": [],
-                "energy_recon": [],
-                "max_abs_err": [],
-                "sum_abs_err": [],
-            }
-            for i, payload in zip(b[id_col], b["mulaw_bytes"]):
-                recon = decode(bytes(payload))
-                dig = hashlib.sha256(str(int(i)).encode()).digest()
-                orig = [
-                    (dig[2 * j] << 8 | dig[2 * j + 1]) - 32768
-                    for j in range(len(recon))
-                ]
-                out[id_col].append(i)
-                # 0-sample payloads are valid containers: zeroed stats,
-                # same as decode_media's zero-length-media contract
-                out["peak_orig"].append(max((abs(s) for s in orig), default=0))
-                out["energy_recon"].append(sum(r * r for r in recon))
-                out["max_abs_err"].append(
-                    max((abs(a - b_) for a, b_ in zip(orig, recon)), default=0)
-                )
-                out["sum_abs_err"].append(
-                    sum(abs(a - b_) for a, b_ in zip(orig, recon))
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, peak_orig long, energy_recon long, "
-            "max_abs_err long, sum_abs_err long"
-        ),
-    )
+    return _roundtrip_stats(df, id_col, "mulaw_bytes", decode)
 
 
 def attach_synth_framevid(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1609,27 +1139,15 @@ def attach_synth_framevid(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     oracle recomputes every frame statistic in closed form."""
     from .framevid_codec import encode
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b[id_col].tolist()
-            payloads = []
-            for d in ids:
-                d = int(d)
-                w, h = 8, 6
-                frames = [
-                    bytes(
-                        (x + 2 * y + f * f + d) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    for f in range(4 + d % 5)
-                ]
-                payloads.append(encode(frames, w, h))
-            yield pd.DataFrame({id_col: ids, "video_bytes": payloads})
+    def row(d):
+        w, h = 8, 6
+        frames = [
+            bytes((x + 2 * y + f * f + d) % 256 for y in range(h) for x in range(w))
+            for f in range(4 + d % 5)
+        ]
+        return d, encode(frames, w, h)
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, video_bytes binary"
-    )
+    return _map_rows(df, [id_col], row, f"{id_col} long, video_bytes binary")
 
 
 def framevid_scene_stats(
@@ -1642,33 +1160,17 @@ def framevid_scene_stats(
     Only the scalars leave Python; frames never cross the shuffle."""
     from .framevid_codec import decode
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                id_col: [],
-                "n_frames": [],
-                "pixel_sum": [],
-                "n_scene_cuts": [],
-            }
-            for i, payload in zip(b[id_col], b["video_bytes"]):
-                _w, _h, _fps, frames = decode(bytes(payload))
-                means = [sum(f) // len(f) for f in frames]
-                cuts = sum(
-                    1
-                    for a, b_ in zip(means, means[1:])
-                    if abs(a - b_) >= cut_threshold
-                )
-                out[id_col].append(i)
-                out["n_frames"].append(len(frames))
-                out["pixel_sum"].append(sum(sum(f) for f in frames))
-                out["n_scene_cuts"].append(cuts)
-            yield pd.DataFrame(out)
+    def row(i, payload):
+        _w, _h, _fps, frames = decode(payload)
+        means = [sum(f) // len(f) for f in frames]
+        cuts = sum(1 for a, b in zip(means, means[1:]) if abs(a - b) >= cut_threshold)
+        return i, len(frames), sum(sum(f) for f in frames), cuts
 
-    return df.mapInPandas(
-        dec,
-        schema=(
-            f"{id_col} long, n_frames long, pixel_sum long, n_scene_cuts long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "video_bytes"],
+        row,
+        f"{id_col} long, n_frames long, pixel_sum long, n_scene_cuts long",
     )
 
 
@@ -1677,26 +1179,16 @@ def png_ahash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     set iff resampled pixel i exceeds the integer mean — the standard
     perceptual aHash, packed as two 32-bit words (lo: pixels 0-31, hi:
     32-63) so both engines stay in non-negative BIGINT arithmetic."""
-    from . import png_codec
 
-    def ah(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, _c, px = decode_image_bytes(bytes(r["media_bytes"]))
-                rp = png_codec.nearest_resize(px, w, h, 8, 8)
-                mean = sum(rp) // 64
-                lo = sum(
-                    (1 << i) for i in range(32) if rp[i] > mean
-                )
-                hi = sum(
-                    (1 << i) for i in range(32) if rp[32 + i] > mean
-                )
-                rows.append((int(r[id_col]), lo, hi))
-            yield pd.DataFrame(rows, columns=[id_col, "ahash_lo", "ahash_hi"])
+    def row(d, payload):
+        w, h, _c, px = decode_image_bytes(payload)
+        return d, *_ahash(w, h, px)
 
-    return df.mapInPandas(
-        ah, schema=f"{id_col} long, ahash_lo long, ahash_hi long"
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, ahash_lo long, ahash_hi long",
     )
 
 
@@ -1709,37 +1201,17 @@ def png_ahash_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decodes each image once and emits both result groups; each output
     column is byte-identical to its unfused counterpart (pinned by
     tests/test_multimodal_fused.py against the composed originals)."""
-    from . import png_codec
 
-    def ahs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                w, h, c, px = decode_image_bytes(bytes(r["media_bytes"]))
-                rp = png_codec.nearest_resize(px, w, h, 8, 8)
-                mean = sum(rp) // 64
-                lo = sum((1 << i) for i in range(32) if rp[i] > mean)
-                hi = sum((1 << i) for i in range(32) if rp[32 + i] > mean)
-                rows.append((int(r[id_col]), lo, hi, w, h, c, int(sum(px))))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col,
-                    "ahash_lo",
-                    "ahash_hi",
-                    "width",
-                    "height",
-                    "channels",
-                    "pixel_sum",
-                ],
-            )
+    def row(d, payload):
+        w, h, c, px = decode_image_bytes(payload)
+        return d, *_ahash(w, h, px), w, h, c, int(sum(px))
 
-    return df.mapInPandas(
-        ahs,
-        schema=(
-            f"{id_col} long, ahash_lo long, ahash_hi long, width int,"
-            " height int, channels int, pixel_sum long"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "media_bytes"],
+        row,
+        f"{id_col} long, ahash_lo long, ahash_hi long, width int,"
+        " height int, channels int, pixel_sum long",
     )
 
 
@@ -1762,45 +1234,30 @@ def wav_vad_segments(
     """
     from .wav_codec import decode_wav
 
-    def seg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                id_col: [],
-                "n_frames": [],
-                "n_active": [],
-                "n_segments": [],
-                "max_run": [],
-            }
-            for i, payload in zip(b[id_col], b["wav_bytes"]):
-                _, _, samples = decode_wav(bytes(payload))
-                flags = []
-                for f0 in range(0, len(samples) - frame + 1, frame):
-                    e = sum(s * s for s in samples[f0 : f0 + frame])
-                    flags.append(e > threshold)
-                n_seg = run = best = 0
-                prev = False
-                for a in flags:
-                    if a:
-                        run += 1
-                        best = max(best, run)
-                        if not prev:
-                            n_seg += 1
-                    else:
-                        run = 0
-                    prev = a
-                out[id_col].append(i)
-                out["n_frames"].append(len(flags))
-                out["n_active"].append(sum(flags))
-                out["n_segments"].append(n_seg)
-                out["max_run"].append(best)
-            yield pd.DataFrame(out)
+    def row(i, payload):
+        _, _, samples = decode_wav(payload)
+        flags = [
+            sum(s * s for s in samples[f0 : f0 + frame]) > threshold
+            for f0 in range(0, len(samples) - frame + 1, frame)
+        ]
+        n_seg = run = best = 0
+        prev = False
+        for a in flags:
+            if a:
+                run += 1
+                best = max(best, run)
+                if not prev:
+                    n_seg += 1
+            else:
+                run = 0
+            prev = a
+        return i, len(flags), sum(flags), n_seg, best
 
-    return df.mapInPandas(
-        seg,
-        schema=(
-            f"{id_col} long, n_frames int, n_active int, "
-            "n_segments int, max_run int"
-        ),
+    return _map_rows(
+        df,
+        [id_col, "wav_bytes"],
+        row,
+        f"{id_col} long, n_frames int, n_active int, n_segments int, max_run int",
     )
 
 
@@ -1812,13 +1269,14 @@ def png_patch_stats(
     size, like ViT padding masks) and each tile reports its exact integer
     sum/count — the patch-embedding preprocessing shape, value-checkable
     because the synthetic pattern is closed-form. Payload bytes never
-    leave the Arrow stage; only the bounded per-patch rows shuffle."""
+    leave the Arrow stage; only the bounded per-patch rows shuffle. Many
+    rows per image, so it keeps its own batch loop."""
 
     def pt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for _, r in pdf.iterrows():
-                w, h, _c, px = decode_image_bytes(bytes(r["media_bytes"]))
+            for d, payload in zip(pdf[id_col], pdf["media_bytes"]):
+                w, h, _c, px = decode_image_bytes(payload)
                 sums: dict = {}
                 for y in range(h):
                     base = y * w
@@ -1827,10 +1285,12 @@ def png_patch_stats(
                         s, n = sums.get(key, (0, 0))
                         sums[key] = (s + px[base + x], n + 1)
                 for (pi, pj), (s, n) in sums.items():
-                    rows.append((int(r[id_col]), pi, pj, n, s, s // n))
+                    rows.append((d, pi, pj, n, s, s // n))
             yield pd.DataFrame(
                 rows,
-                columns=[id_col, "patch_i", "patch_j", "n_px", "patch_sum", "patch_mean"],
+                columns=[
+                    id_col, "patch_i", "patch_j", "n_px", "patch_sum", "patch_mean",
+                ],
             )
 
     return df.mapInPandas(

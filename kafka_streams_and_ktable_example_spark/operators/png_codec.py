@@ -5,8 +5,8 @@ correct PNG subset is implementable directly from the public spec
 (RFC 2083 / W3C PNG): chunk framing with CRC-32, IHDR geometry, IDAT
 zlib-compressed scanlines, and the five per-scanline filters. That makes
 the multimodal *decode* step REAL for PNG payloads — actual inflate +
-unfilter + pixel math — while other formats (JPEG/audio/video) remain
-stubbed until PIL/ffmpeg exist on the cluster image.
+unfilter + pixel math; the sibling stdlib codecs in this package do the
+same for JPEG, GIF, TIFF, audio and video.
 
 Scope (asserted, not assumed): 8-bit samples, grayscale (color type 0),
 RGB (color type 2) and PALETTED (color type 3, PLTE required, tRNS out of

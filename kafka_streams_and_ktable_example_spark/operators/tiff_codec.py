@@ -13,8 +13,8 @@ path with zero fixture bytes checked in.
 
 Scope (asserted, not assumed): 8-bit samples, chunky planar config,
 compression 1 (none) or 32773 (PackBits); anything else — tiles, LZW,
-palette TIFFs, 16-bit — raises ValueError and PIL takes over when
-importable (operators/multimodal.py::decode_image_bytes).
+palette TIFFs, 16-bit — raises ValueError; no other decoder takes over
+(operators/multimodal.py::decode_image_bytes uses these codecs only).
 
 Determinism note for oracles: TIFF is LOSSLESS, so hash-checked queries
 recompute pixels directly from the synthesis pattern — no quantization

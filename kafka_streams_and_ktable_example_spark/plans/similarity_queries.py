@@ -250,7 +250,7 @@ FROM d
 )
 def multimodal_decode_features(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    return decode_media(attach_fake_media(docs), fake=True)
+    return decode_media(attach_fake_media(docs))
 
 
 @register(
@@ -374,7 +374,8 @@ FROM m GROUP BY media_type
 """,
     doc="Resize plumbing (224x224 target): mapInPandas rescales each "
     "payload's byte length by the pixel ratio (deterministic stub — a "
-    "real PIL/ffmpeg resize swaps one function body; the Arrow batch "
+    "real resize — resize_media(fake=False) for PNG — swaps one function "
+    "body; the Arrow batch "
     "shape, schema and metadata update are the real contract). Verified "
     "through pure length arithmetic per media type, since payload bytes "
     "are opaque to the oracle.",
@@ -478,7 +479,7 @@ FROM px GROUP BY doc_id, w, h
     "genuine PNG (graded pattern, per-image scanline filter) in one Arrow "
     "stage, and a second mapInPandas stage decodes it with the stdlib "
     "codec — chunk CRC walk, zlib inflate, scanline unfilter "
-    "(operators/png_codec.py; PIL is picked up instead when importable). "
+    "(operators/png_codec.py, the only PNG decoder). "
     "The oracle recomputes geometry and the exact pixel checksum in "
     "closed form, so the decode is value-checked end to end: a single "
     "wrong byte after unfiltering fails the gate. Plumbing is the scale "
@@ -637,9 +638,8 @@ FROM px GROUP BY doc_id, w, h
     "web crawls are full of): each row synthesizes a genuine PLTE-chunk "
     "PNG (16-entry palette, per-image scanline filter), and the stdlib "
     "codec decodes it — CRC walk, inflate, 1-byte-per-pixel unfilter, "
-    "then palette expansion to interleaved RGB (operators/png_codec.py; "
-    "a PIL-equipped cluster takes the mode-P convert('RGB') path to the "
-    "same contract). Per-channel checksums are recomputed in closed form "
+    "then palette expansion to interleaved RGB (operators/png_codec.py). "
+    "Per-channel checksums are recomputed in closed form "
     "by the oracle, so a palette-indexing or expansion bug fails the "
     "hash. Closes the paletted-PNG NotImplementedError boundary from "
     "rounds 4-5. Payload bytes stay inside pipelined Arrow stages — no "
@@ -2663,8 +2663,8 @@ FROM m GROUP BY doc_id
     "frame mean in closed form from the synthesis formula, so container "
     "framing, frame slicing, and the cut rule are all value-checked. "
     "Completes the codec family: PNG image, WAV container, ADPCM lossy "
-    "audio, FRV1 video — decode_media(fake=False) now dispatches all "
-    "four for real. Arrow-batched mapInPandas; only 3 scalars per "
+    "audio, FRV1 video — each with its own real-decode stats query. "
+    "Arrow-batched mapInPandas; only 3 scalars per "
     "payload leave Python — at 100 TB the decode is payload-bound and "
     "shuffle-free.",
     tags=("multimodal", "pandas-udf", "codec"),

@@ -1447,7 +1447,7 @@ def test_real_resize_rgb_png_end_to_end():
         (2 * x + 3 * y + 5 * c) % 256 for y in range(h) for x in range(w) for c in range(3)
     )
     png = png_codec.encode_rgb8(px, w, h, filter_type=1)
-    # mirror _real_resize's body (it is a closure inside resize_media)
+    # mirror resize_media's fake=False row function (a closure inside it)
     dw, dh, dc, dpx = decode_image_bytes(png)
     assert (dw, dh, dc, dpx) == (w, h, 3, px)
     out = png_codec.nearest_resize(dpx, dw, dh, 4, 4, channels=dc)
@@ -1873,91 +1873,51 @@ def test_force_runtime_failure_raises_after_one_job(spark):
     assert len(jobs) == 1, jobs
 
 
-def test_decode_media_real_dispatches_all_codecs(spark):
-    """decode_media(fake=False) genuinely decodes PNG, WAV, ADPCM and FRV1
-    payloads by container magic, and raises for unknown formats."""
-    import pandas as pd
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+def test_decode_image_bytes_ignores_importable_pil(monkeypatch):
+    """The stdlib codecs are the only image decoders: with a PIL on the
+    path whose Image.open raises, a PNG still decodes to exactly
+    png_codec.decode's result."""
+    import sys
+    import types
 
-    from kafka_streams_and_ktable_example_spark.operators import (
-        adpcm_codec,
-        framevid_codec,
-        png_codec,
-        wav_codec,
-    )
+    from kafka_streams_and_ktable_example_spark.operators import png_codec
     from kafka_streams_and_ktable_example_spark.operators.multimodal import (
-        decode_media,
+        decode_image_bytes,
     )
 
-    px = bytes(range(48))
-    payloads = [
-        (0, png_codec.encode_gray8(px, 8, 6)),
-        (1, wav_codec.encode_wav([100, -100, 3000, -3000])),
-        (2, adpcm_codec.encode([0, 500, -500, 10000])),
-        (3, framevid_codec.encode([px, px], 8, 6)),
-    ]
-    pdf = pd.DataFrame(payloads, columns=["doc_id", "media_bytes"])
-    df = spark.createDataFrame(pdf)
-    rows = {r["doc_id"]: r for r in decode_media(df, fake=False).collect()}
-    assert rows[0]["n_bytes"] == 48.0  # PNG: w*h
-    assert rows[1]["n_bytes"] == 4.0  # WAV: n_samples
-    assert rows[2]["n_bytes"] == 4.0  # ADPCM: n_samples
-    assert rows[3]["n_bytes"] == 2.0  # FRV1: n_frames
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("PIL must not decode")
 
-    bad = spark.createDataFrame(
-        pd.DataFrame([(9, b"JUNKJUNKJUNKJUNK")], columns=["doc_id", "media_bytes"])
-    )
-    with _pytest.raises(Exception, match="no codec"):
-        decode_media(bad, fake=False).collect()
+    image = types.ModuleType("PIL.Image")
+    image.open = refuse
+    pil = types.ModuleType("PIL")
+    pil.Image = image
+    monkeypatch.setitem(sys.modules, "PIL", pil)
+    monkeypatch.setitem(sys.modules, "PIL.Image", image)
 
-
-def test_decode_media_real_zero_length_payloads(spark):
-    """Zero-length media is VALID per the containers (0-sample WAV/ADPCM,
-    0-frame FRV1): decode_media(fake=False) yields zeroed features rather
-    than a ZeroDivisionError (ADVICE r4)."""
-    import pandas as pd
-
-    from kafka_streams_and_ktable_example_spark.operators import (
-        adpcm_codec,
-        framevid_codec,
-        wav_codec,
-    )
-    from kafka_streams_and_ktable_example_spark.operators.multimodal import (
-        decode_media,
-    )
-
-    payloads = [
-        (0, wav_codec.encode_wav([])),
-        (1, adpcm_codec.encode([])),
-        (2, framevid_codec.encode([], 8, 6)),
-    ]
-    pdf = pd.DataFrame(payloads, columns=["doc_id", "media_bytes"])
-    rows = {
-        r["doc_id"]: r
-        for r in decode_media(
-            spark.createDataFrame(pdf), fake=False
-        ).collect()
-    }
-    assert rows[0]["n_bytes"] == 0.0 and rows[0]["sig_mean"] == 0.0
-    assert rows[1]["n_bytes"] == 0.0 and rows[1]["sig_head"] == 0.0
-    assert rows[2]["n_bytes"] == 0.0 and rows[2]["sig_mean"] == 0.0
+    png = png_codec.encode_gray8(bytes(range(48)), 8, 6, filter_type=1)
+    assert decode_image_bytes(png) == png_codec.decode(png)
 
 
 def test_roundtrip_stats_zero_sample_payloads(spark):
-    """The stats reducers share decode_media's zero-length contract
-    (ADVICE r5): a valid 0-frame stereo WAV / 0-sample ULW1 / 0-sample
-    ADPCM payload yields zeroed stats, not a ValueError from max()."""
+    """Zero-length media is valid per the containers, and every stats
+    reducer yields zeroed stats for it, not a ValueError from max() or a
+    ZeroDivisionError: a 0-frame stereo WAV, 0-sample mono WAV, ULW1,
+    ALW1 and ADPCM payloads, and a 0-frame FRV1 video."""
     import pandas as pd
 
     from kafka_streams_and_ktable_example_spark.operators import (
         adpcm_codec,
+        framevid_codec,
         g711_codec,
         wav_codec,
     )
     from kafka_streams_and_ktable_example_spark.operators.multimodal import (
         adpcm_roundtrip_stats,
+        alaw_roundtrip_stats,
+        framevid_scene_stats,
         mulaw_roundtrip_stats,
+        wav_decode_stats,
         wav_stereo_stats,
     )
 
@@ -1987,3 +1947,29 @@ def test_roundtrip_stats_zero_sample_payloads(spark):
     )
     row = adpcm_roundtrip_stats(adpcm).collect()[0]
     assert (row["peak_orig"], row["max_abs_err"], row["sum_abs_err"]) == (0, 0, 0)
+
+    mono = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, wav_codec.encode_wav([]))], columns=["doc_id", "wav_bytes"]
+        )
+    )
+    row = wav_decode_stats(mono).collect()[0]
+    assert (row["n_samples"], row["peak"], row["energy"]) == (0, 0, 0)
+
+    alaw = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, g711_codec.alaw_encode([]))], columns=["doc_id", "alaw_bytes"]
+        )
+    )
+    row = alaw_roundtrip_stats(alaw).collect()[0]
+    assert (
+        row["peak_orig"], row["energy_recon"], row["max_abs_err"], row["sum_abs_err"]
+    ) == (0, 0, 0, 0)
+
+    video = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, framevid_codec.encode([], 8, 6))], columns=["doc_id", "video_bytes"]
+        )
+    )
+    row = framevid_scene_stats(video).collect()[0]
+    assert (row["n_frames"], row["pixel_sum"], row["n_scene_cuts"]) == (0, 0, 0)
