@@ -84,6 +84,22 @@ def _media_meta(
     ).alias("media_meta")
 
 
+def _synth_image(
+    df: DataFrame, id_col: str, row: Callable[[int], tuple]
+) -> DataFrame:
+    """A single-frame synthesized image per row: ``row(id)`` returns
+    (id, payload, width, height), and the result carries ``media_bytes``
+    plus the ``media_meta`` struct."""
+    flat = _map_rows(
+        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
+    )
+    return flat.select(
+        id_col,
+        "media_bytes",
+        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
+    )
+
+
 def _pcm16(i: int, n: int) -> list[int]:
     """The first ``n`` (at most 16) samples of id ``i``'s synthetic PCM16
     waveform: sample j is byte pair j of sha256(str(i)), big-endian,
@@ -397,14 +413,7 @@ def attach_synth_png_rgb(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         return d, png_codec.encode_rgb8(px, w, h, filter_type=d % 3), w, h
 
-    flat = _map_rows(
-        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
-    )
-    return flat.select(
-        id_col,
-        "media_bytes",
-        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
-    )
+    return _synth_image(df, id_col, row)
 
 
 def attach_synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -421,14 +430,7 @@ def attach_synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         px, w, h = _gray_blocks(d)
         return d, encode_gray8_jpeg(px, w, h, q=16), w, h
 
-    flat = _map_rows(
-        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
-    )
-    return flat.select(
-        id_col,
-        "media_bytes",
-        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
-    )
+    return _synth_image(df, id_col, row)
 
 
 def attach_synth_color_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -446,14 +448,7 @@ def attach_synth_color_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         rgb, w, h = _color_tiles(d)
         return d, encode_rgb_jpeg(rgb, w, h, q=16), w, h
 
-    flat = _map_rows(
-        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
-    )
-    return flat.select(
-        id_col,
-        "media_bytes",
-        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
-    )
+    return _synth_image(df, id_col, row)
 
 
 def attach_synth_jpeg_dri(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -470,14 +465,7 @@ def attach_synth_jpeg_dri(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         px, w, h = _gray_blocks(d)
         return d, encode_gray8_jpeg(px, w, h, q=16, restart_interval=1 + d % 3), w, h
 
-    flat = _map_rows(
-        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
-    )
-    return flat.select(
-        id_col,
-        "media_bytes",
-        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
-    )
+    return _synth_image(df, id_col, row)
 
 
 def attach_synth_tiff(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -743,14 +731,7 @@ def attach_synth_progressive_jpeg(
         px, w, h = _gray_blocks(d)
         return d, encode_gray8_progressive(px, w, h, q=16), w, h
 
-    flat = _map_rows(
-        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
-    )
-    return flat.select(
-        id_col,
-        "media_bytes",
-        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
-    )
+    return _synth_image(df, id_col, row)
 
 
 def attach_synth_progressive_color_jpeg(
@@ -769,14 +750,7 @@ def attach_synth_progressive_color_jpeg(
         rgb, w, h = _color_tiles(d)
         return d, encode_rgb_progressive(rgb, w, h, q=16), w, h
 
-    flat = _map_rows(
-        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
-    )
-    return flat.select(
-        id_col,
-        "media_bytes",
-        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
-    )
+    return _synth_image(df, id_col, row)
 
 
 def jpeg_color_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -914,14 +888,7 @@ def attach_synth_png_pal(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         idx = bytes((x + 2 * y + d) % 16 for y in range(h) for x in range(w))
         return d, png_codec.encode_pal8(idx, w, h, palette, filter_type=d % 3), w, h
 
-    flat = _map_rows(
-        df, [id_col], row, f"{id_col} long, media_bytes binary, w int, h int"
-    )
-    return flat.select(
-        id_col,
-        "media_bytes",
-        _media_meta("image", F.col("w"), F.col("h"), F.lit(1)),
-    )
+    return _synth_image(df, id_col, row)
 
 
 def png_channel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
