@@ -373,9 +373,9 @@ SELECT media_type,
 FROM m GROUP BY media_type
 """,
     doc="Resize plumbing (224x224 target): mapInPandas rescales each "
-    "payload's byte length by the pixel ratio (deterministic stub — a "
-    "real resize — resize_media(fake=False) for PNG — swaps one function "
-    "body; the Arrow batch "
+    "payload's byte length by the pixel ratio (deterministic stub; "
+    "resize_media(fake=False) swaps in the real PNG resize as another row "
+    "function, and the Arrow batch "
     "shape, schema and metadata update are the real contract). Verified "
     "through pure length arithmetic per media type, since payload bytes "
     "are opaque to the oracle.",
